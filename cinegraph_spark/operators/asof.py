@@ -104,8 +104,8 @@ def asof_nearest(
     Same scalable shape as :func:`asof_join` — tag, union, ONE shuffle on
     the key, then two per-key RUNNING windows: ``last`` ignoring nulls
     looking back (latest right at-or-before; ties on ts take the largest
-    right id), and the forward pick (earliest right at-or-after; ties take
-    the smallest id) as ``last`` ignoring nulls over the REVERSED total
+    right id), and the forward pick (earliest right strictly after; ties
+    take the smallest id) as ``last`` ignoring nulls over the REVERSED total
     order — the same running (incremental, O(rows)) frame, costing one
     extra in-partition sort. The naive spelling, ``first`` over
     ``rowsBetween(currentRow, unboundedFollowing)``, makes Spark's

@@ -346,11 +346,6 @@ def simhash64(df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
     return votes.select(F.col(id_col), sim.alias("simhash"))
 
 
-def hamming64(a, b):
-    """Hamming distance between two int64 simhashes (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def repeated_ngram_span_mask(
     df: DataFrame,
     text_col: str,

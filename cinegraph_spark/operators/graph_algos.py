@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cinegraph_spark.session import bounded_shuffle
+from cinegraph_spark.session import bounded_shuffle, local_df
 
 
 def symmetrize(
@@ -377,8 +377,8 @@ def bfs_levels(
                 StructField("level", IntegerType()),
             ]
         )
-        visited = e.sparkSession.createDataFrame(
-            [(start_id, 0)], seed_schema
+        visited = local_df(
+            e.sparkSession, [(start_id, 0)], seed_schema
         ).localCheckpoint(eager=True)
         frontier = visited
         for depth in range(1, max_depth + 1):

@@ -31,6 +31,7 @@ from cinegraph_spark.operators.clustering import (
 )
 from cinegraph_spark.operators.features import standard_scale
 from cinegraph_spark.schemas import GRAPH
+from cinegraph_spark.session import local_df
 
 
 def _iter_nodes(tree: dict):
@@ -69,8 +70,6 @@ def node_representatives(
         for cid in node["indices"]:
             rows.append((tag, int(cid), cent))
     spark = assignments.sparkSession
-    from cinegraph_spark.session import local_df
-
     mapping = local_df(
         spark, rows, "_tag int, cluster int, _cent array<double>"
     )
@@ -132,12 +131,8 @@ def build_graph_tables(
     upstream filter leaving nothing.
     """
     if features.isEmpty():
-        graph_df = spark.createDataFrame(
-            [(0, "root", "root", "root", 0)], schema=GRAPH
-        )
-        membership_df = spark.createDataFrame(
-            [], f"{key_col} long, graph_id long"
-        )
+        graph_df = local_df(spark, [(0, "root", "root", "root", 0)], GRAPH)
+        membership_df = local_df(spark, [], f"{key_col} long, graph_id long")
         return graph_df, membership_df
     scaled = standard_scale(features, key_col, feature_cols).persist()
     assignments, centers = kmeans_assign(scaled, key_col, feature_cols, k=k, seed=seed)
@@ -169,8 +164,6 @@ def build_graph_tables(
     if namer is not None:
         node_representatives(assignments, scaled, tree, key_col, feature_cols)
     flat: FlatGraph = flatten_tree(tree, namer=namer)
-
-    from cinegraph_spark.session import local_df
 
     graph_df = local_df(
         spark, [(int(i), p, n, t, int(c)) for i, p, n, t, c in flat.nodes], GRAPH
@@ -208,31 +201,6 @@ def children_of(graph: DataFrame, node_path: str) -> DataFrame:
 def root_of(graph: DataFrame) -> DataFrame:
     """G5 — ``WHERE path = 'root'`` (``graph_repo.py:30-33``)."""
     return graph.filter(F.col("path") == "root")
-
-
-def node_members(membership: DataFrame, items: DataFrame, key_col: str, node_id: int) -> DataFrame:
-    """G2 — items attached to one node (``graph_repo.py:125-129``)."""
-    return membership.filter(F.col("graph_id") == node_id).join(items, key_col)
-
-
-def node_with_children(graph: DataFrame, membership: DataFrame, node_id: int) -> DataFrame:
-    """G7 — the NodeWithChildren projection (``api/api.py:35-59``): node row
-    + nested children array + member ids, one row."""
-    node = graph.filter(F.col("id") == node_id)
-    node_path = node.select("path")
-    kids = graph.join(
-        F.broadcast(node_path.select(F.col("path").alias("_pp"))),
-        F.col("path").startswith(F.concat("_pp", F.lit(".")))
-        & ~F.expr("substring(path, length(_pp) + 2, 1000000)").contains("."),
-    ).select(
-        F.struct("id", "name", "type", "path", "children_count").alias("child")
-    )
-    kids_arr = kids.agg(F.sort_array(F.collect_list("child")).alias("children_nodes"))
-    members = (
-        membership.filter(F.col("graph_id") == node_id)
-        .agg(F.sort_array(F.collect_list(F.col(membership.columns[0]))).alias("member_ids"))
-    )
-    return node.crossJoin(kids_arr).crossJoin(members)
 
 
 def subtree(graph: DataFrame, node_path: str) -> DataFrame:

@@ -57,6 +57,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cinegraph_spark.session import local_df
+
+#: Every k-NN entry point's output shape, empty results included.
+_RESULT_SCHEMA = "qid long, nid long, cos_sim double, rnk long"
+
 # full-table rebuilds (save/reshard) swap atomically, never overwrite in
 # place — see serving_io.atomic_swap_dir for the crash-window rationale;
 # incremental updates replace touched partition DIRECTORIES instead
@@ -333,9 +338,7 @@ def hnsw_cosine_knn(
         e.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
     )
     if not rows:  # empty corpus (pruned-partition edge): empty result frame
-        return e.sparkSession.createDataFrame(
-            [], "qid long, nid long, cos_sim double, rnk long"
-        )
+        return local_df(e.sparkSession, [], _RESULT_SCHEMA)
     ids = [int(r["vec_id"]) for r in rows]
     X = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
     index = hnsw_build(ids, X, M=M, ef_construction=ef_construction)
@@ -368,7 +371,7 @@ def hnsw_cosine_knn(
 
     return queries.select(
         F.col("vec_id").cast("long").alias("qid"), F.col("v").alias("qv")
-    ).mapInPandas(search_batches, "qid long, nid long, cos_sim double, rnk long")
+    ).mapInPandas(search_batches, _RESULT_SCHEMA)
 
 
 #: Adaptive-partitioning target: each hash partition (= one sub-index
@@ -420,9 +423,7 @@ def hnsw_partitioned_knn(
         queries.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
     )
     if not qrows:  # before the adaptive count: no query batch, no scan job
-        return e.sparkSession.createDataFrame(
-            [], "qid long, nid long, cos_sim double, rnk long"
-        )
+        return local_df(e.sparkSession, [], _RESULT_SCHEMA)
     if n_partitions is None:
         n_rows = e.count()
         n_partitions = max(1, -(-n_rows // max(1, target_rows_per_subindex)))
@@ -639,7 +640,7 @@ def hnsw_index_save(
             # so it stays readable (the update/reshard paths detect the
             # empty head and degrade before any directory semantics
             # matter)
-            spark.createDataFrame([], _INDEX_SCHEMA).write.mode(
+            local_df(spark, [], _INDEX_SCHEMA).write.mode(
                 "overwrite"
             ).parquet(tmp)
 
@@ -1301,9 +1302,7 @@ def hnsw_index_knn(
         queries.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
     )
     if not qrows:
-        return spark.createDataFrame(
-            [], "qid long, nid long, cos_sim double, rnk long"
-        )
+        return local_df(spark, [], _RESULT_SCHEMA)
     from cinegraph_spark.session import ensure_shipped
 
     ensure_shipped(spark)
@@ -1395,9 +1394,6 @@ def hnsw_index_filtered_knn(
     path = path if resolved is None else resolved
     ensure_live(spark, path)
     ensure_shipped(spark)
-    empty = spark.createDataFrame(
-        [], "qid long, nid long, cos_sim double, rnk long"
-    )
     idx = spark.read.parquet(path)
     if "part_id" not in idx.columns or "key_ddl" not in idx.columns:
         raise ValueError(
@@ -1406,8 +1402,8 @@ def hnsw_index_filtered_knn(
             "once with hnsw_index_save"
         )
     head = idx.select("n_partitions", "key_ddl").first()
-    if head is None:
-        return empty  # vacuous index: nothing is admissible
+    if head is None:  # vacuous index: nothing is admissible
+        return local_df(spark, [], _RESULT_SCHEMA)
     adm_ddl = admissible.schema["vec_id"].dataType.simpleString()
     if adm_ddl != head["key_ddl"]:
         raise ValueError(
@@ -1420,7 +1416,7 @@ def hnsw_index_filtered_knn(
         queries.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
     )
     if not qrows:
-        return empty
+        return local_df(spark, [], _RESULT_SCHEMA)
     bq = spark.sparkContext.broadcast(
         [(int(r["vec_id"]), [float(x) for x in r["v"]]) for r in qrows]
     )

@@ -427,8 +427,6 @@ def merge_agg_state(
     n_groups = int(counts["n_all"]) - int(counts["n_zero"])
     from cinegraph_spark.session import local_df
 
-    # single-slice local frame (r18): the 32-slice default cost one
-    # PythonRunner per slice on every ledger write — per MICRO-BATCH here
     ledger = local_df(
         spark,
         [(int(b),) for b in sorted((applied or set()) | {int(batch_id)})],

@@ -156,11 +156,6 @@ def lsh_bucket_col(v, nbits: int):
     return bucket
 
 
-def lsh_bucket(e: DataFrame, nbits: int = 4, v: str = "v") -> DataFrame:
-    """Sign-LSH signature per vector → (vec_id, bucket) — map-only."""
-    return e.select("vec_id", lsh_bucket_col(F.col(v), nbits).alias("bucket"))
-
-
 def lsh_cosine_topk(
     e: DataFrame,
     query_id: int,
@@ -903,9 +898,6 @@ def pq_codes_save(
     codes_schema = f"vec_id {key_ddl}, code array<int>, part_id int"
     from cinegraph_spark.session import local_df
 
-    # single-slice local frame: the pre-r18 32-slice default made the
-    # coalesce(1) write below pay one sequential PythonRunner per slice
-    # (~6.5 s for 8 rows — guide §1 profiling, OPTIMIZATION_r18.md)
     books = local_df(
         spark,
         [

@@ -985,7 +985,7 @@ def stream_mv_incremental_refresh(spark, sf_dir):
 
     from cinegraph_spark.operators.incremental import merge_agg_state
     from cinegraph_spark.queries.util import bounded_shuffle, dstr, scoped_confs
-    from cinegraph_spark.session import scratch_dir
+    from cinegraph_spark.session import local_df, scratch_dir
 
     scratch = scratch_dir("cg_stream_mv_")
     stage = scratch + "/in"
@@ -1031,8 +1031,8 @@ def stream_mv_incremental_refresh(spark, sf_dir):
     except AnalysisException:
         # a source with zero staged files fires no batch at all — the
         # view legitimately has no state yet
-        return spark.createDataFrame(
-            [], "event_type string, day string, n_events long, "
+        return local_df(
+            spark, [], "event_type string, day string, n_events long, "
             "sum_value_units long"
         )
     return agg.select(
@@ -1099,7 +1099,7 @@ def stream_session_dynamic_gap(spark, sf_dir):
     import os
 
     from cinegraph_spark.queries.util import bounded_shuffle, ntz, r4, scoped_confs, tstr
-    from cinegraph_spark.session import scratch_dir
+    from cinegraph_spark.session import local_df, scratch_dir
     from cinegraph_spark.streaming.windows import (
         read_events_stream,
         session_windows_dynamic_gap,
@@ -1129,9 +1129,9 @@ def stream_session_dynamic_gap(spark, sf_dir):
         d for d in os.listdir(out_dir) if d.startswith("batch-")
     )
     if not batches:  # zero staged files -> no batch fired
-        return spark.createDataFrame(
-            [], "user_id long, session_start string, session_end string, "
-            "n_events long, total_value double"
+        return local_df(
+            spark, [], "user_id long, session_start string, "
+            "session_end string, n_events long, total_value double"
         )
     final = spark.read.parquet(f"{out_dir}/{batches[-1]}")
     return final.select(

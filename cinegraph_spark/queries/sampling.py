@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from cinegraph_spark.queries import register
 from cinegraph_spark.queries.neardup_common import SHINGLE_CTES
 from cinegraph_spark.queries.util import T, SCRAMBLE_SQL as _SCRAMBLE_SQL, scramble as _scramble
+from cinegraph_spark.session import local_df
 
 
 @register(
@@ -108,8 +109,6 @@ def sample_lang_quota(spark, sf_dir):
     join + one window shuffle on lang; quota tables are O(100) rows at any
     corpus size."""
     d = T(spark, sf_dir, "documents")
-    from cinegraph_spark.session import local_df
-
     quota = local_df(
         d.sparkSession, [("en", 20), ("es", 8), ("zh", 8)],
         "lang string, q int",
@@ -482,6 +481,7 @@ def _kcenter_oracle_sql(k: int) -> str:
 
 
 _KCENTER_K = 5
+_KCENTER_SCHEMA = "pick_order long, vec_id long, radius2 double"
 
 
 @register(
@@ -535,11 +535,8 @@ def sample_kcenter_coreset(spark, sf_dir):
         return dot_vv + F.lit(dot_cc) - 2.0 * dot_vc
 
     seed = e.filter(F.col("vec_id") == 0).select("v").first()
-    empty = spark.createDataFrame(
-        [], "pick_order long, vec_id long, radius2 double"
-    )
     if seed is None:  # no seed vector: zero-row result, like the oracle
-        return empty
+        return local_df(spark, [], _KCENTER_SCHEMA)
     chosen = [(0, [float(x) for x in seed["v"]], 0.0)]
     remaining = e.filter(F.col("vec_id") != 0)
     for i in range(1, _KCENTER_K):
@@ -562,9 +559,10 @@ def sample_kcenter_coreset(spark, sf_dir):
     # round in-engine (F.round, not Python's banker's round) so the
     # half-way rule matches the oracle's SQL round
     return (
-        spark.createDataFrame(
+        local_df(
+            spark,
             [(i, vid, d) for i, (vid, _, d) in enumerate(chosen)],
-            "pick_order long, vec_id long, radius2 double",
+            _KCENTER_SCHEMA,
         )
         .select(
             "pick_order", "vec_id", F.round("radius2", 6).alias("radius2")

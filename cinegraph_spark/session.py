@@ -81,22 +81,51 @@ ENGINE_CONFS: dict[str, str] = {
 
 
 def local_df(spark: SparkSession, rows, schema) -> "DataFrame":
-    """``createDataFrame`` for METADATA-SCALE local rows (ledgers, codebook
-    tables, quotas, manifests) as a SINGLE python partition.
+    """A DataFrame over METADATA-SCALE local rows (ledgers, codebook
+    tables, quotas, manifests, query and delta rows, empty result frames)
+    built entirely on the driver.
 
-    Plain ``spark.createDataFrame(rows, schema)`` parallelizes into
-    ``defaultParallelism`` slices (32 on the bench box) — every action then
-    pays one PythonRunner setup per slice, and ``coalesce(1)`` over such a
-    frame is pathological: the single task runs the 32 parent partitions'
-    Python runners SEQUENTIALLY (~200 ms each ≈ 6–7 s measured for an
-    8-row write, r18 guide-§1 profiling). One slice makes the action one
-    runner (~0.2 s) and a parquet write one file — the right shape for
-    driver-side metadata at any scale. Data-sized frames must NOT use
-    this (single-task materialization); everything here is small-side by
-    contract."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=1), schema
+    ``schema`` is a DDL string or a ``StructType``. Every row passes the
+    verifier that ``createDataFrame`` applies under ``verifySchema=True``,
+    so a bad row is refused by field name, and then the same
+    ``toInternal`` conversion the row path applies (naive ``timestamp``
+    values read as host-local time). The converted columns become one
+    ``pyarrow.Table`` that Spark turns into a ``LocalTableScan``: an
+    action over the frame launches no Python worker, ``collect()`` runs
+    no job at all, and the optimizer sees the frame's real size. The
+    row path (``createDataFrame`` over a list or an RDD) instead runs a
+    Python task on every action over the frame, one per
+    ``defaultParallelism`` slice for a plain list.
+
+    An empty ``rows`` keeps the schema but yields zero partitions; a
+    parquet write of it still leaves a readable, schema-carrying file.
+    Data-sized frames must NOT use this (every row crosses the driver);
+    everything here is small-side by contract."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        StructType,
+        _make_type_verifier,
+        _parse_datatype_string,
     )
+
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    if not isinstance(struct, StructType):
+        raise TypeError(
+            f"local_df needs a struct schema, got {struct.simpleString()}"
+        )
+    verify = _make_type_verifier(struct)
+    columns: list[list] = [[] for _ in struct.fields]
+    for row in rows:
+        verify(row)
+        for col, value in zip(columns, struct.toInternal(row)):
+            col.append(value)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def ensure_shipped(spark: SparkSession) -> None:

@@ -53,14 +53,3 @@ def read_subtitle_corpus(spark: SparkSession, path: str) -> DataFrame:
         ),
         F.col("value").alias("raw_text"),
     )
-
-
-def parse_title_year(df: DataFrame, col: str = "title_raw") -> DataFrame:
-    """P3 — extract ``(title, year)`` from ``"Title (year)"`` strings;
-    year defaults to 1800 when the suffix is absent
-    (``scraping/scraper.py:75-88``)."""
-    year_str = F.regexp_extract(F.col(col), r"\((\d{4})\)\s*$", 1)
-    title = F.trim(F.regexp_replace(F.col(col), r"\s*\(\d{4}\)\s*$", ""))
-    return df.withColumn("title", title).withColumn(
-        "year", F.coalesce(F.nullif(year_str, F.lit("")).cast("int"), F.lit(1800))
-    )

@@ -18,6 +18,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Spark's spellings of the three supported join forms (case- and
+#: underscore-insensitive), normalized before any form-dependent choice.
+_HOW_ALIASES = {
+    "inner": "inner",
+    "left": "left_outer",
+    "leftouter": "left_outer",
+    "full": "full_outer",
+    "outer": "full_outer",
+    "fullouter": "full_outer",
+}
+
 
 def purchases_with_recent_clicks(
     events: DataFrame,
@@ -71,9 +82,11 @@ def purchases_with_recent_clicks(
     semantics knob — while per-probe state scans shrink from all of a
     user's history to its ±one bucket: sf1 measured 842 → 4.3 s inner,
     718 → 5.3 s left-outer. The bucket derives deterministically from the
-    row's event time (replay/retry-safe, guide §2.5) by integer division
-    of epoch-µs — monotone with boundaries ≥ W apart, so a W-long window
-    crosses at most one boundary whatever the sign of the epoch.
+    row's event time (replay/retry-safe, guide §2.5) by Spark's ``div``
+    of epoch-µs, which truncates toward zero: bucket 0 spans (−W, W), 2W
+    wide, and every other bucket is W wide. The buckets stay monotone in
+    time with boundaries at least W apart, so a W-long window crosses at
+    most one boundary whatever the sign of the epoch.
     ``full_outer`` never buckets: duplicating EITHER side would duplicate
     that side's eviction NULLs.
 
@@ -86,7 +99,8 @@ def purchases_with_recent_clicks(
     """
     import os
 
-    full = how in ("full", "outer", "full_outer", "fullouter")
+    how = _HOW_ALIASES.get(how.lower().replace("_", ""), how)
+    full = how == "full_outer"
     if bucketed is None:
         bucketed = os.environ.get(
             "CINEGRAPH_ATTRIBUTION_BUCKET", ""

@@ -316,7 +316,7 @@ def run_availablenow_to_parquet(
     emissions."""
     import os
 
-    from cinegraph_spark.session import bounded_shuffle, scoped_confs
+    from cinegraph_spark.session import bounded_shuffle, local_df, scoped_confs
 
     if shuffle_partitions is None:
         shuffle_partitions = int(
@@ -325,9 +325,7 @@ def run_availablenow_to_parquet(
     if transform is None:
         schema = stream_df.schema
     else:
-        schema = transform(
-            spark.createDataFrame([], stream_df.schema)
-        ).schema
+        schema = transform(local_df(spark, [], stream_df.schema)).schema
     os.makedirs(path, exist_ok=True)
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:

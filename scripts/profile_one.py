@@ -34,9 +34,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from cinegraph_spark.queries import load_all
-    from cinegraph_spark.session import get_spark
+    from cinegraph_spark.session import ensure_shipped, get_spark
 
     spark = get_spark(app_name="cinegraph-profile")
+    # UDF workers import cinegraph_spark by name; from any cwd other than
+    # the repository root they only find it in the shipped zip
+    ensure_shipped(spark)
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all()
     spark.read.parquet(f"{sf_dir}/region.parquet").count()

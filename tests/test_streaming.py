@@ -972,10 +972,18 @@ def test_bucketed_attribution_matches_bare_key(spark, sf_dir, tmp_path):
         "t_ss_join_bucketed",
         output_mode="append",
     )
-    bare = purchases_with_recent_clicks(_batch_events(spark, sf_dir))
+    batch = _batch_events(spark, sf_dir)
+    bare = purchases_with_recent_clicks(batch)
     g = Counter((r.purchase_id, r.click_id) for r in got.collect())
     b = Counter((r.purchase_id, r.click_id) for r in bare.collect())
     assert g == b and len(g) > 0
+
+    # Spark's aliases for the bucketed forms engage the bucket key too
+    for how in ("inner", "INNER", "left", "leftouter", "left_outer"):
+        plan = purchases_with_recent_clicks(
+            batch, how=how, bucketed=True
+        )._jdf.queryExecution().analyzed().toString()
+        assert "_pb" in plan, how
 
     real, sent = _lojoin_frames(spark)
     out = run_availablenow_to_parquet(
@@ -983,7 +991,7 @@ def test_bucketed_attribution_matches_bare_key(spark, sf_dir, tmp_path):
         purchases_with_recent_clicks(
             _lojoin_stage(spark, tmp_path / "bk", [real, sent, sent]),
             watermark="1 hour",
-            how="left_outer",
+            how="left",
             bucketed=True,
         ),
         scratch_dir("t_lojoin_bk_"),
