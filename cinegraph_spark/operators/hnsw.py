@@ -57,6 +57,16 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cinegraph_spark.operators.maintenance import (
+    LAYOUT_VERSION_COL,
+    check_hash_corpus,
+    hash_layout_save,
+    hash_layout_upsert,
+    hash_part_expr,
+    hash_tier_update,
+    layout_meta,
+    layout_read,
+)
 from cinegraph_spark.session import local_df
 
 #: Every k-NN entry point's output shape, empty results included.
@@ -385,6 +395,10 @@ def hnsw_cosine_knn(
 #: budget; tune per deployment.
 TARGET_ROWS_PER_SUBINDEX = 65_536
 
+#: :func:`hnsw_index_reshard` rebuilds once the largest stored sub-index
+#: holds more than this many times ``target_rows_per_subindex`` vectors.
+RESHARD_TRIGGER_RATIO = 2.0
+
 
 def hnsw_partitioned_knn(
     e: DataFrame,
@@ -480,25 +494,16 @@ _INDEX_SCHEMA = (
 )
 
 
-def _part_expr(n_partitions: int):
-    """The serving table's partition function: ``pmod(hash(vec_id), n)``.
-    ``F.hash`` is the same Murmur3 Spark's HashPartitioning uses, so this
-    reproduces ``repartition(n, "vec_id")`` membership — but as a stored
-    COLUMN it becomes part of the index identity, which is what lets a
-    delta update address exactly the touched sub-indexes."""
-    return F.pmod(F.hash("vec_id"), F.lit(n_partitions)).cast("int")
-
-
 def _build_subindex_rows(
     M: int, ef_construction: int, n_partitions: int, key_ddl: str
 ):
     """mapInPandas task fn over a frame pre-partitioned with
     ``repartition(n_partitions, "vec_id")`` — whose task-assignment
     function (``pmod(Murmur3(vec_id), n)``, HashPartitioning) is exactly
-    :func:`_part_expr`, so task i holds precisely partition i's rows: one
-    sub-index per task, perfectly balanced. The EXPLICIT repartition also
-    stops AQE from coalescing the tiny shuffle into one task and
-    serializing the graph builds (a ``groupBy().applyInPandas`` form
+    `maintenance.py::hash_part_expr`, so task i holds precisely partition
+    i's rows: one sub-index per task, perfectly balanced. The EXPLICIT
+    repartition also stops AQE from coalescing the tiny shuffle into one
+    task and serializing the graph builds (a ``groupBy().applyInPandas`` form
     measured 2.9× slower on the served query, and hashing ``part_id``
     itself collides 8 ids into ~5 tasks — both shapes lose the
     parallelism). The fn still groups pandas-side and emits one
@@ -599,10 +604,8 @@ def hnsw_index_save(
         n_rows = int(stats["n"])
         n_partitions = max(1, -(-n_rows // max(1, target_rows_per_subindex)))
     key_ddl = e.schema["vec_id"].dataType.simpleString()
-    from cinegraph_spark.operators.serving_io import atomic_swap_dir
-
     built = (
-        e.withColumn("part_id", _part_expr(n_partitions))
+        e.withColumn("part_id", hash_part_expr(n_partitions, "vec_id"))
         .repartition(n_partitions, "vec_id")
         .mapInPandas(
             _build_subindex_rows(M, ef_construction, n_partitions, key_ddl),
@@ -617,14 +620,9 @@ def hnsw_index_save(
     # (the same amplification class as the r12 scan finding, one level
     # up). Save/reshard are legitimately full rebuilds and keep the
     # atomic sibling-swap.
-    from cinegraph_spark.operators.serving_io import generation_swap_dir
+    from cinegraph_spark.operators.serving_io import publish_dir
 
-    publish = (
-        atomic_swap_dir(e.sparkSession, path)
-        if keep_generations is None
-        else generation_swap_dir(spark, path, keep=keep_generations)
-    )
-    with publish as tmp:
+    with publish_dir(spark, path, keep_generations) as tmp:
         built.write.partitionBy("part_id").parquet(tmp)
         jpath = spark._jvm.org.apache.hadoop.fs.Path
         jtmp = jpath(tmp)
@@ -659,7 +657,6 @@ def hnsw_corpus_layout(e: DataFrame, corpus_path: str, path: str) -> None:
     `operators/maintenance.py::hash_layout_upsert`. Refuses a corpus
     whose vec_id type drifted from the stored key_ddl (the directories
     would disagree with the index's hash layout)."""
-    from cinegraph_spark.operators.maintenance import hash_layout_save
     from cinegraph_spark.operators.serving_io import resolve_generation
 
     spark = e.sparkSession
@@ -675,27 +672,11 @@ def hnsw_corpus_layout(e: DataFrame, corpus_path: str, path: str) -> None:
         # modulus mismatch with the named re-layout error)
         hash_layout_save(e, corpus_path, "vec_id", 1)
         return
-    key_ddl = e.schema["vec_id"].dataType.simpleString()
-    if key_ddl != str(head["key_ddl"]):
-        raise ValueError(
-            f"hnsw_corpus_layout: corpus vec_id type {key_ddl} differs "
-            f"from the index's stored key type {head['key_ddl']}; the "
-            "directory layout must be hashed under the stored type"
-        )
-    hash_layout_save(e, corpus_path, "vec_id", int(head["n_partitions"]))
-
-
-def _hnsw_layout_meta(spark, corpus_path: str) -> dict:
-    """Load + shape-check a corpus layout for the update path."""
-    from cinegraph_spark.operators.maintenance import layout_meta
-
-    meta = layout_meta(spark, corpus_path)
-    if meta["kind"] != "hash_key" or meta["key"] != "vec_id":
-        raise ValueError(
-            f"hnsw_index_update: layout at {corpus_path} is not a "
-            "vec_id hash layout; rebuild it with hnsw_corpus_layout"
-        )
-    return meta
+    n_partitions = int(head["n_partitions"])
+    check_hash_corpus(
+        spark, e, n_partitions, head["key_ddl"], "hnsw_corpus_layout"
+    )
+    hash_layout_save(e, corpus_path, "vec_id", n_partitions)
 
 
 def hnsw_index_update(
@@ -759,22 +740,17 @@ def hnsw_index_update(
       dynamic partition overwrite (untouched blob files are never
       opened, copied, or rewritten — mtime-pinned in tests/test_hnsw.py;
       the pre-r13 shape carried every untouched blob through a
-      full-table swap, a corpus-sized write per delta). The rebuilt
-      blobs are eagerly ``localCheckpoint``-ed before the overwrite so
-      the present-partition set is known without re-running graph
-      construction — the materialized volume is bounded by the touched
-      partitions, the same bound the write itself pays. Crash window:
+      full-table swap, a corpus-sized write per delta). Crash window:
       one partition directory mid-commit, restored by re-running the
-      same update (deterministic bytes — the same per-directory
-      contract as `operators/similarity.py::pq_codes_update`);
-      save/reshard remain full rebuilds behind the atomic sibling-swap.
+      same update (deterministic bytes); save/reshard remain full
+      rebuilds behind the atomic sibling-swap.
+
+    The identity check, the touched-partition aggregation, the source
+    read and the publish are the kernel this tier shares with
+    `operators/similarity.py::pq_codes_update`:
+    `operators/maintenance.py::hash_tier_update`.
 
     Returns ``{"n_partitions": n, "rebuilt_partitions": [...]}``."""
-    from cinegraph_spark.operators.maintenance import (
-        layout_pruned_read,
-        layout_read,
-    )
-
     corpus_path = e if isinstance(e, str) else None
     spark = (
         delta.sparkSession if corpus_path is not None else e.sparkSession
@@ -782,11 +758,6 @@ def hnsw_index_update(
     from cinegraph_spark.session import ensure_shipped
 
     ensure_shipped(spark)
-    lmeta = (
-        _hnsw_layout_meta(spark, corpus_path)
-        if corpus_path is not None
-        else None
-    )
     from cinegraph_spark.operators.serving_io import (
         ensure_live,
         resolve_generation,
@@ -843,8 +814,7 @@ def hnsw_index_update(
     # the stale flat files and the table would serve both. Refuse with
     # the named rebuild error (vacuous tables were handled above: the
     # flat empty fallback never reaches here).
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    jdir = jpath(path)
+    jdir = spark._jvm.org.apache.hadoop.fs.Path(path)
     hfs = jdir.getFileSystem(spark._jsc.hadoopConfiguration())
     if not any(
         st.getPath().getName().startswith("part_id=")
@@ -868,120 +838,25 @@ def hnsw_index_update(
             )
     M, ef_construction = int(head["m"]), int(head["efc"])
     key_ddl = str(head["key_ddl"])
-    # the stored layout was hashed under key_ddl, and Murmur3(int) !=
-    # Murmur3(long) for the same value — a corpus re-read with a drifted
-    # vec_id type would assign every row to the WRONG partition while the
-    # directories keep the old layout (r12 review); refuse drift outright
-    corpus_key_ddl = (
-        lmeta["key_ddl"]
-        if lmeta is not None
-        else e.schema["vec_id"].dataType.simpleString()
-    )
-    if corpus_key_ddl != key_ddl:
-        raise ValueError(
-            f"hnsw_index_update: corpus vec_id type "
-            f"{corpus_key_ddl} differs from the table's stored "
-            f"key type {key_ddl}; the hash layout is computed under the "
-            "stored type, so a drifted corpus would rebuild the wrong "
-            "partitions — cast the corpus key back or rebuild with "
-            "hnsw_index_save"
-        )
-    if lmeta is not None and int(lmeta["n_partitions"]) != n_partitions:
-        # a stale layout (saved before a reshard changed the index's
-        # partition count) holds directories under the WRONG modulus —
-        # pruned reads would rebuild partial partitions; refuse loudly
-        raise ValueError(
-            f"hnsw_index_update: corpus layout at {corpus_path} was laid "
-            f"out for n_partitions={lmeta['n_partitions']} but the "
-            f"serving table stores n_partitions={n_partitions}; re-run "
-            "hnsw_corpus_layout after a reshard"
-        )
-    # hash the delta's key at the SAME stored type (a delta arriving as
-    # int against a long corpus would silently mark the wrong partitions)
-    # try_cast (not cast): under ANSI a failed cast throws an opaque Spark
-    # error mid-job; here NULL-or-uncastable uniformly becomes NULL so the
-    # guard below can refuse it with a named error. A key that hashed as
-    # NULL would mark an arbitrary partition while the genuinely intended
-    # one keeps a stale blob — refuse malformed delta input instead of
-    # masking it (the delta is small by contract, so the extra scan is a
-    # metadata-scale job)
-    cast_key = F.col("vec_id").try_cast(key_ddl)
-    # ONE aggregation job covers the NULL/uncastable-key refusal AND the
-    # touched-partition set (r18: the pre-merge shape paid a filter-count
-    # job, then built + eagerly localCheckpoint-ed a distinct frame, then
-    # collected it — three scheduler round-trips per maintenance call for
-    # one small-delta scan). collect_set is bounded by n_partitions.
-    stats = delta.agg(
-        F.count_if(cast_key.isNull()).alias("bad"),
-        F.collect_set(
-            F.pmod(F.hash(cast_key), F.lit(n_partitions)).cast("int")
-        ).alias("parts"),
-    ).first()
-    if int(stats["bad"]):
-        raise ValueError(
-            f"hnsw_index_update: {int(stats['bad'])} delta vec_id row(s) "
-            f"are NULL or do not cast to the corpus key type {key_ddl}; "
-            "a NULL key hashes to an arbitrary partition and the intended "
-            "partition would silently keep a stale sub-index — fix the "
-            "delta input"
-        )
-    changed = sorted(int(p) for p in stats["parts"])
-    if not changed:
-        return {
-            "n_partitions": n_partitions,
-            "rebuilt_partitions": [],
-            "full_rebuild": False,
-        }
-    if corpus_path is not None:
-        # layout mode: the touched partitions ARE directories — the read
-        # is a planning-time PartitionFilters prune (scan ∝ change);
-        # part_id comes back from the directory names, already correct
-        # under the verified shared identity
-        src = layout_pruned_read(spark, corpus_path, changed).select(
-            "vec_id", "v", "part_id"
-        )
-    else:
-        # DataFrame mode: every corpus row must be read to compute its
-        # partition id before the isin predicate discards the untouched
-        # ones (compute ∝ change, scan ∝ corpus — use the layout mode
-        # when the corpus lives in the lake). `changed` is ≤ n_partitions
-        # ints, so the literal isin replaces the former broadcast
-        # semi-join (one fewer broadcast exchange + build)
-        src = e.withColumn("part_id", _part_expr(n_partitions)).filter(
-            F.col("part_id").isin(changed)
-        )
-    rebuilt = (
+
+    def rebuild(src: DataFrame) -> DataFrame:
         # n_partitions (not len(changed)) keeps task==part_id: a smaller
         # modulus would SPLIT one part_id's rows across tasks and emit
         # partial sub-indexes; unchanged partitions' tasks are empty
-        src.repartition(n_partitions, "vec_id")
-        .mapInPandas(
-            _build_subindex_rows(M, ef_construction, n_partitions, key_ddl),
-            _INDEX_SCHEMA,
+        return (
+            src.select("vec_id", "v", "part_id")
+            .repartition(n_partitions, "vec_id")
+            .mapInPandas(
+                _build_subindex_rows(
+                    M, ef_construction, n_partitions, key_ddl
+                ),
+                _INDEX_SCHEMA,
+            )
         )
-        # eager: the present-set collect below and the write must not
-        # each re-run graph construction; the materialized volume is the
-        # touched blobs only (bounded by target_rows_per_subindex ×
-        # len(changed), spilling to disk past memory)
-        .localCheckpoint(eager=True)
+
+    changed, _ = hash_tier_update(
+        e, delta, path, n_partitions, key_ddl, rebuild, "hnsw_index_update"
     )
-    present = {
-        int(r["part_id"])
-        for r in rebuilt.select("part_id").distinct().collect()
-    }
-    # replace ONLY the touched sub-index directories; untouched blob
-    # files are never opened or rewritten (mtime-pinned). Partitions the
-    # delta emptied (every vector deleted) produce no rebuilt row, so
-    # dynamic overwrite leaves their stale directory behind — drop it
-    # explicitly, same as pq_codes_update.
-    (
-        rebuilt.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(path)
-    )
-    for p in (p for p in changed if p not in present):
-        hfs.delete(jpath(f"{path.rstrip('/')}/part_id={p}"), True)
     return {
         "n_partitions": n_partitions,
         "rebuilt_partitions": changed,
@@ -994,7 +869,6 @@ def hnsw_stream_maintenance_sink(
     land_dir: str,
     path: str,
     reshard_target_rows: int | None = None,
-    reshard_trigger_ratio: float = 2.0,
 ):
     """``foreachBatch`` sink for STREAMING index maintenance: merge the
     micro-batch into the corpus LAYOUT at ``land_dir`` (touched partition
@@ -1037,7 +911,7 @@ def hnsw_stream_maintenance_sink(
     ``n_vectors`` metadata (a no-trigger probe is one aggregate over ≤
     n_partitions rows — per-batch cost is metadata-scale) and right-sizes
     the table whenever accumulated arrivals push the largest sub-index
-    past ``reshard_trigger_ratio × reshard_target_rows``. A reshard
+    past :data:`RESHARD_TRIGGER_RATIO` × ``reshard_target_rows``. A reshard
     changes the index's partition count, so the layout is re-laid at the
     new modulus in the same batch (a full corpus rewrite — amortized:
     it only happens when the index itself already paid a full rebuild);
@@ -1046,44 +920,31 @@ def hnsw_stream_maintenance_sink(
     wedging the drain on the stale-layout refusal. The maintained SLO —
     no sub-index ever ends a batch past the threshold — is pinned in
     tests/test_hnsw.py. Replay stays idempotent: every step is a pure
-    function of (merged corpus layout, stored table identity)."""
-    from cinegraph_spark.operators.maintenance import (
-        LAYOUT_VERSION_COL,
-        hash_layout_save,
-        hash_layout_upsert,
-        layout_meta,
-        layout_read,
-    )
+    function of (merged corpus layout, stored table identity).
 
+    Drain it with `operators/serving_io.py::serving_stream_update`."""
     spark = base.sparkSession
 
     def _ensure_layout() -> dict:
         # the shared probe heals a crashed layout swap (seed or
         # post-reshard re-lay), refuses non-layout content (a pre-r13
         # batch-keyed landing zone holds arrivals the checkpoint already
-        # marked consumed), and reports a genuinely fresh path
+        # marked consumed), and reports a genuinely fresh path, which is
+        # seeded by the tier's own layout function with base rows at
+        # version -1 (a vacuous index seeds at modulus 1; _sync_layout
+        # re-lays at the real modulus in the same batch)
         from cinegraph_spark.operators.serving_io import (
             recover_landing_layout,
         )
 
-        if recover_landing_layout(
+        if not recover_landing_layout(
             spark, land_dir, "hnsw_stream_maintenance_sink"
         ):
-            return layout_meta(spark, land_dir)
-        head = spark.read.parquet(path).select("n_partitions").first()
-        # a vacuous index (saved over a zero-row corpus) has no
-        # identity to mirror: seed at modulus 1 — the same degrade
-        # as hnsw_corpus_layout; the update path degrades a vacuous
-        # table to a fresh full save without consulting the layout
-        # identity, and _sync_layout re-lays at the real modulus in
-        # the same batch
-        n = int(head["n_partitions"]) if head is not None else 1
-        hash_layout_save(
-            base.withColumn(LAYOUT_VERSION_COL, F.lit(-1).cast("long")),
-            land_dir,
-            "vec_id",
-            n,
-        )
+            hnsw_corpus_layout(
+                base.withColumn(LAYOUT_VERSION_COL, F.lit(-1).cast("long")),
+                land_dir,
+                path,
+            )
         return layout_meta(spark, land_dir)
 
     def _sync_layout(meta: dict) -> dict:
@@ -1117,74 +978,16 @@ def hnsw_stream_maintenance_sink(
                 layout_read(spark, land_dir).select("vec_id", "v"),
                 path,
                 target_rows_per_subindex=reshard_target_rows,
-                trigger_ratio=reshard_trigger_ratio,
             )
         _sync_layout(meta)
 
     return apply
 
 
-def hnsw_index_stream_update(
-    base: DataFrame,
-    arrivals: DataFrame,
-    land_dir: str,
-    path: str,
-    timeout_s: int = 120,
-    reshard_target_rows: int | None = None,
-    reshard_trigger_ratio: float = 2.0,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Drain a STREAM of embedding arrivals into the serving index: every
-    micro-batch merges into the clustered corpus layout at ``land_dir``
-    and immediately maintains the :func:`hnsw_index_save` table at
-    ``path`` via :func:`hnsw_stream_maintenance_sink` — the continuous
-    form of the daily update job (the reference's pgvector index is
-    maintained by Postgres on every INSERT, `db/models/embedding.py:
-    15-17`; this is the micro-batch equivalent). ``base`` is the corpus
-    the index was saved over (it seeds the layout on the first batch);
-    ``arrivals`` is a streaming DataFrame with the same schema. Cost per
-    batch ∝ the partition directories that batch's keys hash into —
-    landing, rebuild scan, and rebuild compute alike; never the corpus,
-    and never the cumulative arrival history (r13: the landing zone is
-    the layout itself, permanently compacted by the latest-wins merge).
-    ``reshard_target_rows`` enables the in-stream growth loop
-    (see :func:`hnsw_stream_maintenance_sink`). Runs with the repo's
-    standard drain scoping (UTC clock, bounded shuffle) under
-    ``availableNow`` and raises on timeout rather than returning with
-    the stream still writing."""
-    from cinegraph_spark.operators.serving_io import drain_available_now
-
-    spark = base.sparkSession
-    # no driver-local makedirs here (r12 ADVICE): land_dir may live on
-    # HDFS/an object store, where os.makedirs would create a spurious
-    # LOCAL directory; the first batch's layout seed creates the real
-    # one through the path's own Hadoop FileSystem
-    if checkpoint_dir is None:
-        # stable default derived from the landing zone, NOT a throwaway
-        # temp checkpoint (r12 review): a crash-recovery rerun with the
-        # same land_dir resumes from the engine's own offsets with the
-        # ORIGINAL batch ids, so a recovered drain can never regroup the
-        # source files into differently-numbered batches and double-land
-        # rows across two batch directories
-        checkpoint_dir = land_dir.rstrip("/") + "_checkpoint"
-    sink = hnsw_stream_maintenance_sink(
-        base,
-        land_dir,
-        path,
-        reshard_target_rows=reshard_target_rows,
-        reshard_trigger_ratio=reshard_trigger_ratio,
-    )
-    drain_available_now(
-        spark, arrivals, sink, checkpoint_dir, timeout_s,
-        f"index maintenance drain at {path}",
-    )
-
-
 def hnsw_index_reshard(
     e: DataFrame,
     path: str,
     target_rows_per_subindex: int = TARGET_ROWS_PER_SUBINDEX,
-    trigger_ratio: float = 2.0,
     force: bool = False,
 ) -> dict:
     """RE-SHARD half of serving-table maintenance (closes the loop the
@@ -1192,8 +995,8 @@ def hnsw_index_reshard(
     immutable — the partition function is index identity — so accumulated
     adds grow per-partition sub-indexes without bound. This operator
     watches that growth and right-sizes the table when it drifts: if the
-    largest stored sub-index exceeds ``trigger_ratio ×
-    target_rows_per_subindex`` rows (or ``force=True``), the whole table
+    largest stored sub-index exceeds :data:`RESHARD_TRIGGER_RATIO` ×
+    ``target_rows_per_subindex`` rows (or ``force=True``), the whole table
     is rebuilt at ``ceil(n_rows / target)`` partitions via a fresh
     :func:`hnsw_index_save` at the table's OWN stored
     ``M``/``ef_construction`` — so the result is bit-identical to a fresh
@@ -1236,7 +1039,10 @@ def hnsw_index_reshard(
     max_rows = int(
         old.agg(F.max("n_vectors").alias("mx")).first()["mx"] or 0
     )
-    if not force and max_rows <= trigger_ratio * target_rows_per_subindex:
+    if (
+        not force
+        and max_rows <= RESHARD_TRIGGER_RATIO * target_rows_per_subindex
+    ):
         return {
             "resharded": False,
             "n_partitions": old_n,
@@ -1423,7 +1229,7 @@ def hnsw_index_filtered_knn(
     n = int(head["n_partitions"])
     adm_lists = (
         admissible.select("vec_id")
-        .withColumn("part_id", _part_expr(n))
+        .withColumn("part_id", hash_part_expr(n, "vec_id"))
         .groupBy("part_id")
         .agg(F.collect_set("vec_id").alias("adm_ids"))
     )

@@ -176,8 +176,7 @@ def merge_agg_state(
     metadata-scale against the fact table.
     Returns ``{"applied": bool, "n_groups": int}``."""
     from cinegraph_spark.operators.serving_io import (
-        atomic_swap_dir,
-        generation_swap_dir,
+        publish_dir,
         recover_swap,
         resolve_generation,
     )
@@ -432,15 +431,7 @@ def merge_agg_state(
         [(int(b),) for b in sorted((applied or set()) | {int(batch_id)})],
         "batch_id long",
     )
-    publish = (
-        atomic_swap_dir(spark, path)
-        if keep_generations is None
-        else generation_swap_dir(
-            spark, path, keep=keep_generations,
-            expected_base=expected_base,
-        )
-    )
-    with publish as tmp:
+    with publish_dir(spark, path, keep_generations, expected_base) as tmp:
         merged.write.parquet(tmp + "/agg")
         ledger.write.parquet(tmp + "/applied")
         if evolution is not None:
@@ -525,8 +516,7 @@ def evolve_agg_state(
     same versioned-or-not-for-life rule as :func:`merge_agg_state`.
     Returns ``{"added": [...], "from_batch_id": N, "n_groups": int}``."""
     from cinegraph_spark.operators.serving_io import (
-        atomic_swap_dir,
-        generation_swap_dir,
+        publish_dir,
         recover_swap,
         resolve_generation,
     )
@@ -675,12 +665,7 @@ def evolve_agg_state(
     ledger = local_df(
         spark, [(int(b),) for b in sorted(applied)], "batch_id long"
     )
-    publish = (
-        atomic_swap_dir(spark, path)
-        if keep_generations is None
-        else generation_swap_dir(spark, path, keep=keep_generations)
-    )
-    with publish as tmp:
+    with publish_dir(spark, path, keep_generations) as tmp:
         widened.write.parquet(tmp + "/agg")
         ledger.write.parquet(tmp + "/applied")
         evolution.write.parquet(tmp + "/evolution")

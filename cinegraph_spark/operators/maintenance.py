@@ -28,10 +28,11 @@ plain DataFrame primitives:
   rebuild a small delta's touched partitions with scan cost ∝ the
   change, not the corpus (without a layout, computing each row's
   partition id forces a full-corpus read even though the semi-join
-  discards the untouched rows). :func:`hash_layout_upsert` maintains the
-  layout itself at the same cost: touched directories are replaced via
-  dynamic partition overwrite; untouched directories' files are never
-  opened.
+  discards the untouched rows; :func:`hash_tier_update` is the one
+  touched-partition kernel of the two hash tiers).
+  :func:`hash_layout_upsert` maintains the layout itself at the same
+  cost: touched directories are replaced via dynamic partition
+  overwrite; untouched directories' files are never opened.
 - **Deletion vectors** (r15): :func:`layout_dv_delete` records deletes
   in a tiny ``_dv`` sidecar instead of rewriting data — cost ∝ the keys,
   which is what makes a K-row erasure request (GDPR delete) affordable
@@ -215,6 +216,19 @@ LAYOUT_MANIFEST = "_LAYOUT.json"
 #: streaming maintenance landing zone). A data column like any other —
 #: layouts saved without it only support the unversioned upsert form.
 LAYOUT_VERSION_COL = "_layout_version"
+
+
+def hash_part_expr(n_partitions: int, key):
+    """``pmod(hash(key), n)`` as an int column: the partition function
+    every hash layout and both hash-partitioned serving tiers (the HNSW
+    blob table, the PQ codes) store as identity. ``F.hash`` is the same
+    Murmur3 Spark's HashPartitioning uses, so the column reproduces
+    ``repartition(n, key)`` membership. ``key`` is a column name or a
+    Column (a delta key ``try_cast`` to the stored type hashes exactly
+    like the stored rows did)."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.hash(key), F.lit(int(n_partitions))).cast("int")
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -419,10 +433,7 @@ def hash_layout_save(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from cinegraph_spark.operators.serving_io import (
-        atomic_swap_dir,
-        generation_swap_dir,
-    )
+    from cinegraph_spark.operators.serving_io import publish_dir
 
     spark = e.sparkSession
     if "part_id" in e.columns:
@@ -439,7 +450,7 @@ def hash_layout_save(
         "n_partitions": int(n_partitions),
         "data_ddl": _data_ddl(e),
     }
-    part = F.pmod(F.hash(key), F.lit(int(n_partitions))).cast("int")
+    part = hash_part_expr(n_partitions, key)
     # NULL keys are refused — hash(NULL) would land rows in a real
     # directory no keyed delta could ever address again. The check rides
     # the write itself via Observation (ONE corpus pass, not a separate
@@ -460,15 +471,8 @@ def hash_layout_save(
             "commits have the atomic token to arbitrate racing writers"
         )
     obs = Observation()
-    publish = (
-        atomic_swap_dir(spark, path)
-        if keep_generations is None
-        else generation_swap_dir(
-            spark, path, keep=keep_generations, expected_base=expected_base
-        )
-    )
     xcols, xnames = _expectation_checks(expect)
-    with publish as tmp:
+    with publish_dir(spark, path, keep_generations, expected_base) as tmp:
         e.withColumn("part_id", part).observe(
             obs, F.count_if(F.col(key).isNull()).alias("n_null"), *xcols
         ).write.partitionBy("part_id").parquet(tmp)
@@ -710,9 +714,7 @@ def hash_layout_upsert(
             "layout"
         )
 
-    part = F.pmod(F.hash(F.col(key).try_cast(key_ddl)), F.lit(n)).cast(
-        "int"
-    )
+    part = hash_part_expr(n, F.col(key).try_cast(key_ddl))
 
     def _checked_parts(
         df: DataFrame, what: str, refuse_dups: bool = False
@@ -938,26 +940,7 @@ def column_layout_upsert(
     new = old.join(gone.distinct(), key, "left_anti").unionByName(
         incoming
     )
-    new = new.localCheckpoint(eager=True)
-    present = {r[pc] for r in new.select(pc).distinct().collect()}
-    (
-        new.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(pc)
-        .parquet(path)
-    )
-    dropped = [c for c in changed if c not in present]
-    if dropped:
-        fs, _ = _hadoop_fs(spark, path)
-        jpath = spark._jvm.org.apache.hadoop.fs.Path
-        for c in dropped:
-            fs.delete(
-                jpath(
-                    f"{path.rstrip('/')}/"
-                    + _escaped_part_dir(spark, pc, c)
-                ),
-                True,
-            )
+    _, _, dropped = _publish_parts(spark, path, new, changed, pc)
     return {"touched_cells": changed, "dropped_cells": dropped}
 
 
@@ -1027,16 +1010,22 @@ def _dv_apply(
 
 
 def _publish_parts(
-    spark: SparkSession, path: str, new: DataFrame, parts: list
+    spark: SparkSession,
+    path: str,
+    new: DataFrame,
+    parts: list,
+    part_col: str = "part_id",
 ) -> tuple[DataFrame, set, list]:
-    """The self-referential dynamic-overwrite publish shared by every
-    touched-partition rewrite in this module (upsert tails, DV
-    compaction, the DV sidecar rewrite — one copy, r15 review): the new
-    content READS the directories being replaced, so it is eagerly
+    """The touched-partition publish behind every directory rewrite in
+    the package (layout upserts, DV compaction and the DV sidecar, the
+    HNSW blob and PQ codes tables via :func:`hash_tier_update`): the new
+    content may READ the directories being replaced, so it is eagerly
     ``localCheckpoint``-ed first (bounded by the touched-partition
     volume, the cost class of the operation itself); directories the
     content still populates are replaced via dynamic partition
-    overwrite, and directories it emptied are dropped. Crash window:
+    overwrite, and directories it emptied are dropped under their
+    Hive-escaped names (a string cell like ``a=b/c`` addresses the
+    directory Spark actually wrote; ints are unchanged). Crash window:
     one partition directory mid-commit; re-running the same operation
     restores it. Returns ``(checkpointed_new, present_parts,
     dropped_parts)``."""
@@ -1051,19 +1040,130 @@ def _publish_parts(
 
     obs = Observation()
     (
-        new.observe(obs, F.collect_set("part_id").alias("parts"))
+        new.observe(obs, F.collect_set(part_col).alias("parts"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
+        .partitionBy(part_col)
         .parquet(path)
     )
-    present = {int(p) for p in obs.get["parts"]}
+    present = set(obs.get["parts"])
     fs, _ = _hadoop_fs(spark, path)
     jpath = spark._jvm.org.apache.hadoop.fs.Path
-    dropped = [int(p) for p in parts if int(p) not in present]
+    dropped = [p for p in parts if p not in present]
     for p in dropped:
-        fs.delete(jpath(f"{path.rstrip('/')}/part_id={p}"), True)
+        fs.delete(
+            jpath(
+                f"{path.rstrip('/')}/" + _escaped_part_dir(spark, part_col, p)
+            ),
+            True,
+        )
     return new, present, dropped
+
+
+def check_hash_corpus(
+    spark: SparkSession,
+    e: DataFrame | str,
+    n_partitions: int,
+    key_ddl: str,
+    who: str,
+) -> None:
+    """Refuse a corpus whose hash identity differs from the one a
+    hash-partitioned serving tier stores. ``e`` is either a DataFrame,
+    whose ``vec_id`` type must be the stored ``key_ddl`` (Murmur3(int) !=
+    Murmur3(long) for equal values, so a drifted type would address the
+    WRONG partitions while the stored ones kept stale state), or the
+    PATH of the tier's ``*_corpus_layout`` layout, which must be a
+    ``vec_id`` hash layout at the stored modulus and key type (a layout
+    saved before a reshard holds directories under the wrong modulus,
+    and pruned reads would rebuild partial partitions). ``who`` names the
+    caller; its tier prefix names the re-layout function in the error."""
+    relayout = who.split("_", 1)[0] + "_corpus_layout"
+    if not isinstance(e, str):
+        got = e.schema["vec_id"].dataType.simpleString()
+        if got != key_ddl:
+            raise ValueError(
+                f"{who}: corpus vec_id type {got} differs from the "
+                f"stored key type {key_ddl}; the partitions are hashed "
+                "under the stored type — cast the corpus key back or "
+                "rebuild the tier with a fresh save"
+            )
+        return
+    meta = layout_meta(spark, e)
+    if meta["kind"] != "hash_key" or meta["key"] != "vec_id":
+        raise ValueError(
+            f"{who}: layout at {e} is not a vec_id hash layout; rebuild "
+            f"it with {relayout}"
+        )
+    if (int(meta["n_partitions"]), meta["key_ddl"]) != (
+        n_partitions,
+        key_ddl,
+    ):
+        raise ValueError(
+            f"{who}: corpus layout at {e} (n_partitions="
+            f"{meta['n_partitions']}, key_ddl={meta['key_ddl']}) does not "
+            f"match the stored identity (n_partitions={n_partitions}, "
+            f"key_ddl={key_ddl}); re-run {relayout}"
+        )
+
+
+def hash_tier_update(
+    e: DataFrame | str,
+    delta: DataFrame,
+    table_path: str,
+    n_partitions: int,
+    key_ddl: str,
+    rebuild,
+    who: str,
+) -> tuple[list, list]:
+    """The touched-partition maintenance kernel shared by the two
+    hash-partitioned serving tiers (`operators/hnsw.py::hnsw_index_update`,
+    `operators/similarity.py::pq_codes_update`): keep per-partition state
+    and recompute only the partitions a delta touches.
+
+    ``e`` is the full post-change corpus, a DataFrame or the path of the
+    tier's corpus layout (checked by :func:`check_hash_corpus`); ``delta``
+    carries the ``vec_id`` of every added, updated or deleted vector.
+    ONE aggregation over the delta refuses NULL or ``key_ddl``-uncastable
+    keys (``try_cast``, so ANSI mode raises this named error rather than
+    an opaque cast failure; such a key would hash to an arbitrary
+    partition while the intended one kept stale state) and collects the
+    touched partitions (≤ ``n_partitions`` values). The source of the
+    rebuild is, in layout mode, a :func:`layout_pruned_read` of exactly
+    those directories (a planning-time ``PartitionFilters`` prune: scan ∝
+    change); in DataFrame mode every corpus row must be read to compute
+    its partition id before the ``isin`` filter discards the untouched
+    ones (scan ∝ corpus). ``rebuild(src)`` maps that source (the corpus
+    columns plus ``part_id``) to the tier's new rows, still carrying
+    ``part_id``, and :func:`_publish_parts` replaces only the touched
+    directories of ``table_path`` (untouched files are never opened) and
+    drops the ones the delta emptied. Returns ``(touched, dropped)``."""
+    from pyspark.sql import functions as F
+
+    spark = delta.sparkSession
+    check_hash_corpus(spark, e, n_partitions, key_ddl, who)
+    cast_key = F.col("vec_id").try_cast(key_ddl)
+    stats = delta.agg(
+        F.count_if(cast_key.isNull()).alias("bad"),
+        F.collect_set(hash_part_expr(n_partitions, cast_key)).alias("parts"),
+    ).first()
+    if int(stats["bad"]):
+        raise ValueError(
+            f"{who}: {int(stats['bad'])} delta vec_id row(s) are NULL or "
+            f"do not cast to the corpus key type {key_ddl}; a NULL key "
+            "hashes to an arbitrary partition and the intended partition "
+            "would keep stale state — fix the delta input"
+        )
+    changed = sorted(int(p) for p in stats["parts"])
+    if not changed:
+        return [], []
+    if isinstance(e, str):
+        src = layout_pruned_read(spark, e, changed)
+    else:
+        src = e.withColumn(
+            "part_id", hash_part_expr(n_partitions, "vec_id")
+        ).filter(F.col("part_id").isin(changed))
+    _, _, dropped = _publish_parts(spark, table_path, rebuild(src), changed)
+    return changed, dropped
 
 
 def _dv_rewrite_parts(
@@ -1143,7 +1243,7 @@ def layout_dv_delete(
         )
     key, key_ddl, n = meta["key"], meta["key_ddl"], meta["n_partitions"]
     cast = F.col(key).try_cast(key_ddl)
-    part = F.pmod(F.hash(cast), F.lit(int(n))).cast("int")
+    part = hash_part_expr(n, cast)
     # one aggregation job covers the count, the NULL-key refusal, AND the
     # touched-partition set (r18 — same job merge as hash_layout_upsert)
     stats = deletes.agg(
@@ -1178,11 +1278,7 @@ def layout_dv_delete(
 
 
 def dv_stream_delete(
-    spark: SparkSession,
-    arrivals: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    timeout_s: int = 120,
+    spark: SparkSession, arrivals: DataFrame, path: str, checkpoint_dir: str
 ) -> None:
     """Streaming erasure feed → deletion vectors: drain a stream of
     delete keys into :func:`layout_dv_delete`, one sidecar merge per
@@ -1203,8 +1299,7 @@ def dv_stream_delete(
         layout_dv_delete(spark, path, batch_df)
 
     drain_available_now(
-        spark, arrivals, _sink, checkpoint_dir, timeout_s,
-        "dv_stream_delete",
+        spark, arrivals, _sink, checkpoint_dir, "dv_stream_delete"
     )
 
 

@@ -164,6 +164,24 @@ def _swap_in_new(fs, src, dest, tmp: str, path: str, aside: str) -> None:
     )
 
 
+def publish_dir(
+    spark,
+    path: str,
+    keep_generations: int | None,
+    expected_base: int | None = None,
+):
+    """The publish target of a full state save: :func:`atomic_swap_dir`
+    over ``path``, or with ``keep_generations`` a new numbered generation
+    under it (:func:`generation_swap_dir`, ``expected_base`` passed
+    through for optimistic-concurrency commits). Returns the context
+    manager; the block populates the yielded directory."""
+    if keep_generations is None:
+        return atomic_swap_dir(spark, path)
+    return generation_swap_dir(
+        spark, path, keep=keep_generations, expected_base=expected_base
+    )
+
+
 def atomic_swap_write(df: DataFrame, path: str) -> None:
     """Durably write ``df`` to a unique sibling directory, then swap it
     into ``path`` (old renamed aside, new renamed in, aside deleted —
@@ -1157,17 +1175,23 @@ def vacuum_generations(
     }
 
 
+#: ``availableNow`` deadline of every maintenance drain: past it the
+#: drain stops the stream and raises instead of returning while the
+#: stream is still writing
+DRAIN_TIMEOUT_S = 120
+
+
 def drain_available_now(
-    spark, arrivals, sink, checkpoint_dir: str, timeout_s: int, what: str
+    spark, arrivals, sink, checkpoint_dir: str, what: str
 ) -> None:
     """Shared ``availableNow`` drain loop for the streaming maintenance
-    wrappers (`operators/hnsw.py::hnsw_index_stream_update`,
-    `operators/similarity.py::ivf_index_stream_update` /
-    ``pq_index_stream_update``): run the ``foreachBatch`` sink under the
-    repo's standard drain scoping (UTC session clock so no analysis-time
-    expression bakes a hostile zone; bounded shuffle so a plain driver
-    session's 200 partitions don't fragment the micro-batch jobs), and
-    raise on timeout rather than returning with the stream still
+    drains (:func:`serving_stream_update`,
+    `operators/maintenance.py::dv_stream_delete`): run the
+    ``foreachBatch`` sink under the repo's standard drain scoping (UTC
+    session clock so no analysis-time expression bakes a hostile zone;
+    bounded shuffle so a plain driver session's 200 partitions don't
+    fragment the micro-batch jobs), and raise after
+    :data:`DRAIN_TIMEOUT_S` rather than returning with the stream still
     writing. Extracted r15 — three tiers carried verbatim copies of this
     loop, and the drain contract must not drift per tier."""
     from cinegraph_spark.session import bounded_shuffle, scoped_confs
@@ -1182,11 +1206,45 @@ def drain_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(timeout_s):
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
             q.stop()
             raise TimeoutError(
-                f"{what} did not finish in {timeout_s}s"
+                f"{what} did not finish in {DRAIN_TIMEOUT_S}s"
             )
+
+
+def serving_stream_update(
+    arrivals: DataFrame,
+    sink,
+    land_dir: str,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Drain a STREAM of embedding arrivals into a serving tier — the
+    continuous form of the tier's daily update job (the reference's
+    pgvector index is maintained by Postgres on every INSERT,
+    `db/models/embedding.py:15-17`; this is the micro-batch equivalent).
+    ``sink`` is the tier's ``foreachBatch`` sink built over the same
+    ``land_dir``: `operators/hnsw.py::hnsw_stream_maintenance_sink`,
+    `operators/similarity.py::ivf_stream_maintenance_sink` or
+    ``pq_stream_maintenance_sink``. Each documents its per-batch
+    mechanics, cost bound (∝ the directories the batch touches, never
+    the corpus or the cumulative arrival history) and replay contract.
+
+    ``checkpoint_dir`` defaults to ``land_dir + "_checkpoint"``, a
+    stable path derived from the landing zone rather than a throwaway
+    temp checkpoint: a crash-recovery rerun with the same ``land_dir``
+    resumes from the engine's own offsets with the ORIGINAL batch ids,
+    so a recovered drain can never regroup the source files into
+    differently-numbered batches. No driver-local makedirs happens
+    here: ``land_dir`` may live on HDFS or an object store, and the
+    first batch's layout seed creates it through the path's own Hadoop
+    FileSystem. Runs under :func:`drain_available_now`."""
+    if checkpoint_dir is None:
+        checkpoint_dir = land_dir.rstrip("/") + "_checkpoint"
+    drain_available_now(
+        arrivals.sparkSession, arrivals, sink, checkpoint_dir,
+        f"maintenance drain into {land_dir}",
+    )
 
 
 def recover_landing_layout(spark, land_dir: str, what: str) -> bool:

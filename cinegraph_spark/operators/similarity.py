@@ -421,10 +421,7 @@ def ivf_centroids_save(
     publishes as a numbered generation instead (marker-commit, no crash
     window, pinned reads via ``ivf_index_topk(generation=)`` — same
     contract as `operators/maintenance.py::hash_layout_save`)."""
-    from cinegraph_spark.operators.serving_io import (
-        atomic_swap_write,
-        generation_swap_dir,
-    )
+    from cinegraph_spark.operators.serving_io import publish_dir
 
     # refuse NULL cell labels up front (r12 review): groupBy would happily
     # persist a NULL cell, but the update path's delta guard (rightly)
@@ -439,13 +436,8 @@ def ivf_centroids_save(
             "path's equi-joins, so its centroid would be unmaintainable "
             "— assign a sentinel cell value instead"
         )
-    if keep_generations is None:
-        atomic_swap_write(ivf_cell_stats(e, label, v), path)
-    else:
-        with generation_swap_dir(
-            e.sparkSession, path, keep=keep_generations
-        ) as tmp:
-            ivf_cell_stats(e, label, v).write.parquet(tmp)
+    with publish_dir(e.sparkSession, path, keep_generations) as tmp:
+        ivf_cell_stats(e, label, v).write.parquet(tmp)
 
 
 def ivf_corpus_layout(
@@ -730,7 +722,9 @@ def ivf_stream_maintenance_sink(
     the upstream already guarantees insert/same-cell arrivals; turn it
     on when it does not — a violated contract otherwise leaves a stale
     duplicate key in the old cell that no touched-directory scheme can
-    detect (r15 review)."""
+    detect (r15 review).
+
+    Drain it with `operators/serving_io.py::serving_stream_update`."""
     from cinegraph_spark.operators.maintenance import (
         column_layout_upsert,
         layout_read,
@@ -788,61 +782,6 @@ def ivf_stream_maintenance_sink(
     return apply
 
 
-def ivf_index_stream_update(
-    base: DataFrame,
-    arrivals: DataFrame,
-    land_dir: str,
-    path: str,
-    label: str = "label",
-    v: str = "v",
-    timeout_s: int = 120,
-    checkpoint_dir: str | None = None,
-    validate_cells: bool = False,
-) -> None:
-    """Drain a STREAM of embedding arrivals into the persisted IVF
-    centroid table — the continuous form of the daily
-    :func:`ivf_centroids_update` job, completing the streaming maintenance
-    story across all three ANN tiers (HNSW has
-    `operators/hnsw.py::hnsw_index_stream_update`; the reference's pgvector
-    index is maintained by Postgres on every INSERT,
-    `db/models/embedding.py:15-17` — this is the micro-batch equivalent at
-    the IVF tier). ``base`` is the corpus the table was saved over (it
-    seeds the cell layout at ``land_dir`` on the first batch); ``arrivals``
-    is a streaming DataFrame with the same ``(vec_id, label, v)`` schema.
-    Runs under ``availableNow`` with the repo's standard drain scoping
-    (UTC clock, bounded shuffle) and raises on timeout rather than
-    returning with the stream still writing. See
-    :func:`ivf_stream_maintenance_sink` for the per-batch mechanics, cost
-    bound, replay contract, the insert/same-cell arrival rule, and the
-    opt-in ``validate_cells`` cross-cell refusal."""
-    from cinegraph_spark.operators.serving_io import drain_available_now
-
-    spark = base.sparkSession
-    # no driver-local makedirs: land_dir may live on HDFS/an object store;
-    # the first batch's layout seed creates the real directory through the
-    # path's own Hadoop FileSystem
-    if checkpoint_dir is None:
-        # stable default derived from the landing zone (a crash-recovery
-        # rerun with the same land_dir resumes from the engine's own
-        # offsets with the ORIGINAL batch ids)
-        checkpoint_dir = land_dir.rstrip("/") + "_checkpoint"
-    sink = ivf_stream_maintenance_sink(
-        base, land_dir, path, label, v, validate_cells=validate_cells
-    )
-    drain_available_now(
-        spark, arrivals, sink, checkpoint_dir, timeout_s,
-        f"IVF maintenance drain at {path}",
-    )
-
-
-def _pq_part_expr(n_partitions: int):
-    """Codes-table partition function — same stored-identity trick as the
-    HNSW serving table (`operators/hnsw.py::_part_expr`): membership is a
-    pure function of the key, so a delta can address exactly the touched
-    partition DIRECTORIES without any lookup."""
-    return F.pmod(F.hash("vec_id"), F.lit(n_partitions)).cast("int")
-
-
 def pq_codes_save(
     e: DataFrame,
     codebooks: list[list[list[float]]],
@@ -868,12 +807,10 @@ def pq_codes_save(
     partition directory — see :func:`pq_codes_update`."""
     import json
 
-    spark = e.sparkSession
-    from cinegraph_spark.operators.serving_io import (
-        atomic_swap_dir,
-        generation_swap_dir,
-    )
+    from cinegraph_spark.operators.maintenance import hash_part_expr
+    from cinegraph_spark.operators.serving_io import publish_dir
 
+    spark = e.sparkSession
     # one agg job covers both the adaptive partition count and the NULL-key
     # refusal (r12 ADVICE): hash(NULL) lands codes in a real directory, but
     # pq_codes_update refuses NULL delta keys, so NULL-keyed codes would be
@@ -910,14 +847,9 @@ def pq_codes_save(
     codes = e.select(
         "vec_id",
         pq_encode_col(F.col(v), codebooks).alias("code"),
-        _pq_part_expr(n_partitions).alias("part_id"),
+        hash_part_expr(n_partitions, "vec_id").alias("part_id"),
     )
-    publish = (
-        atomic_swap_dir(spark, path)
-        if keep_generations is None
-        else generation_swap_dir(spark, path, keep=keep_generations)
-    )
-    with publish as tmp:
+    with publish_dir(spark, path, keep_generations) as tmp:
         books.coalesce(1).write.parquet(tmp + "/books")
         codes.write.partitionBy("part_id").parquet(tmp + "/codes")
 
@@ -970,17 +902,14 @@ def pq_corpus_layout(e: DataFrame, corpus_path: str, path: str) -> None:
     layout itself with `operators/maintenance.py::hash_layout_upsert`.
     Refuses a corpus whose vec_id type drifted from the stored
     key_ddl."""
-    from cinegraph_spark.operators.maintenance import hash_layout_save
+    from cinegraph_spark.operators.maintenance import (
+        check_hash_corpus,
+        hash_layout_save,
+    )
 
     spark = e.sparkSession
     _, n_partitions, key_ddl, _, _ = _pq_read_state(spark, path)
-    corpus_ddl = e.schema["vec_id"].dataType.simpleString()
-    if corpus_ddl != key_ddl:
-        raise ValueError(
-            f"pq_corpus_layout: corpus vec_id type {corpus_ddl} differs "
-            f"from the state's stored key type {key_ddl}; the directory "
-            "layout must be hashed under the stored type"
-        )
+    check_hash_corpus(spark, e, n_partitions, key_ddl, "pq_corpus_layout")
     hash_layout_save(e, corpus_path, "vec_id", n_partitions)
 
 
@@ -1013,106 +942,28 @@ def pq_codes_update(
     update by construction (retraining would silently re-interpret every
     untouched code). The per-directory replacement is idempotent under
     replay; its crash window is one partition directory, which re-running
-    the same update restores."""
-    from cinegraph_spark.operators.maintenance import (
-        layout_meta,
-        layout_pruned_read,
-    )
+    the same update restores. The identity check, the touched-partition
+    aggregation, the source read and the publish are the kernel this
+    tier shares with `operators/hnsw.py::hnsw_index_update`:
+    `operators/maintenance.py::hash_tier_update`."""
+    from cinegraph_spark.operators.maintenance import hash_tier_update
 
-    corpus_path = e if isinstance(e, str) else None
-    spark = delta.sparkSession if corpus_path is not None else e.sparkSession
+    spark = delta.sparkSession
     # versioned roots resolve to the CURRENT generation (in-place
     # maintenance of the live generation, like hash_layout_upsert)
-    codebooks, n_partitions, key_ddl, codes_schema, path = _pq_read_state(
-        spark, path
-    )
-    if corpus_path is not None:
-        lmeta = layout_meta(spark, corpus_path)
-        if lmeta["kind"] != "hash_key" or lmeta["key"] != "vec_id":
-            raise ValueError(
-                f"pq_codes_update: layout at {corpus_path} is not a "
-                "vec_id hash layout; rebuild it with pq_corpus_layout"
-            )
-        if int(lmeta["n_partitions"]) != n_partitions:
-            raise ValueError(
-                f"pq_codes_update: corpus layout at {corpus_path} was "
-                f"laid out for n_partitions={lmeta['n_partitions']} but "
-                f"the state stores n_partitions={n_partitions}; re-run "
-                "pq_corpus_layout"
-            )
-        corpus_key_ddl = lmeta["key_ddl"]
-    else:
-        corpus_key_ddl = e.schema["vec_id"].dataType.simpleString()
-    # the stored directory layout was hashed under key_ddl and
-    # Murmur3(int) != Murmur3(long) for equal values — a corpus re-read
-    # with a drifted vec_id type would lay the same keys into DIFFERENT
-    # directories than the save did, silently duplicating/losing keys
-    # across two incompatible layouts (r12 review); refuse drift outright
-    if corpus_key_ddl != key_ddl:
-        raise ValueError(
-            f"pq_codes_update: corpus vec_id type "
-            f"{corpus_key_ddl} differs from the state's stored "
-            f"key type {key_ddl}; the partition layout is hashed under "
-            "the stored type — cast the corpus key back or rebuild with "
-            "pq_codes_save"
-        )
-    cast_key = F.col("vec_id").try_cast(key_ddl)
-    # one aggregation job covers the NULL-key refusal AND the touched-
-    # partition set (r18 — same job merge as hnsw_index_update; the
-    # pre-merge shape was a filter-count job + an eager localCheckpoint +
-    # a collect over the same small delta). collect_set ≤ n_partitions.
-    stats = delta.agg(
-        F.count_if(cast_key.isNull()).alias("bad"),
-        F.collect_set(
-            F.pmod(F.hash(cast_key), F.lit(n_partitions)).cast("int")
-        ).alias("parts"),
-    ).first()
-    if int(stats["bad"]):
-        raise ValueError(
-            f"pq_codes_update: {int(stats['bad'])} delta vec_id row(s) "
-            f"are NULL or do not cast to the corpus key type {key_ddl}; "
-            "a NULL key hashes to an arbitrary partition and the intended "
-            "partition would keep stale codes — fix the delta input"
-        )
-    changed = sorted(int(p) for p in stats["parts"])
-    if not changed:
-        return {"rebuilt_partitions": [], "dropped_partitions": []}
+    codebooks, n_partitions, key_ddl, _, path = _pq_read_state(spark, path)
 
-    if corpus_path is not None:
-        src = layout_pruned_read(spark, corpus_path, changed).select(
-            "vec_id", v, "part_id"
-        )
-    else:
-        # `changed` is ≤ n_partitions ints — a literal isin predicate
-        # replaces the former broadcast semi-join (one fewer exchange)
-        src = e.withColumn("part_id", _pq_part_expr(n_partitions)).filter(
-            F.col("part_id").isin(changed)
-        )
-    rebuilt = (
-        src.select(
+    def encode(src: DataFrame) -> DataFrame:
+        return src.select(
             "vec_id",
             pq_encode_col(F.col(v), codebooks).alias("code"),
             "part_id",
         )
-        .localCheckpoint(eager=True)  # the present-set below reuses it
+
+    changed, dropped = hash_tier_update(
+        e, delta, path + "/codes", n_partitions, key_ddl, encode,
+        "pq_codes_update",
     )
-    present = {
-        int(r["part_id"])
-        for r in rebuilt.select("part_id").distinct().collect()
-    }
-    (
-        rebuilt.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(path + "/codes")
-    )
-    dropped = [p for p in changed if p not in present]
-    if dropped:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path
-        root = jpath(path + "/codes")
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        for p in dropped:
-            fs.delete(jpath(f"{path}/codes/part_id={p}"), True)
     return {"rebuilt_partitions": changed, "dropped_partitions": dropped}
 
 
@@ -1171,7 +1022,7 @@ def pq_index_topk(
     (a recall, not correctness, cost). Pinned cross-tier in
     tests/test_deletion_vectors.py."""
     from cinegraph_spark.operators.maintenance import (
-        layout_meta,
+        check_hash_corpus,
         layout_pruned_read,
     )
 
@@ -1205,24 +1056,10 @@ def pq_index_topk(
     if corpus_path is None:
         fetched = e.join(F.broadcast(cand.select("vec_id")), "vec_id")
     else:
-        lmeta = layout_meta(spark, corpus_path)
-        if lmeta["kind"] != "hash_key" or lmeta["key"] != "vec_id":
-            raise ValueError(
-                f"pq_index_topk: layout at {corpus_path} is not a vec_id "
-                "hash layout; rebuild it with pq_corpus_layout"
-            )
-        if (
-            int(lmeta["n_partitions"]) != n_partitions
-            or lmeta["key_ddl"] != key_ddl
-        ):
-            raise ValueError(
-                f"pq_index_topk: corpus layout at {corpus_path} "
-                f"(n_partitions={lmeta['n_partitions']}, "
-                f"key_ddl={lmeta['key_ddl']}) does not match the state "
-                f"(n_partitions={n_partitions}, key_ddl={key_ddl}); the "
-                "candidates' part_ids would address the wrong "
-                "directories — re-run pq_corpus_layout"
-            )
+        # the candidates' part_ids must address this layout's directories
+        check_hash_corpus(
+            spark, corpus_path, n_partitions, key_ddl, "pq_index_topk"
+        )
         rows = cand.select("vec_id", "part_id").collect()
         ids = [r["vec_id"] for r in rows]
         parts = sorted({int(r["part_id"]) for r in rows})
@@ -1270,87 +1107,32 @@ def pq_stream_maintenance_sink(
     expressed as an arrival — route them through the batch
     :func:`pq_codes_update` path. Codebooks stay frozen throughout:
     retraining inside a drain would silently re-interpret every stored
-    code (`_pq_read_state`'s refusal documents the contract)."""
+    code (`_pq_read_state`'s refusal documents the contract).
+
+    Drain it with `operators/serving_io.py::serving_stream_update`."""
     from cinegraph_spark.operators.maintenance import (
         LAYOUT_VERSION_COL,
-        hash_layout_save,
         hash_layout_upsert,
     )
+    from cinegraph_spark.operators.serving_io import recover_landing_layout
 
     spark = base.sparkSession
 
-    def _ensure_layout() -> None:
-        # the shared probe heals a crashed seed swap, refuses non-layout
-        # content (consumed-arrival hazard), and reports a fresh path
-        from cinegraph_spark.operators.serving_io import (
-            recover_landing_layout,
-        )
-
-        if recover_landing_layout(
-            spark, land_dir, "pq_stream_maintenance_sink"
-        ):
-            return
-        _, n_partitions, key_ddl, _, _ = _pq_read_state(spark, path)
-        corpus_ddl = base.schema["vec_id"].dataType.simpleString()
-        if corpus_ddl != key_ddl:
-            # same Murmur3-type-drift rule as pq_corpus_layout: a
-            # drifted key type would lay the same keys into different
-            # directories than the stored codes
-            raise ValueError(
-                f"pq_stream_maintenance_sink: corpus vec_id type "
-                f"{corpus_ddl} differs from the state's stored key "
-                f"type {key_ddl}; the landing layout must hash under "
-                "the stored type"
-            )
-        hash_layout_save(
-            base.withColumn(LAYOUT_VERSION_COL, F.lit(-1).cast("long")),
-            land_dir,
-            "vec_id",
-            n_partitions,
-        )
-
     def apply(batch_df: DataFrame, batch_id: int) -> None:
+        # the shared probe heals a crashed seed swap, refuses non-layout
+        # content (consumed-arrival hazard), and reports a fresh path,
+        # which pq_corpus_layout seeds with base rows at version -1;
         # duplicate keys within one batch are refused by
         # hash_layout_upsert's per-call guard
-        _ensure_layout()
+        if not recover_landing_layout(
+            spark, land_dir, "pq_stream_maintenance_sink"
+        ):
+            pq_corpus_layout(
+                base.withColumn(LAYOUT_VERSION_COL, F.lit(-1).cast("long")),
+                land_dir,
+                path,
+            )
         hash_layout_upsert(spark, land_dir, batch_df, version=batch_id)
         pq_codes_update(land_dir, batch_df.select("vec_id"), path, v=v)
 
     return apply
-
-
-def pq_index_stream_update(
-    base: DataFrame,
-    arrivals: DataFrame,
-    land_dir: str,
-    path: str,
-    v: str = "v",
-    timeout_s: int = 120,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Drain a STREAM of embedding arrivals into the persisted PQ codes
-    state — the continuous form of the daily :func:`pq_codes_update` job,
-    completing the streaming maintenance story across ALL THREE ANN tiers
-    (HNSW: `operators/hnsw.py::hnsw_index_stream_update`, IVF:
-    :func:`ivf_index_stream_update`; the reference's pgvector index is
-    maintained by Postgres on every INSERT, `db/models/embedding.py:15-17`
-    — this is the micro-batch equivalent at the PQ tier). ``base`` is the
-    corpus the state was saved over (it seeds the landing layout on the
-    first batch); ``arrivals`` is a streaming DataFrame with the same
-    ``(vec_id, v)`` schema. Runs under ``availableNow`` with the repo's
-    standard drain scoping and raises on timeout. See
-    :func:`pq_stream_maintenance_sink` for the per-batch mechanics, the
-    replay contract, and the upsert/no-delete arrival rule."""
-    from cinegraph_spark.operators.serving_io import drain_available_now
-
-    spark = base.sparkSession
-    if checkpoint_dir is None:
-        # stable default derived from the landing zone (a crash-recovery
-        # rerun resumes from the engine's own offsets with the original
-        # batch ids)
-        checkpoint_dir = land_dir.rstrip("/") + "_checkpoint"
-    sink = pq_stream_maintenance_sink(base, land_dir, path, v=v)
-    drain_available_now(
-        spark, arrivals, sink, checkpoint_dir, timeout_s,
-        f"PQ maintenance drain at {path}",
-    )

@@ -857,10 +857,11 @@ def vec_ann_ivf_stream_update_topk(spark, sf_dir):
     maintained table (top-2 cells by stored-centroid cosine, exact cosine
     top-10 within them, candidate read pruned to the probed cells'
     directories)."""
+    from cinegraph_spark.operators.serving_io import serving_stream_update
     from cinegraph_spark.operators.similarity import (
         ivf_centroids_save,
-        ivf_index_stream_update,
         ivf_index_topk,
+        ivf_stream_maintenance_sink,
     )
     from cinegraph_spark.session import scratch_dir
 
@@ -879,10 +880,13 @@ def vec_ann_ivf_stream_update_topk(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals_dir)
     )
-    ivf_index_stream_update(yesterday, arrivals, scratch + "/land", path)
+    land = scratch + "/land"
+    serving_stream_update(
+        arrivals, ivf_stream_maintenance_sink(yesterday, land, path), land
+    )
     # the search reads the drained layout: the probed cells' directories
     # are the only corpus data the query opens
-    out = ivf_index_topk(scratch + "/land", q, path, nprobe=2, k=10)
+    out = ivf_index_topk(land, q, path, nprobe=2, k=10)
     return out.select(
         "vec_id", F.col("label").cast("long").alias("label"), "cos_sim"
     )
@@ -934,8 +938,9 @@ def vec_ann_hnsw_stream_update_knn(spark, sf_dir):
     from cinegraph_spark.operators.hnsw import (
         hnsw_index_knn,
         hnsw_index_save,
-        hnsw_index_stream_update,
+        hnsw_stream_maintenance_sink,
     )
+    from cinegraph_spark.operators.serving_io import serving_stream_update
     from cinegraph_spark.session import scratch_dir
 
     e = _emb(spark, sf_dir).select("vec_id", "v")
@@ -951,7 +956,10 @@ def vec_ann_hnsw_stream_update_knn(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals_dir)
     )
-    hnsw_index_stream_update(base, arrivals, scratch + "/land", path)
+    land = scratch + "/land"
+    serving_stream_update(
+        arrivals, hnsw_stream_maintenance_sink(base, land, path), land
+    )
     queries = e.filter(F.col("vec_id") < 10)
     return hnsw_index_knn(spark, path, queries, k=3)
 
@@ -1341,18 +1349,20 @@ def vec_ann_pq_stream_update_topk(spark, sf_dir):
     and every batch merges latest-wins into the hash layout under the
     state's OWN partition function then re-encodes exactly the touched
     partition directories with the FROZEN stored codebooks
-    (`pq_stream_maintenance_sink` → `pq_codes_update` in pruned-read
-    layout mode). Deterministic encode ⇒ the drained codes are
-    bit-identical to a fresh full save of the final corpus (multi-batch,
-    replay, and convergence variants pinned in tests/test_pq_serving.py),
+    (`serving_stream_update` draining `pq_stream_maintenance_sink` →
+    `pq_codes_update` in pruned-read layout mode). Deterministic encode
+    ⇒ the drained codes are bit-identical to a fresh full save of the
+    final corpus (multi-batch, replay, and convergence variants pinned in
+    tests/test_pq_serving.py),
     and serving in the exact regime (``rerank >= |corpus|``, derived
     from a count) makes the whole round-trip brute-force
     oracle-checkable — the streaming sibling of
     `vec_ann_pq_incremental_topk`'s exact-oracle pattern."""
+    from cinegraph_spark.operators.serving_io import serving_stream_update
     from cinegraph_spark.operators.similarity import (
         pq_codes_save,
-        pq_index_stream_update,
         pq_index_topk,
+        pq_stream_maintenance_sink,
         pq_train,
     )
     from cinegraph_spark.session import bounded_shuffle, scratch_dir
@@ -1376,11 +1386,14 @@ def vec_ann_pq_stream_update_topk(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals_dir)
     )
-    pq_index_stream_update(yesterday, arrivals, scratch + "/land", path)
+    land = scratch + "/land"
+    serving_stream_update(
+        arrivals, pq_stream_maintenance_sink(yesterday, land, path), land
+    )
     rerank = max(512, full.count())
     # the search reads the drained landing layout: the rerank fetch is
     # pruned to the candidates' partition directories
-    return pq_index_topk(scratch + "/land", q, path, k=10, rerank=rerank)
+    return pq_index_topk(land, q, path, k=10, rerank=rerank)
 
 
 @register(

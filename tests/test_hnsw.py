@@ -340,9 +340,9 @@ def test_index_update_drops_emptied_partition(spark, sf_dir, tmp_path):
     hnsw_index_save(e, path, n_partitions=4)
     victim = spark.read.parquet(path).orderBy("part_id").first()["part_id"]
 
-    from cinegraph_spark.operators.hnsw import _part_expr
+    from cinegraph_spark.operators.maintenance import hash_part_expr
 
-    doomed = e.withColumn("part_id", _part_expr(4)).filter(
+    doomed = e.withColumn("part_id", hash_part_expr(4, "vec_id")).filter(
         F.col("part_id") == victim
     )
     survivors = e.join(doomed.select("vec_id"), "vec_id", "left_anti")
@@ -569,7 +569,8 @@ def test_index_reshard_after_growth_equals_fresh_save(spark, sf_dir, tmp_path):
     """The growth loop the r11 verdict asked to close: save a small
     corpus (right-sized), grow it via hnsw_index_update (n_partitions is
     immutable identity, so sub-indexes bloat), then hnsw_index_reshard
-    detects the drift past trigger_ratio × target and rebuilds — and the
+    detects the drift past RESHARD_TRIGGER_RATIO × target and rebuilds —
+    and the
     result is BIT-IDENTICAL to a fresh full save at the same target."""
     from cinegraph_spark.operators.hnsw import (
         hnsw_index_reshard,
@@ -674,13 +675,14 @@ def test_swap_write_leaves_no_sibling_dirs(spark, sf_dir, tmp_path):
 
 def test_stream_update_equals_full_save(spark, sf_dir, tmp_path):
     """Draining the arrivals as a 4-micro-batch stream through
-    hnsw_index_stream_update must leave the serving table bit-identical
+    serving_stream_update must leave the serving table bit-identical
     to a fresh full save of the final corpus — the streaming form of the
     incremental contract."""
     from cinegraph_spark.operators.hnsw import (
         hnsw_index_save,
-        hnsw_index_stream_update,
+        hnsw_stream_maintenance_sink,
     )
+    from cinegraph_spark.operators.serving_io import serving_stream_update
     from cinegraph_spark.queries.util import T
 
     e = T(spark, sf_dir, "embeddings").select(
@@ -698,7 +700,10 @@ def test_stream_update_equals_full_save(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals_dir)
     )
-    hnsw_index_stream_update(base, arrivals, str(tmp_path / "land"), path)
+    land = str(tmp_path / "land")
+    serving_stream_update(
+        arrivals, hnsw_stream_maintenance_sink(base, land, path), land
+    )
     hnsw_index_save(e, full, n_partitions=8)
     assert _blob_rows(spark, path) == _blob_rows(spark, full)
 
@@ -751,12 +756,14 @@ def test_stream_update_with_auto_reshard_holds_growth_slo(
     """The complete daily-maintenance loop in one drain: with
     reshard_target_rows set, every batch's update is followed by a
     metadata-probe reshard, so the serving table never ends a batch with
-    a sub-index past trigger_ratio x target — and the final table is
-    bit-identical to a fresh save at its own stored partition count."""
+    a sub-index past RESHARD_TRIGGER_RATIO x target — and the final
+    table is bit-identical to a fresh save at its own stored partition
+    count."""
     from cinegraph_spark.operators.hnsw import (
         hnsw_index_save,
-        hnsw_index_stream_update,
+        hnsw_stream_maintenance_sink,
     )
+    from cinegraph_spark.operators.serving_io import serving_stream_update
     from cinegraph_spark.queries.util import T
 
     e = T(spark, sf_dir, "embeddings").select(
@@ -776,12 +783,13 @@ def test_stream_update_with_auto_reshard_holds_growth_slo(
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals_dir)
     )
-    hnsw_index_stream_update(
-        base,
+    land = str(tmp_path / "land")
+    serving_stream_update(
         arrivals,
-        str(tmp_path / "land"),
-        path,
-        reshard_target_rows=target,
+        hnsw_stream_maintenance_sink(
+            base, land, path, reshard_target_rows=target
+        ),
+        land,
     )
     final = spark.read.parquet(path)
     head = final.first()
@@ -866,8 +874,9 @@ def test_stream_update_resumes_from_checkpoint_as_noop(
     the serving table are byte-identical to the first run's."""
     from cinegraph_spark.operators.hnsw import (
         hnsw_index_save,
-        hnsw_index_stream_update,
+        hnsw_stream_maintenance_sink,
     )
+    from cinegraph_spark.operators.serving_io import serving_stream_update
     from cinegraph_spark.queries.util import T
 
     e = T(spark, sf_dir, "embeddings").select(
@@ -888,7 +897,9 @@ def test_stream_update_resumes_from_checkpoint_as_noop(
             .option("maxFilesPerTrigger", 1)
             .parquet(arrivals_dir)
         )
-        hnsw_index_stream_update(base, arrivals, land, path)
+        serving_stream_update(
+            arrivals, hnsw_stream_maintenance_sink(base, land, path), land
+        )
 
     drain()
     want = _blob_rows(spark, path)
@@ -1240,10 +1251,10 @@ def test_filtered_knn_exact_and_prunes_unadmissible_subindexes(
     poisoning every other partition's blob bytes); admissible-key type
     drift is refused; an empty admissible set returns zero rows."""
     from cinegraph_spark.operators.hnsw import (
-        _part_expr,
         hnsw_index_filtered_knn,
         hnsw_index_save,
     )
+    from cinegraph_spark.operators.maintenance import hash_part_expr
     from cinegraph_spark.queries.util import T
 
     e = T(spark, sf_dir, "embeddings").select(
@@ -1257,7 +1268,9 @@ def test_filtered_knn_exact_and_prunes_unadmissible_subindexes(
     # admissible = every id hashing into ONE partition of the saved table
     n_parts = spark.read.parquet(path).select("n_partitions").first()[0]
     assert n_parts >= 2  # the prune claim needs something to prune
-    with_part = e.withColumn("part_id", _part_expr(int(n_parts)))
+    with_part = e.withColumn(
+        "part_id", hash_part_expr(int(n_parts), "vec_id")
+    )
     admissible = with_part.filter(F.col("part_id") == 0).select("vec_id")
 
     want = sorted(

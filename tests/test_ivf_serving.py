@@ -370,21 +370,27 @@ def test_index_topk_layout_mode_equals_dataframe_mode_and_prunes(
 
 
 def _drain(spark, base, arrivals_dir, land, path, checkpoint=None):
-    from cinegraph_spark.operators.similarity import ivf_index_stream_update
+    from cinegraph_spark.operators.serving_io import serving_stream_update
+    from cinegraph_spark.operators.similarity import (
+        ivf_stream_maintenance_sink,
+    )
 
     arrivals = (
         spark.readStream.schema("vec_id long, label int, v array<double>")
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals_dir)
     )
-    ivf_index_stream_update(
-        base, arrivals, land, path, checkpoint_dir=checkpoint
+    serving_stream_update(
+        arrivals,
+        ivf_stream_maintenance_sink(base, land, path),
+        land,
+        checkpoint_dir=checkpoint,
     )
 
 
 def test_stream_update_equals_full_save(spark, sf_dir, tmp_path):
     """Draining the arrivals as a 4-micro-batch stream through
-    ivf_index_stream_update must leave the centroid table bit-identical
+    serving_stream_update must leave the centroid table bit-identical
     to a fresh full save of the final corpus, and the landing layout
     holding exactly the final corpus — the streaming form of the
     update-equals-rebuild contract, at the IVF tier."""

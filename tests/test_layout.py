@@ -310,6 +310,36 @@ def test_column_layout_upsert_touches_only_named_cells(spark, tmp_path):
     assert res["dropped_cells"] == [0]
     assert not os.path.exists(os.path.join(p, "label=0"))
 
+    # string cells whose names carry path metacharacters live under
+    # Hive-escaped directory names; emptying them must drop exactly those
+    s = str(tmp_path / "strcells")
+    cells = ["a=b/c", "x y%", "plain"]
+    column_layout_save(
+        spark.createDataFrame(
+            [(i, cells[i % 3]) for i in range(9)], "vec_id long, cell string"
+        ),
+        s,
+        "cell",
+    )
+    escaped = {"a=b/c": "cell=a%3Db%2Fc", "x y%": "cell=x y%25"}
+    assert all(os.path.isdir(os.path.join(s, d)) for d in escaped.values())
+    res = column_layout_upsert(
+        spark,
+        s,
+        spark.createDataFrame([], "vec_id long, cell string"),
+        "vec_id",
+        deletes=spark.createDataFrame(
+            [(i, cells[i % 3]) for i in range(9) if i % 3 != 2],
+            "vec_id long, cell string",
+        ),
+    )
+    assert sorted(res["dropped_cells"]) == sorted(escaped)
+    assert not any(
+        os.path.exists(os.path.join(s, d)) for d in escaped.values()
+    )
+    kept = [r["cell"] for r in layout_read(spark, s).collect()]
+    assert kept == ["plain"] * 3
+
 
 def test_column_layout_upsert_guards(spark, tmp_path):
     from cinegraph_spark.operators.maintenance import column_layout_upsert

@@ -528,6 +528,54 @@ def test_maintenance_pruned_read_is_partition_filter(spark, sf_dir, tmp_path):
     assert "ReadSchema: struct<vec_id:bigint,v:array<double>>" in plan
 
 
+def test_hash_tier_update_has_no_present_set_job(spark, sf_dir, tmp_path):
+    """A one-key layout-mode update of either hash-partitioned serving
+    tier learns which partitions it still populates from an Observation
+    on the publish write. A separate ``distinct().collect()`` over the
+    rebuilt rows costs two more jobs per call (9 for the HNSW blob
+    table, 8 for the PQ codes), so each update must stay at 7 and 6."""
+    from pyspark.sql import functions as F
+
+    from cinegraph_spark.operators.hnsw import (
+        hnsw_corpus_layout,
+        hnsw_index_save,
+        hnsw_index_update,
+    )
+    from cinegraph_spark.operators.similarity import (
+        pq_codes_save,
+        pq_codes_update,
+        pq_corpus_layout,
+        pq_train,
+    )
+    from cinegraph_spark.queries.util import T
+
+    e = T(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+    one = e.filter(F.col("vec_id") == 7).select("vec_id")
+    hnsw, hnsw_corpus = str(tmp_path / "hnsw"), str(tmp_path / "hnsw_c")
+    hnsw_index_save(e, hnsw, n_partitions=4)
+    hnsw_corpus_layout(e, hnsw_corpus, hnsw)
+    pq, pq_corpus = str(tmp_path / "pq"), str(tmp_path / "pq_c")
+    pq_codes_save(e, pq_train(e, m=8, k=16), pq, n_partitions=4)
+    pq_corpus_layout(e, pq_corpus, pq)
+
+    sc = spark.sparkContext
+    for group, update, most in (
+        ("hnsw-update", lambda: hnsw_index_update(hnsw_corpus, one, hnsw), 7),
+        ("pq-update", lambda: pq_codes_update(pq_corpus, one, pq), 6),
+    ):
+        sc.setJobGroup(group, group)
+        try:
+            update()
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(jobs) <= most, f"{group} launched {len(jobs)} jobs"
+
+
 def test_weighted_wor_is_map_only_take_ordered(q):
     """A-ES weighted sampling must be one map-only key projection plus
     TakeOrdered (per-partition heap of k) — no global sort, no shuffle of

@@ -105,8 +105,8 @@ def test_update_rewrites_only_touched_directories(spark, sf_dir, tmp_path):
     """The 100 TB contract: untouched partition directories' data files
     must not be opened, rewritten, or replaced — their paths and mtimes
     are identical before and after the update."""
+    from cinegraph_spark.operators.maintenance import hash_part_expr
     from cinegraph_spark.operators.similarity import (
-        _pq_part_expr,
         pq_codes_save,
         pq_codes_update,
     )
@@ -117,7 +117,7 @@ def test_update_rewrites_only_touched_directories(spark, sf_dir, tmp_path):
     pq_codes_save(e, books, path, n_partitions=4)
     one = e.filter(F.col("vec_id") == 7).select("vec_id")
     victim = e.filter(F.col("vec_id") == 7).select(
-        _pq_part_expr(4).alias("p")
+        hash_part_expr(4, "vec_id").alias("p")
     ).first()["p"]
 
     def snapshot(skip_part):
@@ -142,8 +142,8 @@ def test_update_rewrites_only_touched_directories(spark, sf_dir, tmp_path):
 
 
 def test_update_drops_emptied_partition_dir(spark, sf_dir, tmp_path):
+    from cinegraph_spark.operators.maintenance import hash_part_expr
     from cinegraph_spark.operators.similarity import (
-        _pq_part_expr,
         pq_codes_save,
         pq_codes_update,
     )
@@ -152,7 +152,9 @@ def test_update_drops_emptied_partition_dir(spark, sf_dir, tmp_path):
     books = _books(spark, sf_dir)
     path = str(tmp_path / "pq")
     pq_codes_save(e, books, path, n_partitions=4)
-    doomed = e.withColumn("p", _pq_part_expr(4)).filter(F.col("p") == 2)
+    doomed = e.withColumn("p", hash_part_expr(4, "vec_id")).filter(
+        F.col("p") == 2
+    )
     survivors = e.join(doomed.select("vec_id"), "vec_id", "left_anti")
     stats = pq_codes_update(survivors, doomed.select("vec_id"), path)
     assert stats["dropped_partitions"] == [2]
@@ -426,13 +428,14 @@ def test_filtered_search_prefilter_semantics(spark, sf_dir, tmp_path):
 
 def test_stream_update_equals_full_save(spark, sf_dir, tmp_path):
     """Draining the arrivals as a 4-micro-batch stream through
-    pq_index_stream_update must leave the codes table bit-identical to a
+    serving_stream_update must leave the codes table bit-identical to a
     fresh full save of the final corpus (frozen codebooks, deterministic
     encode) — the streaming form of the update-equals-rebuild contract,
     at the PQ tier."""
+    from cinegraph_spark.operators.serving_io import serving_stream_update
     from cinegraph_spark.operators.similarity import (
         pq_codes_save,
-        pq_index_stream_update,
+        pq_stream_maintenance_sink,
     )
 
     e = _corpus(spark, sf_dir)
@@ -448,7 +451,10 @@ def test_stream_update_equals_full_save(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals_dir)
     )
-    pq_index_stream_update(base, arrivals, str(tmp_path / "land"), path)
+    land = str(tmp_path / "land")
+    serving_stream_update(
+        arrivals, pq_stream_maintenance_sink(base, land, path), land
+    )
     pq_codes_save(e, books, full, n_partitions=4)
     assert _codes_rows(spark, path) == _codes_rows(spark, full)
 
