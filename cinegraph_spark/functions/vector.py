@@ -15,8 +15,22 @@ stage.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def array_lit(values: list, ddl: str) -> Column:
+    """A nested list of doubles as ONE JVM literal of type ``ddl`` (e.g.
+    ``array<array<double>>``): the list travels as a JSON string and
+    ``from_json`` parses it, which the optimizer folds to a constant. On
+    pyspark 4.1 ``F.lit(list)`` is ``array(*[lit(x) ...])``, one py4j
+    round trip per element (a 16×256×4 PQ codebook took ~10 s to build
+    that way); this costs a handful of calls at any size. JSON carries
+    each double as its shortest round-trip repr, so the values are
+    bit-identical."""
+    return F.from_json(F.lit(json.dumps(values)), ddl)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -35,15 +49,19 @@ def norm(a: Column) -> Column:
     )
 
 
+def sqdist(a: Column, b: Column) -> Column:
+    """Squared euclidean distance ``sum((a_i-b_i)^2)``, summed left to
+    right from 0.0."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def euclidean(a: Column, b: Column) -> Column:
     """V2 — ``sqrt(sum((a_i-b_i)^2))`` (``graph_creator.py:351``)."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    return F.sqrt(sqdist(a, b))
 
 
 def cosine(a: Column, b: Column) -> Column:

@@ -1175,12 +1175,6 @@ def vacuum_generations(
     }
 
 
-#: ``availableNow`` deadline of every maintenance drain: past it the
-#: drain stops the stream and raises instead of returning while the
-#: stream is still writing
-DRAIN_TIMEOUT_S = 120
-
-
 def drain_available_now(
     spark, arrivals, sink, checkpoint_dir: str, what: str
 ) -> None:
@@ -1191,11 +1185,14 @@ def drain_available_now(
     session clock so no analysis-time expression bakes a hostile zone;
     bounded shuffle so a plain driver session's 200 partitions don't
     fragment the micro-batch jobs), and raise after
-    :data:`DRAIN_TIMEOUT_S` rather than returning with the stream still
-    writing. Extracted r15 — three tiers carried verbatim copies of this
-    loop, and the drain contract must not drift per tier."""
+    `streaming/windows.py::default_drain_timeout_s` rather than returning
+    with the stream still writing. Extracted r15 — three tiers carried
+    verbatim copies of this loop, and the drain contract must not drift
+    per tier."""
     from cinegraph_spark.session import bounded_shuffle, scoped_confs
+    from cinegraph_spark.streaming.windows import default_drain_timeout_s
 
+    timeout_s = default_drain_timeout_s()
     with scoped_confs(
         spark, **{"spark.sql.session.timeZone": "UTC"}
     ), bounded_shuffle(spark, 8):
@@ -1206,11 +1203,9 @@ def drain_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        if not q.awaitTermination(timeout_s):
             q.stop()
-            raise TimeoutError(
-                f"{what} did not finish in {DRAIN_TIMEOUT_S}s"
-            )
+            raise TimeoutError(f"{what} did not finish in {timeout_s}s")
 
 
 def serving_stream_update(

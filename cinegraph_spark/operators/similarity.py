@@ -281,59 +281,63 @@ def _arr_len(e: DataFrame, v: str) -> int:
     return len(row[0])
 
 
-def _lit_codebook(book: list[list[float]]):
-    """k × dsub nested array literal — ONE ``F.lit`` over the nested list
-    (Spark 4 builds the array literal in a single py4j call) instead of
-    the k×dsub ``F.lit``/``F.array`` tree: the per-element form cost
-    ~2,000 py4j round-trips (~1.3 s of driver time) every time a PQ
-    encode/ADC expression was constructed (r18 guide-§1 profiling). The
-    literal's values and type (array<array<double>>) are identical."""
-    return F.lit([[float(x) for x in c] for c in book])
+#: The PQ state's ``books`` table (one row per subspace). Declared, never
+#: inferred: the table identity lives in these columns, and inference
+#: would cost a parquet-footer job on every read and maintenance call.
+_PQ_BOOKS_DDL = (
+    "j int, codebook array<array<double>>, n_partitions int, "
+    "key_ddl string, codes_schema string"
+)
+
+
+def _pq_per_centroid(v_col, codebooks: list[list[list[float]]], fn):
+    """``m × k`` table ``fn(sub_j, C[j][c])`` of the vector's j-th
+    sub-vector against every centroid of subspace j, read from ONE literal
+    of the whole codebook — the expression tree has the same size for any
+    m and k."""
+    m, dsub = len(codebooks), len(codebooks[0][0])
+    return F.zip_with(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda j: F.slice(v_col, j * dsub + 1, dsub),
+        ),
+        V.array_lit(codebooks, "array<array<array<double>>>"),
+        lambda sv, book: F.transform(book, lambda c: fn(sv, c)),
+    )
 
 
 def pq_encode_col(v_col, codebooks: list[list[list[float]]]):
     """PQ codes as ONE map-only JVM column expression → ``array<int>``
-    (length m): per subspace, the index of the nearest codebook centroid.
-    No Python, no shuffle — at 100 TB the encode pass is a codegen scan
+    (length m): per subspace, the index of the nearest codebook centroid
+    (squared distance summed left to right, first index on ties). No
+    Python, no shuffle — at 100 TB the encode pass is a codegen scan
     writing 8 bytes/vector instead of 512."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-
-    def code_for(j):
-        sv = F.slice(v_col, j * dsub + 1, dsub)
-        dists = F.transform(
-            _lit_codebook(codebooks[j]),
-            lambda c: F.aggregate(
-                F.zip_with(sv, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    return F.array(*[code_for(j) for j in range(m)])
+    return F.transform(
+        _pq_per_centroid(v_col, codebooks, V.sqdist),
+        lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"),
+    )
 
 
-def _pq_adc_expr(codebooks: list[list[list[float]]], code_col):
-    """ADC (asymmetric distance computation) dot-product approximation as
-    one JVM column expression: ``Σ_j q_sub_j · C[j][code_j]`` against the
-    broadcast single-row query's ``qv`` column. Shared by the
-    encode-per-query and serve-from-codes-table search paths."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
+def _pq_lut(codebooks: list[list[list[float]]], qv_col):
+    """ADC lookup table (asymmetric distance computation; Jégou, Douze &
+    Schmid, TPAMI 2011): ``lut[j][c] = q_sub_j · C[j][c]``, ``m × k``
+    dot products computed ONCE per query row, never per corpus row."""
+    return _pq_per_centroid(qv_col, codebooks, V.dot)
 
-    def adc_term(j):
-        qsub = F.slice(F.col("qv"), j * dsub + 1, dsub)
-        cent = F.element_at(
-            _lit_codebook(codebooks[j]), F.element_at(code_col, j + 1) + 1
-        )
-        return F.aggregate(
-            F.zip_with(qsub, cent, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
 
-    return sum(adc_term(j) for j in range(m))
+def _pq_adc(lut_col, code_col):
+    """ADC dot-product approximation of one code: ``Σ_j lut[j][code_j]``,
+    m lookups summed left to right from 0.0."""
+    return F.aggregate(
+        F.zip_with(lut_col, code_col, lambda row, c: row[c]),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _pq_query(q: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
+    """The broadcast query row: ``qv`` plus its ADC table ``_lut``."""
+    return q.select("qv", _pq_lut(codebooks, F.col("qv")).alias("_lut"))
 
 
 def pq_topk(
@@ -356,10 +360,14 @@ def pq_topk(
     comes back in the re-rank, which touches only ``rerank`` full vectors.
     """
     enc = e.withColumn("_codes", pq_encode_col(F.col(v), codebooks))
-    adc = _pq_adc_expr(codebooks, F.col("_codes"))
     cand = (
-        enc.crossJoin(F.broadcast(q))
-        .select("vec_id", v, "qv", adc.alias("adc_score"))
+        enc.crossJoin(F.broadcast(_pq_query(q, codebooks)))
+        .select(
+            "vec_id",
+            v,
+            "qv",
+            _pq_adc(F.col("_lut"), F.col("_codes")).alias("adc_score"),
+        )
         .orderBy(F.desc("adc_score"), F.asc("vec_id"))
         .limit(rerank)
     )
@@ -841,8 +849,7 @@ def pq_codes_save(
             (j, book, int(n_partitions), key_ddl, codes_schema)
             for j, book in enumerate(codebooks)
         ],
-        "j int, codebook array<array<double>>, n_partitions int, "
-        "key_ddl string, codes_schema string",
+        _PQ_BOOKS_DDL,
     )
     codes = e.select(
         "vec_id",
@@ -868,8 +875,8 @@ def _pq_read_state(spark, path: str, generation: int | None = None):
     resolved = resolve_generation(spark, path, generation)
     path = path if resolved is None else resolved
     ensure_live(spark, path)
-    books_rows = sorted(
-        spark.read.parquet(path + "/books").collect(), key=lambda r: r["j"]
+    books_rows = (
+        spark.read.schema(_PQ_BOOKS_DDL).parquet(path + "/books").collect()
     )
     if not books_rows:
         raise ValueError(
@@ -878,6 +885,19 @@ def _pq_read_state(spark, path: str, generation: int | None = None):
             "pq_codes_save (codebooks cannot be silently retrained: new "
             "books change every stored code's meaning)"
         )
+    # the declared schema reads a column the files lack as NULL, and
+    # pq_codes_save never writes a NULL: refuse by name instead
+    missing = [
+        c for c in books_rows[0].__fields__
+        if any(r[c] is None for r in books_rows)
+    ]
+    if missing:
+        raise ValueError(
+            f"PQ serving state at {path}: books table column(s) "
+            f"{', '.join(missing)} missing or NULL — the state was not "
+            "written by pq_codes_save; rebuild it"
+        )
+    books_rows.sort(key=lambda r: r["j"])
     codebooks = [
         [[float(x) for x in c] for c in r["codebook"]] for r in books_rows
     ]
@@ -1043,18 +1063,21 @@ def pq_index_topk(
         codes = codes.join(
             F.broadcast(admissible.select("vec_id")), "vec_id", "left_semi"
         )
+    # the candidates carry qv, so the DataFrame-mode re-rank needs no
+    # second broadcast of the query (a separate plan: one more job)
     cand = (
-        codes.crossJoin(F.broadcast(q))
+        codes.crossJoin(F.broadcast(_pq_query(q, codebooks)))
         .select(
             "vec_id",
             "part_id",
-            _pq_adc_expr(codebooks, F.col("code")).alias("adc_score"),
+            "qv",
+            _pq_adc(F.col("_lut"), F.col("code")).alias("adc_score"),
         )
         .orderBy(F.desc("adc_score"), F.asc("vec_id"))
         .limit(rerank)
     )
     if corpus_path is None:
-        fetched = e.join(F.broadcast(cand.select("vec_id")), "vec_id")
+        fetched = e.join(F.broadcast(cand.select("vec_id", "qv")), "vec_id")
     else:
         # the candidates' part_ids must address this layout's directories
         check_hash_corpus(
@@ -1063,12 +1086,13 @@ def pq_index_topk(
         rows = cand.select("vec_id", "part_id").collect()
         ids = [r["vec_id"] for r in rows]
         parts = sorted({int(r["part_id"]) for r in rows})
-        fetched = layout_pruned_read(spark, corpus_path, parts).filter(
-            F.col("vec_id").isin(ids) if ids else F.lit(False)
+        fetched = (
+            layout_pruned_read(spark, corpus_path, parts)
+            .filter(F.col("vec_id").isin(ids) if ids else F.lit(False))
+            .crossJoin(F.broadcast(q))
         )
     return (
-        fetched.crossJoin(F.broadcast(q))
-        .select(
+        fetched.select(
             "vec_id",
             F.round(V.cosine(F.col(v), F.col("qv")), 6).alias("cos_sim"),
         )

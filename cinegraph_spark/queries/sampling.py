@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from cinegraph_spark.functions import vector as V
 from cinegraph_spark.queries import register
 from cinegraph_spark.queries.neardup_common import SHINGLE_CTES
 from cinegraph_spark.queries.util import T, SCRAMBLE_SQL as _SCRAMBLE_SQL, scramble as _scramble
@@ -517,10 +518,9 @@ def sample_kcenter_coreset(spark, sf_dir):
     )
 
     def dist2_to(center: list) -> F.Column:
-        # one nested-list literal (single py4j call) — the per-element
-        # F.lit tree cost one py4j round-trip per dimension per k-center
-        # pass (r18)
-        c = F.lit([float(x) for x in center])
+        # one JSON-parsed literal: F.lit(list) costs one py4j round trip
+        # per dimension, on every k-center pass
+        c = V.array_lit([float(x) for x in center], "array<double>")
         dot_vc = F.aggregate(
             F.zip_with(F.col("v"), c, lambda x, y: x * y),
             F.lit(0.0),

@@ -28,9 +28,11 @@ from cinegraph_spark.schemas import EVENTS
 
 
 def default_drain_timeout_s() -> int:
-    """Default availableNow-drain timeout: 120s fits every fixture the
-    registered queries run on (sf<=0.1); CINEGRAPH_DRAIN_TIMEOUT_S raises
-    it for bigger corpora (the r17 sf1 trend run needed ~300s for the
+    """Timeout of every availableNow drain — the streaming queries here
+    and the serving maintenance drains
+    (`operators/serving_io.py::drain_available_now`): 120s fits every
+    fixture the registered queries run on (sf<=0.1);
+    CINEGRAPH_DRAIN_TIMEOUT_S raises it for bigger corpora (the r17 sf1 trend run needed ~300s for the
     million-event stream-stream joins — a data-volume fact, not a plan
     regression; the timeout exists to catch HANGS, so it must scale with
     the input the caller feeds in)."""

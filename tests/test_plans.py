@@ -576,6 +576,54 @@ def test_hash_tier_update_has_no_present_set_job(spark, sf_dir, tmp_path):
         assert len(jobs) <= most, f"{group} launched {len(jobs)} jobs"
 
 
+def test_pq_index_read_job_ceiling(spark, sf_dir, tmp_path):
+    """A warm pq_index_topk read, plan build plus collect, runs at most 4
+    jobs, and 5 with an admissible filter (one more broadcast). The books
+    table is read under its declared schema, and one broadcast query row,
+    qv with its ADC lookup table, serves both the ADC cut and the
+    re-rank: inferring the books schema costs one more job per read, and
+    a second broadcast of the query one more again."""
+    from pyspark.sql import functions as F
+
+    from cinegraph_spark.operators.similarity import (
+        pq_codes_save,
+        pq_index_topk,
+        pq_train,
+    )
+    from cinegraph_spark.queries.util import T
+
+    e = T(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        "label",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+    corpus = e.filter(F.col("vec_id") != 0).select("vec_id", "v")
+    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    adm = e.filter(F.col("label") == 2).select("vec_id")
+    path = str(tmp_path / "pq")
+    pq_codes_save(corpus, pq_train(e, m=8, k=16), path, n_partitions=4)
+
+    sc = spark.sparkContext
+    for group, read, most in (
+        ("pq-read", lambda: pq_index_topk(corpus, q, path, rerank=40), 4),
+        (
+            "pq-read-filtered",
+            lambda: pq_index_topk(corpus, q, path, rerank=512, admissible=adm),
+            5,
+        ),
+    ):
+        read().collect()  # warm
+        sc.setJobGroup(group, group)
+        try:
+            rows = read().collect()
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rows) == 10
+        assert len(jobs) <= most, f"{group} launched {len(jobs)} jobs"
+
+
 def test_weighted_wor_is_map_only_take_ordered(q):
     """A-ES weighted sampling must be one map-only key projection plus
     TakeOrdered (per-partition heap of k) — no global sort, no shuffle of

@@ -66,6 +66,96 @@ def test_save_then_search_equals_encode_per_query(spark, sf_dir, tmp_path):
     assert [tuple(r) for r in served] == [tuple(r) for r in direct]
 
 
+def _random_books(m, k, dsub):
+    import numpy as np
+
+    return np.random.default_rng(0).standard_normal((m, k, dsub)).tolist()
+
+
+def _expr_nodes(spark, col) -> int:
+    """Node count of a column's analyzed expression tree (one line per
+    node in Catalyst's treeString)."""
+    df = spark.createDataFrame(
+        [], "v array<double>, qv array<double>, code array<int>"
+    )
+    plan = df.select(col.alias("x"))._jdf.queryExecution().analyzed()
+    return len(plan.expressions().head().treeString().splitlines())
+
+
+def test_pq_expression_size_independent_of_m_and_k(spark):
+    """The encode and ADC expressions read the codebook as ONE literal, so
+    their trees are the same size at 8×16 and at 16×256 on one dim: the
+    driver's build cost of a PQ read or encode does not grow with m×k."""
+    from cinegraph_spark.operators.similarity import (
+        _pq_adc,
+        _pq_lut,
+        pq_encode_col,
+    )
+
+    sizes = {}
+    for m, k in ((8, 16), (16, 256)):
+        books = _random_books(m, k, 64 // m)
+        sizes[m, k] = (
+            _expr_nodes(spark, pq_encode_col(F.col("v"), books)),
+            _expr_nodes(
+                spark, _pq_adc(_pq_lut(books, F.col("qv")), F.col("code"))
+            ),
+        )
+    assert sizes[8, 16] == sizes[16, 256], sizes
+
+
+@pytest.mark.parametrize("shape", ["8x16", "16x256"])
+def test_codes_and_adc_equal_numpy_reference(spark, sf_dir, shape):
+    """Codes are the nearest centroid by squared distance summed left to
+    right, first index on ties; ADC scores are the m lookups summed left
+    to right from 0.0 — both bit-equal to a NumPy reference that keeps the
+    same summation order (8×16: the fixture's trained books; 16×256:
+    seeded random books)."""
+    import numpy as np
+
+    from cinegraph_spark.operators.similarity import (
+        _pq_adc,
+        _pq_query,
+        pq_encode_col,
+    )
+
+    e = _corpus(spark, sf_dir)
+    if shape == "8x16":
+        books = _books(spark, sf_dir)
+    else:
+        books = _random_books(16, 256, 4)
+    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    rows = (
+        e.select("vec_id", "v", pq_encode_col(F.col("v"), books).alias("code"))
+        .crossJoin(_pq_query(q, books))
+        .select(
+            "vec_id", "v", "qv", "code",
+            _pq_adc(F.col("_lut"), F.col("code")).alias("adc"),
+        )
+        .orderBy("vec_id")
+        .collect()
+    )
+    X = np.array([r["v"] for r in rows])
+    qv = np.array(rows[0]["qv"])
+    B = np.array(books)
+    m, k, dsub = B.shape
+    codes = np.empty((len(X), m), dtype=np.int64)
+    lut = np.empty((m, k))
+    for j in range(m):
+        d, t = np.zeros((len(X), k)), np.zeros(k)
+        for i in range(dsub):
+            diff = X[:, j * dsub + i, None] - B[None, j, :, i]
+            d = d + diff * diff
+            t = t + qv[j * dsub + i] * B[j, :, i]
+        codes[:, j] = d.argmin(1)  # first index on ties
+        lut[j] = t
+    adc = np.zeros(len(X))
+    for j in range(m):
+        adc = adc + lut[j, codes[:, j]]
+    assert [list(r["code"]) for r in rows] == codes.tolist()
+    assert [r["adc"] for r in rows] == adc.tolist()
+
+
 def test_pq_save_refuses_null_vec_id(spark, sf_dir, tmp_path):
     """hash(NULL) would store codes in a real partition directory that
     pq_codes_update (which refuses NULL delta keys) could never address
@@ -199,6 +289,30 @@ def test_update_refuses_empty_books(spark, sf_dir, tmp_path):
     ).write.parquet(path + "/books")
     with pytest.raises(ValueError, match="empty books table"):
         pq_codes_update(e, e.select("vec_id").limit(1), path)
+
+
+def test_read_refuses_books_missing_column(spark, sf_dir, tmp_path):
+    """The books table is read under its declared schema, which would
+    read a column the files lack as NULL; every reader must refuse such a
+    state by the column's name instead."""
+    from cinegraph_spark.operators.similarity import (
+        pq_codes_update,
+        pq_index_topk,
+    )
+
+    e = _corpus(spark, sf_dir)
+    path = str(tmp_path / "pq")
+    os.makedirs(path + "/codes", exist_ok=True)
+    spark.createDataFrame(
+        [(0, [[0.0] * 64], 2, "bigint")],
+        "j int, codebook array<array<double>>, n_partitions int, "
+        "key_ddl string",
+    ).write.parquet(path + "/books")
+    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    with pytest.raises(ValueError, match="codes_schema"):
+        pq_codes_update(e, e.select("vec_id").limit(1), path)
+    with pytest.raises(ValueError, match="codes_schema"):
+        pq_index_topk(e, q, path)
 
 
 def test_books_and_codes_swap_as_one_unit(spark, sf_dir, tmp_path):
