@@ -466,14 +466,20 @@ def hnsw_partitioned_knn(
                 out["cos_sim"].append(cs)
         yield pd.DataFrame(out)
 
+    return _rerank(
+        e.repartition(n_partitions, "vec_id").mapInPandas(
+            local_search, "qid long, nid long, cos_sim double"
+        ),
+        k,
+    )
+
+
+def _rerank(cands: DataFrame, k: int) -> DataFrame:
+    """The global top-k of a candidate union (qid, nid, cos_sim): one tiny
+    window ranking (cos_sim DESC, nid ASC) per query."""
     from pyspark.sql import Window
 
-    cands = e.repartition(n_partitions, "vec_id").mapInPandas(
-        local_search, "qid long, nid long, cos_sim double"
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("cos_sim"), F.asc("nid")
-    )
+    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
     return (
         cands.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
@@ -492,6 +498,41 @@ _INDEX_SCHEMA = (
     "part_id int, n_partitions int, m int, efc int, key_ddl string, "
     "n_vectors long, blob binary"
 )
+
+#: The identity columns every serving-table row carries.
+_IDENTITY = ("part_id", "n_partitions", "m", "efc", "key_ddl")
+
+
+def _hnsw_table(spark, path: str, generation: int | None = None):
+    """Open a :func:`hnsw_index_save` serving table
+    (`serving_io.open_state`) and read it under the declared
+    :data:`_INDEX_SCHEMA`: no schema-inference job, and a vacuous save
+    (a partitioned write of zero rows leaves no data file at all) reads
+    as zero rows. Returns ``(state_dir, table)``."""
+    from cinegraph_spark.operators.serving_io import open_state
+
+    path = open_state(spark, path, generation)
+    return path, spark.read.schema(_INDEX_SCHEMA).parquet(path)
+
+
+def _hnsw_state(spark, path: str, generation: int | None = None):
+    """:func:`_hnsw_table` plus the table's identity, read by one
+    column-pruned head read. Returns ``(state_dir, table, head)``;
+    ``head`` is None for a vacuous table. The declared schema reads a
+    column the files lack as NULL, and :func:`hnsw_index_save` never
+    writes a NULL identity: such a table (e.g. saved before the
+    key-type guard existed) is refused by column name."""
+    path, idx = _hnsw_table(spark, path, generation)
+    head = idx.select(*_IDENTITY).first()
+    if head is not None:
+        missing = [c for c in _IDENTITY if head[c] is None]
+        if missing:
+            raise ValueError(
+                f"HNSW serving table at {path}: identity column(s) "
+                f"{', '.join(missing)} missing or NULL; rebuild it once "
+                "with hnsw_index_save"
+            )
+    return path, idx, head
 
 
 def _build_subindex_rows(
@@ -619,28 +660,13 @@ def hnsw_index_save(
     # full-table carry-over swap paid a corpus-sized WRITE per delta
     # (the same amplification class as the r12 scan finding, one level
     # up). Save/reshard are legitimately full rebuilds and keep the
-    # atomic sibling-swap.
+    # atomic sibling-swap. A zero-row save writes no data file at all;
+    # readers open the table under its declared schema (_hnsw_table),
+    # where it reads as zero rows.
     from cinegraph_spark.operators.serving_io import publish_dir
 
     with publish_dir(spark, path, keep_generations) as tmp:
         built.write.partitionBy("part_id").parquet(tmp)
-        jpath = spark._jvm.org.apache.hadoop.fs.Path
-        jtmp = jpath(tmp)
-        fs = jtmp.getFileSystem(spark._jsc.hadoopConfiguration())
-        has_dirs = any(
-            st.getPath().getName().startswith("part_id=")
-            for st in fs.listStatus(jtmp)
-        )
-        if not has_dirs:
-            # vacuous index: a partitioned write of zero rows leaves no
-            # data file at all, which would break every schema-inferring
-            # reader of the degrade paths — write the empty table FLAT
-            # so it stays readable (the update/reshard paths detect the
-            # empty head and degrade before any directory semantics
-            # matter)
-            local_df(spark, [], _INDEX_SCHEMA).write.mode(
-                "overwrite"
-            ).parquet(tmp)
 
 
 def hnsw_corpus_layout(e: DataFrame, corpus_path: str, path: str) -> None:
@@ -657,12 +683,8 @@ def hnsw_corpus_layout(e: DataFrame, corpus_path: str, path: str) -> None:
     `operators/maintenance.py::hash_layout_upsert`. Refuses a corpus
     whose vec_id type drifted from the stored key_ddl (the directories
     would disagree with the index's hash layout)."""
-    from cinegraph_spark.operators.serving_io import resolve_generation
-
     spark = e.sparkSession
-    resolved = resolve_generation(spark, path)
-    path = path if resolved is None else resolved
-    head = spark.read.parquet(path).select("n_partitions", "key_ddl").first()
+    _, _, head = _hnsw_state(spark, path)
     if head is None:
         # vacuous index (saved over a zero-row corpus): no partition
         # identity to mirror — lay out at modulus 1 so the maintenance
@@ -758,29 +780,10 @@ def hnsw_index_update(
     from cinegraph_spark.session import ensure_shipped
 
     ensure_shipped(spark)
-    from cinegraph_spark.operators.serving_io import (
-        ensure_live,
-        resolve_generation,
-    )
-
     # a versioned root resolves to its CURRENT generation: in-place
     # maintenance mutates the live generation; retained older ones stay
     # immutable snapshots (same contract as hash_layout_upsert)
-    resolved = resolve_generation(spark, path)
-    path = path if resolved is None else resolved
-    ensure_live(spark, path)
-    old = spark.read.parquet(path)
-    # both identity columns, not just part_id: a pre-key_ddl table (saved
-    # before the key-type guard existed) would otherwise die on the select
-    # below with a raw AnalysisException instead of the named rebuild error
-    # (r12 ADVICE)
-    if "part_id" not in old.columns or "key_ddl" not in old.columns:
-        raise ValueError(
-            "hnsw_index_update needs a serving table carrying its full "
-            "identity (part_id and key_ddl columns); rebuild it once with "
-            "hnsw_index_save"
-        )
-    head = old.select("n_partitions", "m", "efc", "key_ddl").first()
+    path, _, head = _hnsw_state(spark, path)
     if head is None:
         # vacuous index: no rows means no recoverable partition identity —
         # degrade to a fresh full build of the current corpus, forwarding
@@ -812,8 +815,7 @@ def hnsw_index_update(
     # (part_id as a data column, no part_id=* directories) has nothing
     # to overwrite — dynamic overwrite would write directories NEXT TO
     # the stale flat files and the table would serve both. Refuse with
-    # the named rebuild error (vacuous tables were handled above: the
-    # flat empty fallback never reaches here).
+    # the named rebuild error (vacuous tables were handled above).
     jdir = spark._jvm.org.apache.hadoop.fs.Path(path)
     hfs = jdir.getFileSystem(spark._jsc.hadoopConfiguration())
     if not any(
@@ -952,7 +954,7 @@ def hnsw_stream_maintenance_sink(
         # table per call — metadata-scale; re-lays the corpus only when
         # the index's partition count actually drifted (reshard, or an
         # update that degraded to a full save)
-        head = spark.read.parquet(path).select("n_partitions").first()
+        _, _, head = _hnsw_state(spark, path)
         if head is not None and int(head["n_partitions"]) != int(
             meta["n_partitions"]
         ):
@@ -1017,52 +1019,80 @@ def hnsw_index_reshard(
     Reference parity: the pgvector index the reference keeps in Postgres
     (``db/models/embedding.py:15-17``) stays balanced under growth via
     the database's own page splits; this is the lake-native equivalent."""
-    from cinegraph_spark.operators.serving_io import resolve_generation
-
     spark = e.sparkSession
-    resolved = resolve_generation(spark, path)
-    path = path if resolved is None else resolved
-    old = spark.read.parquet(path)
-    head = old.select("n_partitions", "m", "efc").first()
-    if head is None:
-        hnsw_index_save(
-            e, path, target_rows_per_subindex=target_rows_per_subindex
+    path, old, head = _hnsw_state(spark, path)
+    old_n, max_rows, params = None, 0, {}
+    if head is not None:
+        old_n = int(head["n_partitions"])
+        max_rows = int(
+            old.agg(F.max("n_vectors").alias("mx")).first()["mx"] or 0
         )
-        new = spark.read.parquet(path).select("n_partitions").first()
-        return {
-            "resharded": True,
-            "n_partitions": int(new["n_partitions"]) if new else None,
-            "previous_n_partitions": None,
-            "max_subindex_rows": 0,
-        }
-    old_n = int(head["n_partitions"])
-    max_rows = int(
-        old.agg(F.max("n_vectors").alias("mx")).first()["mx"] or 0
-    )
-    if (
-        not force
-        and max_rows <= RESHARD_TRIGGER_RATIO * target_rows_per_subindex
-    ):
-        return {
-            "resharded": False,
-            "n_partitions": old_n,
-            "previous_n_partitions": old_n,
-            "max_subindex_rows": max_rows,
-        }
+        if (
+            not force
+            and max_rows <= RESHARD_TRIGGER_RATIO * target_rows_per_subindex
+        ):
+            return {
+                "resharded": False,
+                "n_partitions": old_n,
+                "previous_n_partitions": old_n,
+                "max_subindex_rows": max_rows,
+            }
+        params = {"M": int(head["m"]), "ef_construction": int(head["efc"])}
     hnsw_index_save(
-        e,
-        path,
-        M=int(head["m"]),
-        ef_construction=int(head["efc"]),
-        target_rows_per_subindex=target_rows_per_subindex,
+        e, path, target_rows_per_subindex=target_rows_per_subindex, **params
     )
-    new = spark.read.parquet(path).select("n_partitions").first()
+    _, _, new = _hnsw_state(spark, path)
     return {
         "resharded": True,
         "n_partitions": int(new["n_partitions"]) if new else None,
         "previous_n_partitions": old_n,
         "max_subindex_rows": max_rows,
     }
+
+
+def _served_knn(
+    spark, queries: DataFrame, k: int, table: DataFrame, open_blob
+) -> DataFrame:
+    """The search both served reads share: collect the query batch
+    (sorted by vec_id; an empty batch returns the empty result before any
+    index job), broadcast it, open each row of ``table`` inside one
+    ``mapInPandas`` pass, and re-rank the candidate union with one tiny
+    window. ``open_blob(*row)`` takes a row's columns (the pickled blob
+    first) and returns that sub-index's per-query scorer
+    ``(qid, qv) -> [(cos_sim, nid), ...]`` — its local top-(k+1),
+    self-match excluded — or None when the row can score nothing."""
+    qrows = sorted(
+        queries.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
+    )
+    if not qrows:
+        return local_df(spark, [], _RESULT_SCHEMA)
+    from cinegraph_spark.session import ensure_shipped
+
+    ensure_shipped(spark)  # the mapInPandas closure references this module
+    bq = spark.sparkContext.broadcast(
+        [(int(r["vec_id"]), [float(x) for x in r["v"]]) for r in qrows]
+    )
+    cols = table.columns
+
+    def search(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            for row in zip(*(pdf[c] for c in cols)):
+                score = open_blob(*row)
+                if score is None:
+                    continue
+                out = {"qid": [], "nid": [], "cos_sim": []}
+                for qid, qv in bq.value:
+                    for cs, nid in score(qid, qv):
+                        out["qid"].append(qid)
+                        out["nid"].append(nid)
+                        out["cos_sim"].append(cs)
+                yield pd.DataFrame(out)
+
+    return _rerank(
+        table.mapInPandas(search, "qid long, nid long, cos_sim double"), k
+    )
 
 
 def hnsw_index_knn(
@@ -1085,9 +1115,7 @@ def hnsw_index_knn(
 
     ``generation`` pins a ``keep_generations`` save to a retained
     generation (rollback/debugging read); default is the newest
-    committed one. Versioned roots resolve to a stable per-generation
-    directory — no swap window exists there, so ensure_live is a cheap
-    no-op.
+    committed one (`serving_io.open_state`).
 
     Erasure contract (r16): the blobs EMBED their vectors and this
     search never touches the corpus layout, so a key erased from the
@@ -1096,57 +1124,20 @@ def hnsw_index_knn(
     HNSW tier is effective at the next maintenance, not at the delete
     (unlike PQ/IVF, whose candidate fetch reads the DV-masked layout).
     Pinned cross-tier in tests/test_deletion_vectors.py."""
-    from cinegraph_spark.operators.serving_io import (
-        ensure_live,
-        resolve_generation,
-    )
+    _, idx = _hnsw_table(spark, path, generation)
 
-    resolved = resolve_generation(spark, path, generation)
-    path = path if resolved is None else resolved
-    ensure_live(spark, path)
-    qrows = sorted(
-        queries.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
-    )
-    if not qrows:
-        return local_df(spark, [], _RESULT_SCHEMA)
-    from cinegraph_spark.session import ensure_shipped
-
-    ensure_shipped(spark)
-    bq = spark.sparkContext.broadcast(
-        [(int(r["vec_id"]), [float(x) for x in r["v"]]) for r in qrows]
-    )
-
-    def search(batches):
+    def open_blob(blob):
         import pickle
 
-        import pandas as pd
+        index = pickle.loads(bytes(blob))
+        if "Xn" not in index:  # slim blob: rebuild, bit-identical
+            index["Xn"] = _normalize(index["X"])
+        pos = {vid: i for i, vid in enumerate(index["ids"])}
+        return lambda qid, qv: _score_query(
+            index, pos, qid, qv, k, ef, round_to, k + 1
+        )
 
-        for pdf in batches:
-            for blob in pdf["blob"]:
-                index = pickle.loads(bytes(blob))
-                if "Xn" not in index:  # slim blob: rebuild, bit-identical
-                    index["Xn"] = _normalize(index["X"])
-                pos = {vid: i for i, vid in enumerate(index["ids"])}
-                out = {"qid": [], "nid": [], "cos_sim": []}
-                for qid, qv in bq.value:
-                    for cs, nid in _score_query(
-                        index, pos, qid, qv, k, ef, round_to, k + 1
-                    ):
-                        out["qid"].append(qid)
-                        out["nid"].append(nid)
-                        out["cos_sim"].append(cs)
-                yield pd.DataFrame(out)
-
-    from pyspark.sql import Window
-
-    idx = spark.read.parquet(path).select("blob")
-    cands = idx.mapInPandas(search, "qid long, nid long, cos_sim double")
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-    return (
-        cands.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cos_sim", "rnk")
-    )
+    return _served_knn(spark, queries, k, idx.select("blob"), open_blob)
 
 
 def hnsw_index_filtered_knn(
@@ -1190,24 +1181,7 @@ def hnsw_index_filtered_knn(
     type drifted from the stored key_ddl (the partition hash differs by
     type). Output (qid, nid, cos_sim, rnk), self-matches excluded —
     identical contract to :func:`hnsw_index_knn`."""
-    from cinegraph_spark.operators.serving_io import (
-        ensure_live,
-        resolve_generation,
-    )
-    from cinegraph_spark.session import ensure_shipped
-
-    resolved = resolve_generation(spark, path, generation)
-    path = path if resolved is None else resolved
-    ensure_live(spark, path)
-    ensure_shipped(spark)
-    idx = spark.read.parquet(path)
-    if "part_id" not in idx.columns or "key_ddl" not in idx.columns:
-        raise ValueError(
-            "hnsw_index_filtered_knn needs a serving table carrying its "
-            "full identity (part_id and key_ddl columns); rebuild it "
-            "once with hnsw_index_save"
-        )
-    head = idx.select("n_partitions", "key_ddl").first()
+    _, idx, head = _hnsw_state(spark, path, generation)
     if head is None:  # vacuous index: nothing is admissible
         return local_df(spark, [], _RESULT_SCHEMA)
     adm_ddl = admissible.schema["vec_id"].dataType.simpleString()
@@ -1218,14 +1192,6 @@ def hnsw_index_filtered_knn(
             f"{head['key_ddl']}; the partition hash differs by type — "
             "cast the admissible keys back"
         )
-    qrows = sorted(
-        queries.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
-    )
-    if not qrows:
-        return local_df(spark, [], _RESULT_SCHEMA)
-    bq = spark.sparkContext.broadcast(
-        [(int(r["vec_id"]), [float(x) for x in r["v"]]) for r in qrows]
-    )
     n = int(head["n_partitions"])
     adm_lists = (
         admissible.select("vec_id")
@@ -1237,60 +1203,42 @@ def hnsw_index_filtered_knn(
         F.broadcast(adm_lists), "part_id"
     )
 
-    def search(batches):
+    def open_blob(blob, adm):
         import pickle
 
-        import pandas as pd
+        # no Xn rebuild here (unlike hnsw_index_knn's traversal):
+        # filtered scoring only reads index["X"] via _seq_cos, so
+        # normalizing would be O(rows x dim) waste per blob (r14 ADVICE)
+        index = pickle.loads(bytes(blob))
+        pos = {vid: i for i, vid in enumerate(index["ids"])}
+        rows_idx = [pos[a] for a in adm if a in pos]
+        if not rows_idx:
+            return None
+        ids_adm = [int(index["ids"][i]) for i in rows_idx]
+        X = index["X"]
 
-        for pdf in batches:
-            for blob, adm in zip(pdf["blob"], pdf["adm_ids"]):
-                # no Xn rebuild here (unlike hnsw_index_knn's traversal):
-                # filtered scoring only reads index["X"] via _seq_cos, so
-                # normalizing would be O(rows x dim) waste per blob (r14
-                # ADVICE)
-                index = pickle.loads(bytes(blob))
-                pos = {vid: i for i, vid in enumerate(index["ids"])}
-                rows_idx = [pos[a] for a in adm if a in pos]
-                if not rows_idx:
-                    continue
-                ids_adm = [int(index["ids"][i]) for i in rows_idx]
-                X = index["X"]
-                out = {"qid": [], "nid": [], "cos_sim": []}
-                for qid, qv in bq.value:
-                    # EVERY admissible row is rescored with the
-                    # sequential fold — no numpy pre-cut: a fixed pad
-                    # ranked by unrounded BLAS sims could drop a low-nid
-                    # candidate that the (rounded cos DESC, nid ASC)
-                    # order keeps when >pad near-ties crowd the boundary
-                    # (r14 review), which would break the unconditional
-                    # exactness this operator promises. The cost is the
-                    # |admissible| exact scores the docstring already
-                    # budgets.
-                    scored = sorted(
-                        (
-                            (
-                                round(
-                                    _seq_cos(qv, X[rows_idx[j]]), round_to
-                                ),
-                                ids_adm[j],
-                            )
-                            for j in range(len(rows_idx))
-                            if ids_adm[j] != qid
-                        ),
-                        key=lambda t: (-t[0], t[1]),
-                    )[: k + 1]
-                    for cs, nid in scored:
-                        out["qid"].append(qid)
-                        out["nid"].append(nid)
-                        out["cos_sim"].append(cs)
-                yield pd.DataFrame(out)
+        def score(qid, qv):
+            # EVERY admissible row is rescored with the sequential fold —
+            # no numpy pre-cut: a fixed pad ranked by unrounded BLAS sims
+            # could drop a low-nid candidate that the (rounded cos DESC,
+            # nid ASC) order keeps when >pad near-ties crowd the boundary
+            # (r14 review), which would break the unconditional exactness
+            # this operator promises. The cost is the |admissible| exact
+            # scores the docstring already budgets.
+            return sorted(
+                (
+                    (
+                        round(_seq_cos(qv, X[rows_idx[j]]), round_to),
+                        ids_adm[j],
+                    )
+                    for j in range(len(rows_idx))
+                    if ids_adm[j] != qid
+                ),
+                key=lambda t: (-t[0], t[1]),
+            )[: k + 1]
 
-    from pyspark.sql import Window
+        return score
 
-    cands = joined.mapInPandas(search, "qid long, nid long, cos_sim double")
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("nid"))
-    return (
-        cands.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cos_sim", "rnk")
+    return _served_knn(
+        spark, queries, k, joined.select("blob", "adm_ids"), open_blob
     )

@@ -176,9 +176,9 @@ def merge_agg_state(
     metadata-scale against the fact table.
     Returns ``{"applied": bool, "n_groups": int}``."""
     from cinegraph_spark.operators.serving_io import (
+        _GENS_DIR,
+        open_state,
         publish_dir,
-        recover_swap,
-        resolve_generation,
     )
 
     if expected_base is not None and keep_generations is None:
@@ -226,19 +226,26 @@ def merge_agg_state(
             "measure (did an evolve_agg_state widen the view without "
             "the merge call gaining the new column?)"
         )
+    # opening heals a crashed swap of a legacy root: treating its parked
+    # state as "empty" would rebuild the view from this delta alone,
+    # silently losing every prior batch
     try:
-        resolved = resolve_generation(spark, path)
+        state_dir = open_state(spark, path)
     except IOError:
         # generation directories exist but none carries a commit marker:
         # every prior versioned refresh crashed mid-populate. For the
         # WRITER the retry IS the fix (the reader-side IOError points
         # here); no state was ever committed, so this is still the first
         # refresh — but only a versioned retry may proceed (an
-        # unversioned call on a versioned root is the mode slip below).
-        if keep_generations is None:
+        # unversioned call on a versioned root is the mode slip below;
+        # an unhealable legacy swap is no generation debris).
+        if keep_generations is None or not _dir_exists(
+            spark, path + "/" + _GENS_DIR
+        ):
             raise
-        resolved = None
-    if resolved is not None and keep_generations is None:
+        state_dir = path
+    versioned = state_dir != path
+    if versioned and keep_generations is None:
         raise ValueError(
             f"merge_agg_state: the view at {path} is versioned "
             "(generations retained); refreshing it without "
@@ -246,7 +253,6 @@ def merge_agg_state(
             "every retained snapshot — pass keep_generations on every "
             "refresh of a versioned view"
         )
-    state_dir = resolved if resolved is not None else path
     agg_dir, ledger_dir = state_dir + "/agg", state_dir + "/applied"
 
     def _read_ledger():
@@ -257,7 +263,7 @@ def merge_agg_state(
 
     if _dir_exists(spark, ledger_dir):
         applied = _read_ledger()
-    elif resolved is not None:
+    elif versioned:
         # a COMMITTED generation must contain its ledger — a marker
         # without an applied table is corruption, never "fresh"
         raise IOError(
@@ -265,17 +271,9 @@ def merge_agg_state(
             "no applied ledger — corrupt state; inspect the generation "
             "directory"
         )
-    # a missing path is NOT necessarily a first refresh: the swap's
-    # between-renames crash window leaves the committed state parked
-    # under __old__/__swap__ siblings, and treating that as "empty"
-    # would rebuild the view from this delta alone — silently losing
-    # every prior batch. Try automatic recovery first; only a path
-    # with no parked copies is genuinely fresh.
-    elif recover_swap(spark, path)["action"] != "none":
-        applied = _read_ledger()
     else:
         applied = None  # first refresh: no state yet
-    if applied is not None and resolved is None and keep_generations is not None:
+    if applied is not None and not versioned and keep_generations is not None:
         # the opposite mode slip: versioning an existing legacy view in
         # place would leave the stale root files shadowing the new _gens
         # (generation_swap_dir's own guard would refuse at write time,
@@ -453,19 +451,12 @@ def read_agg_state(
     refresh commits the merged state and its ledger as one immutable
     generation directory that no later refresh touches. Default is the
     newest committed generation (or the root itself for a legacy
-    unversioned view, where ``generation`` must be None). The read-side
-    crash-window healing rides `serving_io.ensure_live` for legacy roots;
-    versioned roots have no swap window (marker commit)."""
-    from cinegraph_spark.operators.serving_io import (
-        ensure_live,
-        resolve_generation,
-    )
+    unversioned view, where ``generation`` must be None); the state is
+    opened with `serving_io.open_state`, which heals a legacy root's
+    crashed swap."""
+    from cinegraph_spark.operators.serving_io import open_state
 
-    resolved = resolve_generation(spark, path, generation)
-    if resolved is None:
-        ensure_live(spark, path)
-        return spark.read.parquet(path + "/agg")
-    return spark.read.parquet(resolved + "/agg")
+    return spark.read.parquet(open_state(spark, path, generation) + "/agg")
 
 
 def evolve_agg_state(
@@ -516,9 +507,9 @@ def evolve_agg_state(
     same versioned-or-not-for-life rule as :func:`merge_agg_state`.
     Returns ``{"added": [...], "from_batch_id": N, "n_groups": int}``."""
     from cinegraph_spark.operators.serving_io import (
+        _GENS_DIR,
+        open_state,
         publish_dir,
-        recover_swap,
-        resolve_generation,
     )
 
     new_sums = dict(new_sums or {})
@@ -529,32 +520,34 @@ def evolve_agg_state(
             "new_hist_maps are both empty)"
         )
     try:
-        resolved = resolve_generation(spark, path)
+        state_dir = open_state(spark, path)
     except IOError:
+        # an unhealable legacy swap is no generation debris
+        if not _dir_exists(spark, path + "/" + _GENS_DIR):
+            raise
         # generation debris but no committed refresh: no live view exists
         raise ValueError(
             f"evolve_agg_state: no committed refresh exists at {path} — "
             "evolution widens a LIVE state; re-run the crashed first "
             "merge_agg_state refresh instead"
         )
-    if resolved is not None and keep_generations is None:
+    versioned = state_dir != path
+    if versioned and keep_generations is None:
         raise ValueError(
             f"evolve_agg_state: the view at {path} is versioned; pass "
             "keep_generations on every evolve of a versioned view (the "
             "root swap would destroy every retained snapshot)"
         )
-    state_dir = resolved if resolved is not None else path
     agg_dir, ledger_dir, evo_dir = (
         state_dir + "/agg", state_dir + "/applied", state_dir + "/evolution",
     )
     if not _dir_exists(spark, ledger_dir):
-        if recover_swap(spark, path)["action"] == "none":
-            raise ValueError(
-                f"evolve_agg_state: no view exists at {path} — evolution "
-                "widens a LIVE state; create the view with its first "
-                "merge_agg_state refresh instead"
-            )
-    if resolved is None and keep_generations is not None:
+        raise ValueError(
+            f"evolve_agg_state: no view exists at {path} — evolution "
+            "widens a LIVE state; create the view with its first "
+            "merge_agg_state refresh instead"
+        )
+    if not versioned and keep_generations is not None:
         # checked only AFTER view existence: a nonexistent view must get
         # the no-view error above, not a claim that it is 'legacy'
         # (r15 review)

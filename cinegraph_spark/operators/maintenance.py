@@ -65,6 +65,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cinegraph_spark.operators.serving_io import open_state
+
 
 def dataset_stats(path: str, spark: SparkSession | None = None) -> dict:
     """File census of a parquet dataset directory: number of data files,
@@ -265,22 +267,6 @@ def _read_json(spark: SparkSession, path: str) -> dict:
     return json.loads(txt)
 
 
-def _resolve_state_root(
-    spark: SparkSession, path: str, generation: int | None = None
-) -> str:
-    """Map a state root to the directory a reader/maintainer should
-    operate on: the pinned (or newest committed) generation directory
-    when ``path`` is a versioned root (saved with ``keep_generations``),
-    else ``path`` itself (the legacy single-directory layout). The
-    resolved directory is stable — generation directories are never
-    renamed — so a plan built against it survives any number of later
-    saves (r14 verdict task 4)."""
-    from cinegraph_spark.operators.serving_io import resolve_generation
-
-    resolved = resolve_generation(spark, path, generation)
-    return path if resolved is None else resolved
-
-
 def layout_meta(
     spark: SparkSession, path: str, generation: int | None = None
 ) -> dict:
@@ -288,25 +274,18 @@ def layout_meta(
     error when the directory is not a clustered layout — callers treat
     that as 'lay the corpus out first', never as 'scan it anyway'.
 
-    Every layout reader resolves its manifest here, so this is also the
-    read-path crash-window guard (`serving_io.ensure_live`): a layout
+    The state is opened with `serving_io.open_state`, so a layout
     parked under ``__old__``/``__swap__`` siblings by a crashed swap is
     restored before the manifest probe instead of reading as
     'not a clustered layout'. ``generation`` pins a versioned layout to
-    a retained generation (versioned roots have no swap window — commit
-    is a marker create, never a rename — so ensure_live is a cheap
-    no-op on the resolved directory)."""
-    path = _resolve_state_root(spark, path, generation)
-    return _layout_meta_at(spark, path)
+    a retained generation."""
+    return _layout_meta_at(spark, open_state(spark, path, generation))
 
 
 def _layout_meta_at(spark: SparkSession, path: str) -> dict:
-    """:func:`layout_meta` minus the generation resolution — for callers
-    that already resolved the state root (avoids paying the _gens
+    """:func:`layout_meta` for a state directory the caller has already
+    opened with `serving_io.open_state` (avoids paying the _gens
     listStatus twice per read; r15 review)."""
-    from cinegraph_spark.operators.serving_io import ensure_live
-
-    ensure_live(spark, path)
     fs, jp = _hadoop_fs(spark, path.rstrip("/") + "/" + LAYOUT_MANIFEST)
     if not fs.exists(jp):
         raise FileNotFoundError(
@@ -586,7 +565,7 @@ def layout_read(
     stable even across a concurrent re-save (r14 verdict task 4).
     Keys masked by a deletion-vector sidecar (:func:`layout_dv_delete`)
     are anti-joined out."""
-    path = _resolve_state_root(spark, path, generation)
+    path = open_state(spark, path, generation)
     return _layout_read_at(spark, path, _layout_meta_at(spark, path))
 
 
@@ -615,7 +594,7 @@ def layout_pruned_read(
     maintenance scan-proportional to the change."""
     from pyspark.sql import functions as F
 
-    path = _resolve_state_root(spark, path, generation)
+    path = open_state(spark, path, generation)
     meta = _layout_meta_at(spark, path)
     raw = _layout_raw(spark, path, meta)
     parts = list(parts)
@@ -676,7 +655,7 @@ def hash_layout_upsert(
     # full saves, which is the rollback contract (generations snapshot
     # saves, not upserts; take a fresh keep_generations save to cut a
     # new snapshot after a maintenance burst)
-    path = _resolve_state_root(spark, path)
+    path = open_state(spark, path)
     meta = _layout_meta_at(spark, path)
     if meta["kind"] != "hash_key":
         raise ValueError(
@@ -865,7 +844,7 @@ def column_layout_upsert(
     # versioned roots resolve to the CURRENT generation (column layouts
     # are saved unversioned today, but the resolve is a no-op then and
     # keeps the write addressed correctly if that ever changes)
-    path = _resolve_state_root(spark, path)
+    path = open_state(spark, path)
     meta = _layout_meta_at(spark, path)
     if meta["kind"] != "column":
         raise ValueError(
@@ -1227,7 +1206,7 @@ def layout_dv_delete(
     """
     from pyspark.sql import functions as F
 
-    path = _resolve_state_root(spark, path)
+    path = open_state(spark, path)
     meta = _layout_meta_at(spark, path)
     if meta["kind"] != "hash_key":
         raise ValueError(
@@ -1328,7 +1307,7 @@ def layout_dv_compact(
     applied first)."""
     from pyspark.sql import functions as F
 
-    path = _resolve_state_root(spark, path)
+    path = open_state(spark, path)
     meta = _layout_meta_at(spark, path)
     if meta["kind"] != "hash_key":
         raise ValueError(
@@ -1408,8 +1387,8 @@ def layout_generation_diff(
     # meta probe and the read — three separate layout_read/layout_meta
     # calls would pay the _gens listing + manifest read triple per call
     # (r15 review; same economy as _layout_meta_at itself)
-    pa = _resolve_state_root(spark, root, int(from_generation))
-    pb = _resolve_state_root(spark, root, int(to_generation))
+    pa = open_state(spark, root, int(from_generation))
+    pb = open_state(spark, root, int(to_generation))
     ma, mb = _layout_meta_at(spark, pa), _layout_meta_at(spark, pb)
     if mb["kind"] != "hash_key":
         raise ValueError(

@@ -5,7 +5,9 @@ state that query jobs read between maintenance runs. Spark's
 ``mode("overwrite")`` deletes the old table BEFORE the new one is
 computed, so a driver/executor death mid-write destroys the index with
 no recovery (r11 ADVICE on ``operators/hnsw.py``). Every maintenance
-write therefore goes through :func:`atomic_swap_write` instead.
+write therefore goes through :func:`atomic_swap_write` instead, and
+every reader and maintainer opens the state through :func:`open_state`,
+which resolves its generation and heals a crashed swap.
 
 Retention contract for pinned readers (r18): a reader that resolved
 generation g is guaranteed g's files only while g stays retained; a
@@ -142,7 +144,7 @@ def atomic_swap_dir(spark, path: str):
 
 
 def _swap_in_new(fs, src, dest, tmp: str, path: str, aside: str) -> None:
-    """Second rename of the swap, race-aware. With :func:`ensure_live` on
+    """Second rename of the swap, race-aware. With :func:`open_state` on
     every serving READ path, a reader landing in the writer's
     between-renames window may run :func:`recover_swap` and complete the
     swap on the writer's behalf (the completion marker is already in the
@@ -205,21 +207,37 @@ def atomic_swap_write(df: DataFrame, path: str) -> None:
         df.write.parquet(tmp)
 
 
-def ensure_live(spark, path: str) -> None:
-    """Read-path guard: every serving-state LOADER calls this before its
-    first read so a between-renames crash window (live path missing,
-    committed state parked under sibling names) heals on the next query
-    instead of taking serving down until a maintenance run or a human
-    intervenes (r13 verdict task 2). Cost in the steady state is one
-    ``fs.exists`` — :func:`recover_swap` touches nothing when ``path``
-    exists. Missing path with no parked copies is NOT an error here; the
-    loader's own read raises its usual path-not-found. Rides the same
-    single-writer contract as the swap itself: a reader that lands
-    exactly inside a LIVE writer's two-rename window may perform the
-    second rename on the writer's behalf — the writer's own rename then
-    fails with the state already live and intact, which the swap's
-    error text documents as recoverable-by-inspection."""
+def open_state(spark, path: str, generation: int | None = None) -> str:
+    """Open a serving state root: the ONE path every reader and
+    maintainer takes to the directory it plans against.
+
+    - A versioned root (saved with ``keep_generations``) resolves to the
+      pinned ``generation`` or the newest committed one
+      (:func:`resolve_generation`). A generation directory is never
+      renamed, so it has no swap window to heal, and a plan built
+      against it survives any number of later saves.
+    - An unversioned root is returned as is, after the read-path heal:
+      a between-renames crash window (live path missing, committed state
+      parked under sibling names) is restored by :func:`recover_swap`,
+      so serving heals on the next query instead of staying down until a
+      maintenance run or a human intervenes. The steady-state cost is one
+      ``fs.exists``. A missing path with no parked copies is not an
+      error here; the caller's own read raises its usual path-not-found.
+      The heal rides the swap's single-writer contract: a reader that
+      lands exactly inside a LIVE writer's two-rename window may perform
+      the second rename on the writer's behalf — the writer's own rename
+      then fails with the state already live and intact, which the
+      swap's error text documents as recoverable-by-inspection.
+
+    Raises what :func:`resolve_generation` raises: ``ValueError`` for a
+    ``generation`` that is not retained (or given for an unversioned
+    root), ``IOError`` for generation directories none of which is
+    committed."""
+    resolved = resolve_generation(spark, path, generation)
+    if resolved is not None:
+        return resolved
     recover_swap(spark, path)
+    return path
 
 
 def recover_swap(spark, path: str) -> dict:
@@ -238,7 +256,7 @@ def recover_swap(spark, path: str) -> dict:
     r13 ADVICE), and more than one parked token — two interleaved
     crashed swaps, no well-defined winner — raises for manual
     intervention. Concurrent recoverers (every serving read path calls
-    :func:`ensure_live`) may race the restore rename; the loser detects
+    :func:`open_state`) may race the restore rename; the loser detects
     the goal state holding and reports ``restored_by_race`` instead of
     failing the query. Returns ``{"action": "none" | "restored_new" |
     "restored_old" | "restored_by_race", "token": ...}``."""
@@ -274,7 +292,7 @@ def recover_swap(spark, path: str) -> dict:
 
     def _rename_or_detect_race(src: str) -> bool:
         """True if we restored; False if another recoverer beat us to it.
-        With ensure_live on every serving READ path, concurrent readers
+        With open_state on every serving READ path, concurrent readers
         of a crashed table legitimately race this rename — the loser's
         rename fails with the goal state already holding, which must
         read as healed, not as an error (r14 review)."""
@@ -832,7 +850,7 @@ def generation_swap_dir(
     What this buys over the sibling swap, and what it costs:
 
     - No crash window at all: the live state is never renamed or deleted
-      on the publish path, so there is nothing for ``ensure_live`` to
+      on the publish path, so there is nothing for :func:`open_state` to
       heal — a crash mid-populate just leaves an uncommitted directory
       (inspection material, same policy as the swap's orphan
       ``__swap__``), invisible to every reader.
@@ -1258,12 +1276,9 @@ def recover_landing_layout(spark, land_dir: str, what: str) -> bool:
     )
 
     try:
-        layout_meta(spark, land_dir)
+        layout_meta(spark, land_dir)  # opens the state: heals a crashed swap
         return True
     except FileNotFoundError:
-        if recover_swap(spark, land_dir)["action"] != "none":
-            layout_meta(spark, land_dir)
-            return True
         fs, jp = _hadoop_fs(spark, land_dir)
         if fs.exists(jp) and list(fs.listStatus(jp)):
             raise ValueError(

@@ -516,18 +516,13 @@ def ivf_centroids_update(
         cell_ddl = lmeta["part_ddl"]
     else:
         cell_ddl = e.schema[label].dataType.simpleString()
-    from cinegraph_spark.operators.serving_io import (
-        ensure_live,
-        resolve_generation,
-    )
+    from cinegraph_spark.operators.serving_io import open_state
 
     # a versioned root resolves to its CURRENT generation: in-place
     # maintenance mutates the live generation; retained older ones stay
     # immutable snapshots of their own saves (same contract as
     # hash_layout_upsert)
-    resolved = resolve_generation(spark, path)
-    path = path if resolved is None else resolved
-    ensure_live(spark, path)
+    path = open_state(spark, path)
     old = spark.read.parquet(path)
     if old.isEmpty():
         # vacuous table (e.g. built over a zero-row corpus): degrade to a
@@ -645,17 +640,11 @@ def ivf_index_topk(
         layout_meta,
         layout_pruned_read,
     )
-    from cinegraph_spark.operators.serving_io import (
-        ensure_live,
-        resolve_generation,
-    )
+    from cinegraph_spark.operators.serving_io import open_state
 
     corpus_path = e if isinstance(e, str) else None
     spark = q.sparkSession if corpus_path is not None else e.sparkSession
-    resolved = resolve_generation(spark, path, generation)
-    path = path if resolved is None else resolved
-    ensure_live(spark, path)
-    cents = spark.read.parquet(path).select(
+    cents = spark.read.parquet(open_state(spark, path, generation)).select(
         label, F.col("centroid").alias("cv")
     )
     if cell_filter is not None:
@@ -867,14 +856,9 @@ def _pq_read_state(spark, path: str, generation: int | None = None):
     ``keep_generations``) that is the pinned or newest committed
     generation's own directory, and every caller must address
     ``/books`` / ``/codes`` under IT, not under the root."""
-    from cinegraph_spark.operators.serving_io import (
-        ensure_live,
-        resolve_generation,
-    )
+    from cinegraph_spark.operators.serving_io import open_state
 
-    resolved = resolve_generation(spark, path, generation)
-    path = path if resolved is None else resolved
-    ensure_live(spark, path)
+    path = open_state(spark, path, generation)
     books_rows = (
         spark.read.schema(_PQ_BOOKS_DDL).parquet(path + "/books").collect()
     )

@@ -76,18 +76,3 @@ def salted_join(
         )
     ).withColumn("_salt", F.col("_salt").cast(left_s.schema["_salt"].dataType))
     return left_s.join(right_s, on + ["_salt"], how).drop("_salt")
-
-
-def top_hot_keys(df: DataFrame, keys: list[str], n: int = 10) -> DataFrame:
-    """Diagnostic: the ``n`` heaviest key groups and their share of the
-    table — the thing to check before choosing salting vs broadcast vs AQE.
-    One aggregation on the key (itself skewed, but count-only partials make
-    it cheap)."""
-    total = df.count()
-    return (
-        df.groupBy(*keys)
-        .agg(F.count("*").alias("n_rows"))
-        .withColumn("share", F.round(F.col("n_rows") / F.lit(total), 6))
-        .orderBy(F.desc("n_rows"), *keys)
-        .limit(n)
-    )

@@ -13,7 +13,13 @@ from pyspark.sql import Window
 
 from cinegraph_spark.operators.asof import asof_join
 from cinegraph_spark.queries import register
-from cinegraph_spark.queries.util import T, r4, tstr
+from cinegraph_spark.queries.util import (
+    _ASOF_PURCHASE_CLICK_ORACLE,
+    _RETENTION_COHORTS_ORACLE,
+    T,
+    r4,
+    tstr,
+)
 
 
 @register(
@@ -180,18 +186,7 @@ def events_dedup_latest_per_user_type(spark, sf_dir):
 
 @register(
     "events_asof_purchase_click",
-    """
-    SELECT p.event_id, p.user_id,
-           strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-           c.event_id AS asof_click_id,
-           c.value    AS asof_click_value
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id AND c.ts <= p.ts
-    QUALIFY row_number() OVER (PARTITION BY p.event_id
-                               ORDER BY c.ts DESC NULLS LAST,
-                                        c.event_id DESC NULLS LAST) = 1
-    """,
+    _ASOF_PURCHASE_CLICK_ORACLE,
     tags=("events", "asof"),
 )
 def events_asof_purchase_click(spark, sf_dir):
@@ -579,22 +574,7 @@ def events_funnel_view_click_purchase(spark, sf_dir):
 
 @register(
     "stream_retention_cohorts",
-    """
-    WITH first_seen AS (
-      SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-      FROM events GROUP BY user_id
-    ),
-    activity AS (
-      SELECT DISTINCT e.user_id, f.cohort_week,
-             CAST(date_diff('day', f.cohort_week,
-                            date_trunc('week', e.ts)) / 7 AS BIGINT)
-               AS week_offset
-      FROM events e JOIN first_seen f USING (user_id)
-    )
-    SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
-           week_offset, count(*) AS n_users
-    FROM activity GROUP BY 1, 2
-    """,
+    _RETENTION_COHORTS_ORACLE,
     tags=("streaming", "stateful", "retention", "cohort"),
 )
 def stream_retention_cohorts(spark, sf_dir):

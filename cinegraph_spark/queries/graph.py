@@ -133,9 +133,9 @@ def graph_copurchase_triangles(spark, sf_dir):
     )
 
 
-@register(
-    "graph_cc_neardup_clusters",
-    f"""
+#: Connected components of the exact-Jaccard (>= 0.6) near-duplicate pair
+#: graph: both component algorithms must produce these clusters.
+_NEARDUP_CLUSTERS_ORACLE = f"""
     WITH RECURSIVE {SHINGLE_CTES},
     pairs AS (
       SELECT id_a, id_b FROM common
@@ -158,7 +158,12 @@ def graph_copurchase_triangles(spark, sf_dir):
            array_to_string(list(CAST(doc_id AS VARCHAR) ORDER BY doc_id), ',')
              AS member_ids
     FROM comp GROUP BY component
-    """,
+    """
+
+
+@register(
+    "graph_cc_neardup_clusters",
+    _NEARDUP_CLUSTERS_ORACLE,
     tags=("graph", "cc", "dedup"),
 )
 def graph_cc_neardup_clusters(spark, sf_dir):
@@ -180,30 +185,7 @@ def graph_cc_neardup_clusters(spark, sf_dir):
 
 @register(
     "graph_cc_star_neardup_clusters",
-    f"""
-    WITH RECURSIVE {SHINGLE_CTES},
-    pairs AS (
-      SELECT id_a, id_b FROM common
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-      WHERE n_common * 1.0 / (sa.n_sh + sb.n_sh - n_common) >= 0.6
-    ),
-    nodes AS (SELECT DISTINCT id FROM
-              (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs)),
-    edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    reach(src, dst) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    ),
-    comp AS (SELECT src AS doc_id, min(dst) AS component FROM reach GROUP BY src)
-    SELECT component,
-           count(*) AS n_docs,
-           array_to_string(list(CAST(doc_id AS VARCHAR) ORDER BY doc_id), ',')
-             AS member_ids
-    FROM comp GROUP BY component
-    """,
+    _NEARDUP_CLUSTERS_ORACLE,
     tags=("graph", "cc", "dedup", "star"),
 )
 def graph_cc_star_neardup_clusters(spark, sf_dir):

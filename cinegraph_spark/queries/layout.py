@@ -386,15 +386,21 @@ def layout_dv_delete_read(spark, sf_dir):
     return masked.unionByName(_agg("compacted"))
 
 
-@register(
-    "layout_occ_commit_retry",
-    """
+#: Per-language document count, character total and id checksum of the
+#: documents corpus: every rewrite path (compaction, an OCC-retried
+#: commit, a stream-ingested compaction) must keep each row unchanged.
+_COMPACT_STATS_ORACLE = """
     SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS total_chars,
            CAST(sum(doc_id) AS BIGINT) AS id_checksum
     FROM documents
     GROUP BY lang
-    """,
+    """
+
+
+@register(
+    "layout_occ_commit_retry",
+    _COMPACT_STATS_ORACLE,
     tags=("layout", "maintenance", "occ", "concurrency"),
 )
 def layout_occ_commit_retry(spark, sf_dir):
@@ -689,13 +695,7 @@ def layout_write_expectations(spark, sf_dir):
 
 @register(
     "layout_compact_small_files_stats",
-    """
-    SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars,
-           CAST(sum(doc_id) AS BIGINT) AS id_checksum
-    FROM documents
-    GROUP BY lang
-    """,
+    _COMPACT_STATS_ORACLE,
     tags=("layout", "maintenance", "compaction"),
 )
 def layout_compact_small_files_stats(spark, sf_dir):
@@ -741,13 +741,7 @@ def layout_compact_small_files_stats(spark, sf_dir):
 
 @register(
     "pipeline_stream_ingest_compact",
-    """
-    SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars,
-           CAST(sum(doc_id) AS BIGINT) AS id_checksum
-    FROM documents
-    GROUP BY lang
-    """,
+    _COMPACT_STATS_ORACLE,
     tags=("pipeline", "streaming", "maintenance", "compaction",
           "llm-pipeline"),
 )

@@ -26,9 +26,9 @@ from cinegraph_spark.queries import register
 from cinegraph_spark.queries.util import T, r4
 
 
-@register(
-    "udf_pandas_scalar_net_revenue",
-    """
+#: Net revenue per return flag: the pandas scalar UDF and the Arrow map
+#: forms share one result contract.
+_NET_REVENUE_ORACLE = """
     SELECT l_returnflag,
            count(*) AS n_items,
            round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)
@@ -36,7 +36,12 @@ from cinegraph_spark.queries.util import T, r4
     FROM lineitem
     WHERE l_shipdate <= DATE '1998-09-02'
     GROUP BY l_returnflag
-    """,
+    """
+
+
+@register(
+    "udf_pandas_scalar_net_revenue",
+    _NET_REVENUE_ORACLE,
     tags=("udf", "pandas-udf", "scalar"),
 )
 def udf_pandas_scalar_net_revenue(spark, sf_dir):
@@ -137,15 +142,7 @@ def udf_pandas_grouped_agg_gini(spark, sf_dir):
 
 @register(
     "udf_arrow_map_net_revenue",
-    """
-    SELECT l_returnflag,
-           count(*) AS n_items,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)
-             AS net_revenue
-    FROM lineitem
-    WHERE l_shipdate <= DATE '1998-09-02'
-    GROUP BY l_returnflag
-    """,
+    _NET_REVENUE_ORACLE,
     tags=("udf", "arrow", "mapInArrow"),
 )
 def udf_arrow_map_net_revenue(spark, sf_dir):

@@ -23,6 +23,43 @@ ROUND_DECIMALS = 4
 SCRAMBLE_SQL = "(doc_id % 100003) * 2654435761 % 1000"
 
 
+#: Each purchase with its most recent preceding click (as-of join): the
+#: JVM (events) and the cogrouped-pandas (analytics) forms share one result
+#: contract.
+_ASOF_PURCHASE_CLICK_ORACLE = """
+    SELECT p.event_id, p.user_id,
+           strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
+           c.event_id AS asof_click_id,
+           c.value    AS asof_click_value
+    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+    LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      ON p.user_id = c.user_id AND c.ts <= p.ts
+    QUALIFY row_number() OVER (PARTITION BY p.event_id
+                               ORDER BY c.ts DESC NULLS LAST,
+                                        c.event_id DESC NULLS LAST) = 1
+    """
+
+
+#: Weekly retention cohorts: the batch (analytics) and the streaming
+#: (events) forms share one result contract.
+_RETENTION_COHORTS_ORACLE = """
+    WITH first_seen AS (
+      SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
+      FROM events GROUP BY user_id
+    ),
+    activity AS (
+      SELECT DISTINCT e.user_id, f.cohort_week,
+             CAST(date_diff('day', f.cohort_week,
+                            date_trunc('week', e.ts)) / 7 AS BIGINT)
+               AS week_offset
+      FROM events e JOIN first_seen f USING (user_id)
+    )
+    SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
+           week_offset, count(*) AS n_users
+    FROM activity GROUP BY 1, 2
+    """
+
+
 def scramble(col: Column) -> Column:
     """Spark twin of :data:`SCRAMBLE_SQL`."""
     return (col % 100003) * F.lit(2654435761) % 1000

@@ -91,9 +91,10 @@ def vec_cosine_topk_to_query(spark, sf_dir):
     )
 
 
-@register(
-    "vec_knn_per_query",
-    f"""
+#: Exact cosine top-3 neighbours (self excluded) of every vector with
+#: vec_id < 10, ranked (cos_sim DESC, nid): the contract of the brute-force
+#: k-NN query and of every HNSW tier that must hash-match it.
+_KNN_TOP3_ORACLE = f"""
     WITH e AS (SELECT vec_id, {_DV} AS v FROM embeddings),
     q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
     scored AS (
@@ -108,7 +109,12 @@ def vec_cosine_topk_to_query(spark, sf_dir):
                                        ORDER BY cos_sim DESC, nid) AS rnk
           FROM scored)
     WHERE rnk <= 3
-    """,
+    """
+
+
+@register(
+    "vec_knn_per_query",
+    _KNN_TOP3_ORACLE,
     tags=("vector", "knn", "similarity"),
 )
 def vec_knn_per_query(spark, sf_dir):
@@ -474,22 +480,7 @@ def vec_ann_pq_topk(spark, sf_dir):
 
 @register(
     "vec_ann_hnsw_knn",
-    f"""
-    WITH e AS (SELECT vec_id, {_DV} AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-    scored AS (
-      SELECT qid, vec_id AS nid,
-             round(list_dot_product(v, qv)
-                   / (sqrt(list_sum(list_transform(v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(qv, x -> x * x)))), 6) AS cos_sim
-      FROM e, q WHERE vec_id <> qid
-    )
-    SELECT qid, nid, cos_sim, CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                                       ORDER BY cos_sim DESC, nid) AS rnk
-          FROM scored)
-    WHERE rnk <= 3
-    """,
+    _KNN_TOP3_ORACLE,
     tags=("vector", "ann", "hnsw", "knn", "similarity"),
 )
 def vec_ann_hnsw_knn(spark, sf_dir):
@@ -515,22 +506,7 @@ def vec_ann_hnsw_knn(spark, sf_dir):
 
 @register(
     "vec_ann_hnsw_partitioned_knn",
-    f"""
-    WITH e AS (SELECT vec_id, {_DV} AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-    scored AS (
-      SELECT qid, vec_id AS nid,
-             round(list_dot_product(v, qv)
-                   / (sqrt(list_sum(list_transform(v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(qv, x -> x * x)))), 6) AS cos_sim
-      FROM e, q WHERE vec_id <> qid
-    )
-    SELECT qid, nid, cos_sim, CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                                       ORDER BY cos_sim DESC, nid) AS rnk
-          FROM scored)
-    WHERE rnk <= 3
-    """,
+    _KNN_TOP3_ORACLE,
     tags=("vector", "ann", "hnsw", "knn", "similarity", "partitioned"),
 )
 def vec_ann_hnsw_partitioned_knn(spark, sf_dir):
@@ -566,22 +542,7 @@ def vec_ann_hnsw_partitioned_knn(spark, sf_dir):
 
 @register(
     "vec_ann_hnsw_served_knn",
-    f"""
-    WITH e AS (SELECT vec_id, {_DV} AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-    scored AS (
-      SELECT qid, vec_id AS nid,
-             round(list_dot_product(v, qv)
-                   / (sqrt(list_sum(list_transform(v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(qv, x -> x * x)))), 6) AS cos_sim
-      FROM e, q WHERE vec_id <> qid
-    )
-    SELECT qid, nid, cos_sim, CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                                       ORDER BY cos_sim DESC, nid) AS rnk
-          FROM scored)
-    WHERE rnk <= 3
-    """,
+    _KNN_TOP3_ORACLE,
     tags=("vector", "ann", "hnsw", "knn", "similarity", "serving"),
 )
 def vec_ann_hnsw_served_knn(spark, sf_dir):
@@ -609,22 +570,7 @@ def vec_ann_hnsw_served_knn(spark, sf_dir):
 
 @register(
     "vec_ann_hnsw_incremental_knn",
-    f"""
-    WITH e AS (SELECT vec_id, {_DV} AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-    scored AS (
-      SELECT qid, vec_id AS nid,
-             round(list_dot_product(v, qv)
-                   / (sqrt(list_sum(list_transform(v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(qv, x -> x * x)))), 6) AS cos_sim
-      FROM e, q WHERE vec_id <> qid
-    )
-    SELECT qid, nid, cos_sim, CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                                       ORDER BY cos_sim DESC, nid) AS rnk
-          FROM scored)
-    WHERE rnk <= 3
-    """,
+    _KNN_TOP3_ORACLE,
     tags=("vector", "ann", "hnsw", "knn", "similarity", "serving", "incremental"),
 )
 def vec_ann_hnsw_incremental_knn(spark, sf_dir):
@@ -671,22 +617,7 @@ def vec_ann_hnsw_incremental_knn(spark, sf_dir):
 
 @register(
     "vec_ann_hnsw_reshard_knn",
-    f"""
-    WITH e AS (SELECT vec_id, {_DV} AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-    scored AS (
-      SELECT qid, vec_id AS nid,
-             round(list_dot_product(v, qv)
-                   / (sqrt(list_sum(list_transform(v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(qv, x -> x * x)))), 6) AS cos_sim
-      FROM e, q WHERE vec_id <> qid
-    )
-    SELECT qid, nid, cos_sim, CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                                       ORDER BY cos_sim DESC, nid) AS rnk
-          FROM scored)
-    WHERE rnk <= 3
-    """,
+    _KNN_TOP3_ORACLE,
     tags=("vector", "ann", "hnsw", "knn", "similarity", "serving",
           "reshard"),
 )
@@ -728,9 +659,10 @@ def vec_ann_hnsw_reshard_knn(spark, sf_dir):
     return hnsw_index_knn(spark, path, queries, k=3)
 
 
-@register(
-    "vec_ann_ivf_incremental_topk",
-    f"""
+#: Exact cosine top-10 to vector 0 within the 2 label cells whose
+#: oracle-computed centroids rank highest: the contract every maintained IVF
+#: serving table must reproduce after its update.
+_IVF_PROBE2_TOP10_ORACLE = f"""
     WITH e AS (SELECT vec_id, label, {_DV} AS v FROM embeddings),
     q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
     corpus AS (SELECT vec_id, label, v FROM e WHERE vec_id <> 0),
@@ -753,7 +685,12 @@ def vec_ann_hnsw_reshard_knn(spark, sf_dir):
                     * sqrt(list_sum(list_transform(qv, x -> x * x)))), 6) AS cos_sim
     FROM corpus JOIN probe USING (label), q
     ORDER BY cos_sim DESC, vec_id LIMIT 10
-    """,
+    """
+
+
+@register(
+    "vec_ann_ivf_incremental_topk",
+    _IVF_PROBE2_TOP10_ORACLE,
     tags=("vector", "ann", "ivf", "similarity", "serving", "incremental"),
 )
 def vec_ann_ivf_incremental_topk(spark, sf_dir):
@@ -809,30 +746,7 @@ def vec_ann_ivf_incremental_topk(spark, sf_dir):
 
 @register(
     "vec_ann_ivf_stream_update_topk",
-    f"""
-    WITH e AS (SELECT vec_id, label, {_DV} AS v FROM embeddings),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    corpus AS (SELECT vec_id, label, v FROM e WHERE vec_id <> 0),
-    flat AS (SELECT label, unnest(v) AS x,
-                    generate_subscripts(v, 1) AS dim FROM corpus),
-    cent AS (SELECT label, dim, avg(x) AS c FROM flat GROUP BY label, dim),
-    centv AS (SELECT label, list(c ORDER BY dim) AS cv
-              FROM cent GROUP BY label),
-    probe AS (
-      SELECT label FROM centv, q
-      ORDER BY round(list_dot_product(cv, qv)
-               / (sqrt(list_sum(list_transform(cv, x -> x * x)))
-                  * sqrt(list_sum(list_transform(qv, x -> x * x)))), 9)
-               DESC, label
-      LIMIT 2
-    )
-    SELECT corpus.vec_id, CAST(corpus.label AS BIGINT) AS label,
-           round(list_dot_product(v, qv)
-                 / (sqrt(list_sum(list_transform(v, x -> x * x)))
-                    * sqrt(list_sum(list_transform(qv, x -> x * x)))), 6) AS cos_sim
-    FROM corpus JOIN probe USING (label), q
-    ORDER BY cos_sim DESC, vec_id LIMIT 10
-    """,
+    _IVF_PROBE2_TOP10_ORACLE,
     tags=("vector", "ann", "ivf", "similarity", "serving", "streaming",
           "incremental"),
 )
@@ -894,22 +808,7 @@ def vec_ann_ivf_stream_update_topk(spark, sf_dir):
 
 @register(
     "vec_ann_hnsw_stream_update_knn",
-    f"""
-    WITH e AS (SELECT vec_id, {_DV} AS v FROM embeddings),
-    q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-    scored AS (
-      SELECT qid, vec_id AS nid,
-             round(list_dot_product(v, qv)
-                   / (sqrt(list_sum(list_transform(v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(qv, x -> x * x)))), 6) AS cos_sim
-      FROM e, q WHERE vec_id <> qid
-    )
-    SELECT qid, nid, cos_sim, CAST(rnk AS BIGINT) AS rnk
-    FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                                       ORDER BY cos_sim DESC, nid) AS rnk
-          FROM scored)
-    WHERE rnk <= 3
-    """,
+    _KNN_TOP3_ORACLE,
     tags=("vector", "ann", "hnsw", "knn", "similarity", "serving",
           "streaming", "incremental"),
 )

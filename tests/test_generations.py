@@ -1,7 +1,7 @@
 """Versioned serving generations (r14 verdict task 4): a state saved
 with ``keep_generations`` publishes each save as a numbered generation
 directory under ``root/_gens`` committed by ONE marker create — no
-rename, so no crash window and nothing for ensure_live to heal — and
+rename, so no crash window and nothing for open_state to heal — and
 readers either resolve the newest committed generation or pin one
 (`layout_read(generation=)`, `hnsw_index_knn(generation=)`). The
 properties under test: publication is atomic-by-marker, a reader's

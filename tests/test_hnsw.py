@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cinegraph_spark.operators.hnsw import (
+    _INDEX_SCHEMA,
     _seq_cos,
     hnsw_build,
     hnsw_cosine_knn,
@@ -421,6 +422,34 @@ def test_index_update_names_stale_shape_tables(spark, sf_dir, tmp_path):
         hnsw_index_update(e, one, stale)
 
 
+def test_read_refuses_index_missing_identity(spark, sf_dir, tmp_path):
+    """The blob table is read under its declared schema, which reads a
+    column the files lack as NULL; every reader of the stored identity
+    must refuse such a table by the column's name."""
+    import pytest as _pytest
+
+    from cinegraph_spark.operators.hnsw import (
+        hnsw_corpus_layout,
+        hnsw_index_filtered_knn,
+        hnsw_index_save,
+        hnsw_index_update,
+    )
+
+    e = _emb_vid_v(spark, sf_dir)
+    path, stale = str(tmp_path / "idx"), str(tmp_path / "stale")
+    hnsw_index_save(e, path, n_partitions=4)
+    spark.read.parquet(path).drop("key_ddl").write.partitionBy(
+        "part_id"
+    ).parquet(stale)
+    one = e.filter(F.col("vec_id") == 1)
+    with _pytest.raises(ValueError, match="key_ddl"):
+        hnsw_index_filtered_knn(spark, stale, one, e.select("vec_id"))
+    with _pytest.raises(ValueError, match="key_ddl"):
+        hnsw_index_update(e, one.select("vec_id"), stale)
+    with _pytest.raises(ValueError, match="key_ddl"):
+        hnsw_corpus_layout(e, str(tmp_path / "corpus"), stale)
+
+
 def test_index_update_rejects_divergent_parameters(spark, sf_dir, tmp_path):
     """M / ef_construction are part of the stored index identity: an
     update with different explicit values must refuse (a divergent
@@ -528,7 +557,7 @@ def test_index_update_on_empty_table_degrades_to_full_save(
     )
     path = str(tmp_path / "idx")
     hnsw_index_save(e.filter("vec_id < 0"), path, n_partitions=8)
-    assert spark.read.parquet(path).count() == 0
+    assert spark.read.schema(_INDEX_SCHEMA).parquet(path).count() == 0
     stats = hnsw_index_update(e, e.select("vec_id"), path)
     assert stats["full_rebuild"] is True
     q = e.filter(F.col("vec_id") < 3)
@@ -706,6 +735,43 @@ def test_stream_update_equals_full_save(spark, sf_dir, tmp_path):
     )
     hnsw_index_save(e, full, n_partitions=8)
     assert _blob_rows(spark, path) == _blob_rows(spark, full)
+
+
+def test_stream_sink_over_versioned_index(spark, sf_dir, tmp_path):
+    """The stream sink maintains a ``keep_generations`` index through its
+    newest committed generation (the root itself holds no data file):
+    after a two-batch drain the served k-NN equals a fresh full save of
+    the final corpus."""
+    from cinegraph_spark.operators.hnsw import (
+        hnsw_index_knn,
+        hnsw_index_save,
+        hnsw_stream_maintenance_sink,
+    )
+    from cinegraph_spark.operators.serving_io import serving_stream_update
+
+    e = _emb_vid_v(spark, sf_dir)
+    base = e.filter(F.col("vec_id") % 5 != 0)
+    arrivals_dir = str(tmp_path / "arrivals")
+    e.filter(F.col("vec_id") % 5 == 0).repartition(2).write.parquet(
+        arrivals_dir
+    )
+    path, full = str(tmp_path / "idx"), str(tmp_path / "full")
+    hnsw_index_save(base, path, n_partitions=4, keep_generations=2)
+    arrivals = (
+        spark.readStream.schema("vec_id long, v array<double>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(arrivals_dir)
+    )
+    land = str(tmp_path / "land")
+    serving_stream_update(
+        arrivals, hnsw_stream_maintenance_sink(base, land, path), land
+    )
+    hnsw_index_save(e, full, n_partitions=4)
+    q = e.filter(F.col("vec_id") % 7 == 0)
+    got = hnsw_index_knn(spark, path, q, k=3).collect()
+    assert got and sorted(got) == sorted(
+        hnsw_index_knn(spark, full, q, k=3).collect()
+    )
 
 
 @pytest.mark.slow  # r19 quick-tier gate (see conftest)

@@ -532,8 +532,8 @@ def test_hash_tier_update_has_no_present_set_job(spark, sf_dir, tmp_path):
     """A one-key layout-mode update of either hash-partitioned serving
     tier learns which partitions it still populates from an Observation
     on the publish write. A separate ``distinct().collect()`` over the
-    rebuilt rows costs two more jobs per call (9 for the HNSW blob
-    table, 8 for the PQ codes), so each update must stay at 7 and 6."""
+    rebuilt rows costs two more jobs per call, and inferring the HNSW
+    blob table's schema one more, so the updates stay at 6 jobs each."""
     from pyspark.sql import functions as F
 
     from cinegraph_spark.operators.hnsw import (
@@ -563,7 +563,7 @@ def test_hash_tier_update_has_no_present_set_job(spark, sf_dir, tmp_path):
 
     sc = spark.sparkContext
     for group, update, most in (
-        ("hnsw-update", lambda: hnsw_index_update(hnsw_corpus, one, hnsw), 7),
+        ("hnsw-update", lambda: hnsw_index_update(hnsw_corpus, one, hnsw), 6),
         ("pq-update", lambda: pq_codes_update(pq_corpus, one, pq), 6),
     ):
         sc.setJobGroup(group, group)
@@ -621,6 +621,59 @@ def test_pq_index_read_job_ceiling(spark, sf_dir, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         assert len(rows) == 10
+        assert len(jobs) <= most, f"{group} launched {len(jobs)} jobs"
+
+
+def test_hnsw_index_read_job_ceiling(spark, sf_dir, tmp_path):
+    """A warm hnsw_index_knn read of a driver-built query batch, plan
+    build plus collect, runs at most 2 jobs (the search and its re-rank),
+    and hnsw_index_filtered_knn at most 5 (one more for the identity head
+    read, two for the broadcast admissible lists). The blob table is read
+    under its declared schema: inferring it costs one more job per
+    read."""
+    from pyspark.sql import functions as F
+
+    from cinegraph_spark.operators.hnsw import (
+        hnsw_index_filtered_knn,
+        hnsw_index_knn,
+        hnsw_index_save,
+    )
+    from cinegraph_spark.queries.util import T
+    from cinegraph_spark.session import local_df
+
+    e = T(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        "label",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+    corpus = e.select("vec_id", "v")
+    q = local_df(
+        spark,
+        [tuple(r) for r in corpus.filter(F.col("vec_id") < 2).collect()],
+        "vec_id long, v array<double>",
+    )
+    adm = e.filter(F.col("label") == 2).select("vec_id")
+    path = str(tmp_path / "hnsw")
+    hnsw_index_save(corpus, path, n_partitions=4)
+
+    sc = spark.sparkContext
+    for group, read, most in (
+        ("hnsw-read", lambda: hnsw_index_knn(spark, path, q, k=3), 2),
+        (
+            "hnsw-read-filtered",
+            lambda: hnsw_index_filtered_knn(spark, path, q, adm, k=3),
+            5,
+        ),
+    ):
+        read().collect()  # warm
+        sc.setJobGroup(group, group)
+        try:
+            rows = read().collect()
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rows) == 6
         assert len(jobs) <= most, f"{group} launched {len(jobs)} jobs"
 
 

@@ -352,7 +352,7 @@ class _FakeRaceFs:
 
 
 def test_writer_detects_lost_swap_race_as_success():
-    """A reader's ensure_live landing in the writer's between-renames
+    """A reader's open_state heal landing in the writer's between-renames
     window may complete the swap; the writer's own rename then fails
     with the new state live and correct. That is success, not an error
     (r14 ADVICE: race handling was asymmetric — recover_swap's loser

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cinegraph_spark.operators.skew import salted_join, salted_sum_count, top_hot_keys
+from cinegraph_spark.operators.skew import salted_join, salted_sum_count
 from cinegraph_spark.queries.util import T
 
 
@@ -46,11 +46,3 @@ def test_salted_left_join_preserves_unmatched(spark):
         (r.k, r.rv) for r in salted_join(left, right, ["k"], how="left").collect()
     }
     assert got == {(1, "x"), (2, None), (3, None)}
-
-
-def test_top_hot_keys_shares(spark, sf_dir):
-    o = T(spark, sf_dir, "orders")
-    hot = top_hot_keys(o, ["o_orderpriority"], n=3).collect()
-    assert len(hot) == 3
-    assert all(0 < r.share < 1 for r in hot)
-    assert hot[0].n_rows >= hot[1].n_rows >= hot[2].n_rows
