@@ -16,6 +16,17 @@ map-side over the query stream via Arrow-batched ``mapInPandas``. The one
 small-side contract as the Ward-linkage centroid cap
 (`operators/clustering.py`) — pinned by `tests/test_hnsw.py`.
 
+The SERVING tier (``hnsw_index_save`` and the functions after it) keeps
+one pickled sub-index per hash partition in a parquet table, and does
+Python work in proportion to the request, because every Python task
+pays a fixed worker start-up cost before any engine code runs: a save
+builds one sub-index per task; an update starts one build task per
+touched sub-index only, and an append of ids above a partition's
+largest extends its stored graph by one insertion per new vector
+instead of rebuilding it (the insertion loop is resumable, so the bytes
+equal a full build's); a read searches the sub-indexes in split-sized
+tasks (one task for a table smaller than one input split).
+
 Determinism contract (what makes the exact oracle possible):
 - insertion order = ascending vec_id; level draws from a seeded
   ``np.random.default_rng``;
@@ -223,17 +234,45 @@ def hnsw_build(
     """Deterministic multi-layer HNSW over (ids, X). ``ids`` must be sorted
     ascending (the insertion order is part of the determinism contract).
     Layer-0 degree cap is 2M (the standard M_max0), upper layers M."""
+    return _hnsw_insert(None, ids, X, M, ef_construction, seed)
+
+
+def _hnsw_insert(
+    base: dict | None,
+    ids: list[int],
+    X: np.ndarray,
+    M: int,
+    ef_construction: int,
+    seed: int,
+) -> dict:
+    """The one HNSW insertion loop. ``base`` None starts from the empty
+    graph (:func:`hnsw_build`); otherwise ``base`` is an index (slim or
+    not) this loop built with the same ``M``/``ef_construction``/``seed``
+    over the first ``n = len(base["ids"])`` entries of ``ids``/``X``, and
+    the loop resumes at node n: the level RNG is advanced past the n
+    draws the stored nodes consumed and ``base``'s graph is extended in
+    place. Every node's insertion reads only the graph of the nodes
+    before it, so the result — dict insertion orders included — is
+    bit-identical to the full build over all of ``ids`` (pinned in
+    tests/test_hnsw.py)."""
     assert list(ids) == sorted(ids), "insertion order must be ascending ids"
-    Xn = _normalize(np.asarray(X, dtype=np.float64))
+    X = np.asarray(X, dtype=np.float64)
+    Xn = _normalize(X)
     rng = np.random.default_rng(seed)
     ml = 1.0 / math.log(M)
-    layers: list[dict[int, list[int]]] = []
-    entry, max_level = None, -1
+    if base is None:
+        layers: list[dict[int, list[int]]] = []
+        entry, max_level, start = None, -1, 0
+    else:
+        assert base["M"] == M, "a graph resumes only under its own M"
+        layers, entry = base["layers"], base["entry"]
+        max_level, start = base["max_level"], len(base["ids"])
+        rng.random(start)  # one level draw per stored node
 
     def cap(level):
         return 2 * M if level == 0 else M
 
-    for i in range(len(ids)):
+    for i in range(start, len(ids)):
         lvl = int(-math.log(max(float(rng.random()), 1e-300)) * ml)
         if entry is None:
             while len(layers) <= lvl:
@@ -273,7 +312,7 @@ def hnsw_build(
     return {
         "ids": list(ids),
         "Xn": Xn,
-        "X": np.asarray(X, dtype=np.float64),
+        "X": X,
         "layers": layers,
         "entry": entry,
         "max_level": max_level,
@@ -295,24 +334,61 @@ def hnsw_search(index: dict, qv: np.ndarray, k: int, ef: int = 192):
     return [(index["ids"][n], d) for d, n in res]
 
 
+def _sorted_rows(pdf):
+    """One partition's (vec_id, v) pandas rows as the build's inputs:
+    stable-sorted by vec_id (ascending-ids insertion order is part of the
+    determinism contract), ``(ids, X)``. Shared by every executor-side
+    build site (scatter-gather, index save and update) so an
+    ordering/tie-break fix lands exactly once."""
+    pdf = pdf.iloc[pdf["vec_id"].astype("int64").argsort(kind="stable")]
+    ids = [int(x) for x in pdf["vec_id"]]
+    return ids, np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
+
+
 def _subindex_from_batches(batches, M: int, ef_construction: int):
     """Concat one partition's Arrow batches into a single frame and build
-    the deterministic sub-index: stable-sort by vec_id (ascending-ids
-    insertion order is part of the determinism contract), then
-    :func:`hnsw_build`. Returns ``None`` for an empty partition. Shared by
-    every executor-side build site (scatter-gather and index-save) so an
-    ordering/tie-break fix lands exactly once."""
+    its deterministic sub-index (:func:`hnsw_build`). Returns ``None``
+    for an empty partition."""
     import pandas as pd
 
     parts = [pdf for pdf in batches if len(pdf)]
     if not parts:
         return None
-    pdf = pd.concat(parts, ignore_index=True)
-    order = pdf["vec_id"].astype("int64").argsort(kind="stable")
-    pdf = pdf.iloc[order]
-    ids = [int(x) for x in pdf["vec_id"]]
-    X = np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
+    ids, X = _sorted_rows(pd.concat(parts, ignore_index=True))
     return hnsw_build(ids, X, M=M, ef_construction=ef_construction)
+
+
+def _subindex_blob(ids, X, old: bytes | None, M: int, ef_construction: int):
+    """The serving blob of the sub-index over sorted ``(ids, X)``, reusing
+    ``old`` (the partition's stored blob, or None) where that is
+    bit-identical to a full build: ``old`` itself when it already holds
+    exactly these rows, one :func:`_hnsw_insert` per appended row when
+    the rows extend its — its ids are a prefix of ``ids``, its ``X`` is
+    bit-equal to theirs, and every extra id is larger than its largest.
+    Any other change (a re-embedded, deleted or lower id) runs the full
+    build. The blob is the index dict minus ``Xn``: Xn is bit-identical
+    to ``_normalize(X)``, so readers rebuild it at load instead of paying
+    to store, read and unpickle a second n×d matrix."""
+    import pickle
+
+    base = None
+    if old is not None:
+        prev = pickle.loads(old)
+        n = len(prev["ids"])
+        if (
+            n <= len(ids)
+            and prev["ids"] == ids[:n]
+            and prev["X"].shape == X[:n].shape
+            and prev["X"].tobytes() == X[:n].tobytes()
+        ):
+            if n == len(ids):
+                return old
+            if ids[n] > ids[n - 1]:
+                base = prev
+    # seed 42: hnsw_build's default, which every stored blob was built at
+    index = _hnsw_insert(base, ids, X, M, ef_construction, 42)
+    del index["Xn"]
+    return pickle.dumps(index, protocol=4)
 
 
 def _score_query(index, pos, qid, qv, k, ef, round_to, top_n):
@@ -518,50 +594,60 @@ def _hnsw_table(spark, path: str, generation: int | None = None):
 def _hnsw_state(spark, path: str, generation: int | None = None):
     """:func:`_hnsw_table` plus the table's identity, read by one
     column-pruned head read. Returns ``(state_dir, table, head)``;
-    ``head`` is None for a vacuous table. The declared schema reads a
-    column the files lack as NULL, and :func:`hnsw_index_save` never
-    writes a NULL identity: such a table (e.g. saved before the
-    key-type guard existed) is refused by column name."""
+    ``head`` is None for a vacuous table."""
     path, idx = _hnsw_table(spark, path, generation)
-    head = idx.select(*_IDENTITY).first()
-    if head is not None:
-        missing = [c for c in _IDENTITY if head[c] is None]
+    head = _checked_identity(path, idx.select(*_IDENTITY).head(1))
+    return path, idx, head
+
+
+def _checked_identity(path: str, rows: list):
+    """The first of ``rows`` (serving-table rows carrying the
+    :data:`_IDENTITY` columns), or None when there are none. The declared
+    schema reads a column the files lack as NULL, and
+    :func:`hnsw_index_save` never writes a NULL identity: such a table
+    (e.g. saved before the key-type guard existed) is refused by column
+    name."""
+    for row in rows:
+        missing = [c for c in _IDENTITY if row[c] is None]
         if missing:
             raise ValueError(
                 f"HNSW serving table at {path}: identity column(s) "
                 f"{', '.join(missing)} missing or NULL; rebuild it once "
                 "with hnsw_index_save"
             )
-    return path, idx, head
+    return rows[0] if rows else None
 
 
 def _build_subindex_rows(
     M: int, ef_construction: int, n_partitions: int, key_ddl: str
 ):
-    """mapInPandas task fn over a frame pre-partitioned with
-    ``repartition(n_partitions, "vec_id")`` — whose task-assignment
-    function (``pmod(Murmur3(vec_id), n)``, HashPartitioning) is exactly
-    `maintenance.py::hash_part_expr`, so task i holds precisely partition
-    i's rows: one sub-index per task, perfectly balanced. The EXPLICIT
-    repartition also stops AQE from coalescing the tiny shuffle into one
-    task and serializing the graph builds (a ``groupBy().applyInPandas`` form
-    measured 2.9× slower on the served query, and hashing ``part_id``
-    itself collides 8 ids into ~5 tasks — both shapes lose the
-    parallelism). The fn still groups pandas-side and emits one
-    serving-table row per part_id present, so it stays correct under ANY
-    partitioning that keeps each part_id whole. The blob is the
-    index dict MINUS the normalized matrix: Xn is bit-identical to
-    _normalize(X) (same op as the build), so the reader reconstructs it
-    at load instead of paying to store, read, and unpickle a second n×d
-    float64 matrix per task. ids/layers/entry/M ride along — the blob is
-    self-contained. Deterministic build over deterministic membership ⇒
-    the blob bytes are a pure function of the partition's vector set (the
-    incremental-equals-full-rebuild pin in tests/test_hnsw.py rests on
+    """mapInPandas task fn that emits one serving-table row per part_id
+    present in its input, so it is correct under ANY partitioning that
+    keeps each part_id whole. Two callers:
+
+    - :func:`hnsw_index_save` feeds it the corpus (vec_id, v, part_id)
+      ``repartition(n_partitions, "vec_id")``-ed, whose task-assignment
+      function (``pmod(Murmur3(vec_id), n)``) is exactly
+      `maintenance.py::hash_part_expr`: task i holds precisely partition
+      i's rows, one full build per task. The EXPLICIT repartition also
+      stops AQE from coalescing the tiny shuffle into one task and
+      serializing the graph builds (a ``groupBy().applyInPandas`` form
+      measured 2.9× slower on the served query, and hashing ``part_id``
+      itself collides 8 ids into ~5 tasks).
+    - :func:`hnsw_index_update` adds a ``blob`` column: the touched
+      partitions' corpus rows (blob NULL) plus one row per touched
+      stored sub-index (its blob, NULL ``v`` and a placeholder vec_id),
+      repartitioned to ``len(changed)`` tasks by part_id. A collision
+      puts two part_ids in one task, which the grouping keeps correct.
+      Each group's blob comes from :func:`_subindex_blob`, which keeps or
+      extends the stored one where that is bit-identical to a full build.
+
+    Deterministic build over deterministic membership ⇒ the blob bytes
+    are a pure function of the partition's vector set (the
+    incremental-equals-full-rebuild pins in tests/test_hnsw.py rest on
     exactly this)."""
 
     def build(batches):
-        import pickle
-
         import pandas as pd
 
         parts = [pdf for pdf in batches if len(pdf)]
@@ -569,10 +655,15 @@ def _build_subindex_rows(
             return
         pdf = pd.concat(parts, ignore_index=True)
         for pid, g in pdf.groupby("part_id", sort=True):
-            index = _subindex_from_batches(
-                [g[["vec_id", "v"]]], M, ef_construction
-            )
-            slim = {k2: v for k2, v in index.items() if k2 != "Xn"}
+            old = None
+            if "blob" in g:
+                stored = g["blob"].notna()
+                if stored.any():
+                    old = bytes(g.loc[stored, "blob"].iloc[0])
+                g = g[~stored]
+            if not len(g):  # every vector deleted: the row drops out
+                continue
+            ids, X = _sorted_rows(g)
             yield pd.DataFrame(
                 {
                     "part_id": [int(pid)],
@@ -580,8 +671,10 @@ def _build_subindex_rows(
                     "m": [M],
                     "efc": [ef_construction],
                     "key_ddl": [key_ddl],
-                    "n_vectors": [len(index["ids"])],
-                    "blob": [pickle.dumps(slim, protocol=4)],
+                    "n_vectors": [len(ids)],
+                    "blob": [
+                        _subindex_blob(ids, X, old, M, ef_construction)
+                    ],
                 }
             )
 
@@ -745,8 +838,15 @@ def hnsw_index_update(
     its partition's vectors — "n_partitions rows" is metadata-scale in
     ROWS but corpus-scale in BYTES):
 
-    - COMPUTE: only changed partitions pay graph construction, in both
-      corpus modes.
+    - COMPUTE: only changed partitions run Python: one build task per
+      touched sub-index (``len(changed)`` tasks; an untouched partition
+      starts no task), in both corpus modes. Each task receives its
+      corpus rows and its stored blob: an unchanged partition keeps its
+      blob, an append of ids above the partition's largest extends the
+      stored graph by one insertion per new vector (bit-identical to
+      the full build — the insertion loop is resumable), and any other
+      change (re-embedded, deleted or lower ids) rebuilds the
+      sub-index.
     - SCAN: DataFrame mode must read every corpus row to compute its
       partition id before the broadcast semi-join discards the
       untouched ones (full-corpus read — acceptable only for one-shot
@@ -783,7 +883,7 @@ def hnsw_index_update(
     # a versioned root resolves to its CURRENT generation: in-place
     # maintenance mutates the live generation; retained older ones stay
     # immutable snapshots (same contract as hash_layout_upsert)
-    path, _, head = _hnsw_state(spark, path)
+    path, idx, head = _hnsw_state(spark, path)
     if head is None:
         # vacuous index: no rows means no recoverable partition identity —
         # degrade to a fresh full build of the current corpus, forwarding
@@ -841,13 +941,21 @@ def hnsw_index_update(
     M, ef_construction = int(head["m"]), int(head["efc"])
     key_ddl = str(head["key_ddl"])
 
-    def rebuild(src: DataFrame) -> DataFrame:
-        # n_partitions (not len(changed)) keeps task==part_id: a smaller
-        # modulus would SPLIT one part_id's rows across tasks and emit
-        # partial sub-indexes; unchanged partitions' tasks are empty
+    def rebuild(src: DataFrame, changed: list) -> DataFrame:
+        # each touched partition's task receives its corpus rows AND its
+        # stored blob, so an append extends the stored graph instead of
+        # rebuilding it. The blob rows carry a non-NULL placeholder
+        # vec_id: a NULL would turn the task's pandas vec_id column into
+        # float64 and round ids above 2**53. len(changed) tasks, not
+        # n_partitions: every task is a touched sub-index, and the build
+        # groups by part_id, so a hash collision stays correct.
+        stored = idx.filter(F.col("part_id").isin(changed)).select(
+            F.lit(0).cast(key_ddl).alias("vec_id"), "part_id", "blob"
+        )
         return (
             src.select("vec_id", "v", "part_id")
-            .repartition(n_partitions, "vec_id")
+            .unionByName(stored, allowMissingColumns=True)
+            .repartition(len(changed), "part_id")
             .mapInPandas(
                 _build_subindex_rows(
                     M, ef_construction, n_partitions, key_ddl
@@ -910,13 +1018,14 @@ def hnsw_stream_maintenance_sink(
 
     ``reshard_target_rows`` closes the growth loop INSIDE the stream:
     after each update, :func:`hnsw_index_reshard` probes the stored
-    ``n_vectors`` metadata (a no-trigger probe is one aggregate over ≤
-    n_partitions rows — per-batch cost is metadata-scale) and right-sizes
-    the table whenever accumulated arrivals push the largest sub-index
-    past :data:`RESHARD_TRIGGER_RATIO` × ``reshard_target_rows``. A reshard
-    changes the index's partition count, so the layout is re-laid at the
-    new modulus in the same batch (a full corpus rewrite — amortized:
-    it only happens when the index itself already paid a full rebuild);
+    ``n_vectors`` metadata (a no-trigger probe is one column-pruned read
+    of ≤ n_partitions rows — per-batch cost is metadata-scale) and
+    right-sizes the table whenever accumulated arrivals push the largest
+    sub-index past :data:`RESHARD_TRIGGER_RATIO` × ``reshard_target_rows``.
+    A reshard changes the index's partition count, so the layout is
+    re-laid at the new modulus in the same batch (a full corpus rewrite
+    — amortized: it only happens when the index itself already paid a
+    full rebuild);
     every batch also re-checks layout-vs-index identity FIRST, so a
     crash between reshard and re-layout heals on replay instead of
     wedging the drain on the stale-layout refusal. The maintained SLO —
@@ -1003,8 +1112,8 @@ def hnsw_index_reshard(
     :func:`hnsw_index_save` at the table's OWN stored
     ``M``/``ef_construction`` — so the result is bit-identical to a fresh
     save of ``e`` and every search/update contract carries over
-    unchanged. The no-trigger path costs ONE aggregate over the ≤
-    ``n_partitions`` metadata rows (no vector touches, no blob
+    unchanged. The no-trigger path costs ONE column-pruned read of the ≤
+    ``n_partitions`` metadata rows (one job; no vector touches, no blob
     unpickling), so a daily maintenance job can call update + reshard
     unconditionally and only pay the full rebuild when growth actually
     crossed the threshold. The rebuild rides the atomic sibling-swap
@@ -1020,13 +1129,15 @@ def hnsw_index_reshard(
     (``db/models/embedding.py:15-17``) stays balanced under growth via
     the database's own page splits; this is the lake-native equivalent."""
     spark = e.sparkSession
-    path, old, head = _hnsw_state(spark, path)
+    # one column-pruned collect of the ≤ n_partitions rows' identity and
+    # size: no blob is read, and no aggregate shuffle runs
+    path, old = _hnsw_table(spark, path)
+    rows = old.select(*_IDENTITY, "n_vectors").collect()
+    head = _checked_identity(path, rows)
     old_n, max_rows, params = None, 0, {}
     if head is not None:
         old_n = int(head["n_partitions"])
-        max_rows = int(
-            old.agg(F.max("n_vectors").alias("mx")).first()["mx"] or 0
-        )
+        max_rows = max(int(r["n_vectors"] or 0) for r in rows)
         if (
             not force
             and max_rows <= RESHARD_TRIGGER_RATIO * target_rows_per_subindex
@@ -1051,21 +1162,40 @@ def hnsw_index_reshard(
 
 
 def _served_knn(
-    spark, queries: DataFrame, k: int, table: DataFrame, open_blob
+    spark,
+    queries: DataFrame,
+    k: int,
+    idx: DataFrame,
+    table: DataFrame,
+    open_blob,
 ) -> DataFrame:
     """The search both served reads share: collect the query batch
     (sorted by vec_id; an empty batch returns the empty result before any
-    index job), broadcast it, open each row of ``table`` inside one
-    ``mapInPandas`` pass, and re-rank the candidate union with one tiny
-    window. ``open_blob(*row)`` takes a row's columns (the pickled blob
-    first) and returns that sub-index's per-query scorer
-    ``(qid, qv) -> [(cos_sim, nid), ...]`` — its local top-(k+1),
-    self-match excluded — or None when the row can score nothing."""
+    index job), broadcast it, open each row of ``table`` (rows derived
+    from the blob table ``idx``) inside one ``mapInPandas`` pass, and
+    re-rank the candidate union with one tiny window. ``open_blob(*row)``
+    takes a row's columns (the pickled blob first) and returns that
+    sub-index's per-query scorer ``(qid, qv) -> [(cos_sim, nid), ...]``
+    — its local top-(k+1), self-match excluded — or None when the row
+    can score nothing.
+
+    The rows are packed into split-sized tasks: ``table`` is coalesced
+    to ``max(1, ceil(S / spark.sql.files.maxPartitionBytes))`` tasks,
+    where S is the blob scan's size from ``idx``'s plan statistics
+    (reading them runs no job). Every Python task pays a fixed worker
+    start-up cost whether its sub-indexes are many, one or none, so a
+    blob table smaller than one input split is searched by ONE task —
+    whose output is a single partition, so the re-rank window needs no
+    shuffle either — and a corpus-sized one still fans out across
+    split-sized tasks."""
     qrows = sorted(
         queries.select("vec_id", "v").collect(), key=lambda r: r["vec_id"]
     )
     if not qrows:
         return local_df(spark, [], _RESULT_SCHEMA)
+    conf = spark._jsparkSession.sessionState().conf()
+    size = idx._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    n_tasks = max(1, -(-int(size) // conf.filesMaxPartitionBytes()))
     from cinegraph_spark.session import ensure_shipped
 
     ensure_shipped(spark)  # the mapInPandas closure references this module
@@ -1091,7 +1221,10 @@ def _served_knn(
                 yield pd.DataFrame(out)
 
     return _rerank(
-        table.mapInPandas(search, "qid long, nid long, cos_sim double"), k
+        table.coalesce(n_tasks).mapInPandas(
+            search, "qid long, nid long, cos_sim double"
+        ),
+        k,
     )
 
 
@@ -1105,13 +1238,14 @@ def hnsw_index_knn(
     generation: int | None = None,
 ) -> DataFrame:
     """QUERY-MANY half: search a persisted :func:`hnsw_index_save` table.
-    Each index row (one partition's sub-index) unpickles inside its own
-    mapInPandas task and beam-searches the broadcast query batch; one
-    tiny window re-ranks the candidate union — the identical
-    exactness argument as :func:`hnsw_partitioned_knn` (disjoint
-    partitions + local recall 1 ⇒ the union contains the global top-k),
-    so the same brute-force oracle hash-matches without any rebuild
-    cost. Only O(n_queries × n_index_rows × k) candidate rows shuffle.
+    Each index row (one partition's sub-index) unpickles inside a
+    split-sized mapInPandas task (`_served_knn`) and beam-searches the
+    broadcast query batch; one tiny window re-ranks the candidate union
+    — the identical exactness argument as :func:`hnsw_partitioned_knn`
+    (disjoint partitions + local recall 1 ⇒ the union contains the
+    global top-k), so the same brute-force oracle hash-matches without
+    any rebuild cost. At most O(n_queries × n_index_rows × k) candidate
+    rows shuffle, and none when the table fits one split.
 
     ``generation`` pins a ``keep_generations`` save to a retained
     generation (rollback/debugging read); default is the newest
@@ -1137,7 +1271,7 @@ def hnsw_index_knn(
             index, pos, qid, qv, k, ef, round_to, k + 1
         )
 
-    return _served_knn(spark, queries, k, idx.select("blob"), open_blob)
+    return _served_knn(spark, queries, k, idx, idx.select("blob"), open_blob)
 
 
 def hnsw_index_filtered_knn(
@@ -1176,11 +1310,12 @@ def hnsw_index_filtered_knn(
 
     Scale contract: broadcast volume is one id per admissible vector
     (8 B/id) — the low-selectivity regime by construction; compute is
-    |admissible| exact scores, distributed across the touched
-    sub-indexes' tasks. Refuses an ``admissible`` frame whose vec_id
-    type drifted from the stored key_ddl (the partition hash differs by
-    type). Output (qid, nid, cos_sim, rnk), self-matches excluded —
-    identical contract to :func:`hnsw_index_knn`."""
+    |admissible| exact scores over the touched sub-indexes, in the
+    split-sized search tasks of `_served_knn`. Refuses an
+    ``admissible`` frame whose vec_id type drifted from the stored
+    key_ddl (the partition hash differs by type). Output (qid, nid,
+    cos_sim, rnk), self-matches excluded — identical contract to
+    :func:`hnsw_index_knn`."""
     _, idx, head = _hnsw_state(spark, path, generation)
     if head is None:  # vacuous index: nothing is admissible
         return local_df(spark, [], _RESULT_SCHEMA)
@@ -1240,5 +1375,5 @@ def hnsw_index_filtered_knn(
         return score
 
     return _served_knn(
-        spark, queries, k, joined.select("blob", "adm_ids"), open_blob
+        spark, queries, k, idx, joined.select("blob", "adm_ids"), open_blob
     )

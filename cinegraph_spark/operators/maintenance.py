@@ -1111,11 +1111,14 @@ def hash_tier_update(
     those directories (a planning-time ``PartitionFilters`` prune: scan ∝
     change); in DataFrame mode every corpus row must be read to compute
     its partition id before the ``isin`` filter discards the untouched
-    ones (scan ∝ corpus). ``rebuild(src)`` maps that source (the corpus
-    columns plus ``part_id``) to the tier's new rows, still carrying
-    ``part_id``, and :func:`_publish_parts` replaces only the touched
-    directories of ``table_path`` (untouched files are never opened) and
-    drops the ones the delta emptied. Returns ``(touched, dropped)``."""
+    ones (scan ∝ corpus). ``rebuild(src, changed)`` maps that source (the
+    corpus columns plus ``part_id``) and the sorted touched-partition
+    list to the tier's new rows, still carrying ``part_id`` (HNSW sizes
+    its build tasks and prunes its stored-blob read by ``changed``; PQ's
+    per-row encode ignores it), and :func:`_publish_parts` replaces only
+    the touched directories of ``table_path`` (untouched files are never
+    opened) and drops the ones the delta emptied. Returns ``(touched,
+    dropped)``."""
     from pyspark.sql import functions as F
 
     spark = delta.sparkSession
@@ -1141,7 +1144,9 @@ def hash_tier_update(
         src = e.withColumn(
             "part_id", hash_part_expr(n_partitions, "vec_id")
         ).filter(F.col("part_id").isin(changed))
-    _, _, dropped = _publish_parts(spark, table_path, rebuild(src), changed)
+    _, _, dropped = _publish_parts(
+        spark, table_path, rebuild(src, changed), changed
+    )
     return changed, dropped
 
 

@@ -622,21 +622,15 @@ def _list_gen_dirs(
     commit marker into the sibling before any rename, so the recovered
     copy resolves as committed."""
     gens = jpath(root.rstrip("/") + "/" + _GENS_DIR)
-    try:
-        statuses = list(fs.listStatus(gens))
-    except Exception as exc:
-        # missing _gens: one listStatus doubles as the exists probe —
-        # resolve_generation runs on EVERY versioned read, so each
-        # avoided py4j/FS round trip here is paid per query on local fs
-        # and per object-store LIST at scale (r19). Only the
-        # FileNotFoundException means "not versioned"; anything else
-        # (permissions, transport) must stay loud.
-        jexc = getattr(exc, "java_exception", None)
-        if jexc is not None and "FileNotFoundException" in str(
-            jexc.getClass().getName()
-        ):
-            return {}
-        raise
+    # "not versioned" is answered by fs.exists, which does not throw: a
+    # listStatus of the missing directory answers it with a
+    # FileNotFoundException that py4j carries to Python and pyspark
+    # converts, ~100x the cost of the probe, and most states a serving
+    # pass opens are unversioned. Every other error (permissions,
+    # transport) still raises, from either call.
+    if not fs.exists(gens):
+        return {}
+    statuses = list(fs.listStatus(gens))
     if spark is not None:
         crashed = set()
         present = set()

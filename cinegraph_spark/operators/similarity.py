@@ -957,7 +957,7 @@ def pq_codes_update(
     # maintenance of the live generation, like hash_layout_upsert)
     codebooks, n_partitions, key_ddl, _, path = _pq_read_state(spark, path)
 
-    def encode(src: DataFrame) -> DataFrame:
+    def encode(src: DataFrame, _changed: list) -> DataFrame:
         return src.select(
             "vec_id",
             pq_encode_col(F.col(v), codebooks).alias("code"),

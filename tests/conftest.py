@@ -89,3 +89,63 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+#: Physical-plan node names that run Python in the task (Arrow-batched
+#: and row UDF evaluators, pandas map/group functions).
+_PYTHON_NODES = ("Python", "InPandas", "InArrow")
+
+
+@pytest.fixture(scope="session")
+def spark_work(spark):
+    """``spark_work(action)`` runs ``action()`` under a job group of its
+    own and returns what it ran on the cluster: ``(jobs, tasks,
+    python_tasks)`` — the job count, the tasks those jobs completed, and
+    the completed tasks of stages that run Python. A skipped stage
+    (shuffle output reused) completes no task; the status store drops
+    skipped stages first once ``spark.ui.retainedStages`` is reached, so
+    a stage it no longer holds counts as one. The listener bus is
+    drained first, so stage counts are final when read."""
+    import itertools
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    store = jsc.statusStore()
+    groups = itertools.count()
+
+    def clusters(c):
+        yield c
+        it = c.childClusters().iterator()
+        while it.hasNext():
+            yield from clusters(it.next())
+
+    def runs_python(stage_id):
+        graph = store.operationGraphForStage(stage_id)
+        return any(
+            marker in c.name()
+            for c in clusters(graph.rootCluster())
+            for marker in _PYTHON_NODES
+        )
+
+    def run(action):
+        group = f"spark_work-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jsc.listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = list(tracker.getJobIdsForGroup(group))
+        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        tasks = python_tasks = 0
+        for s in stages:
+            info = tracker.getStageInfo(s)
+            done = info.numCompletedTasks if info is not None else 0
+            tasks += done
+            if done and runs_python(s):
+                python_tasks += done
+        return len(jobs), tasks, python_tasks
+
+    return run

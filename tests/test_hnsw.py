@@ -81,6 +81,85 @@ def test_build_is_deterministic(spark, sf_dir):
     assert a["layers"] == b["layers"]
 
 
+def _slim_blob(index):
+    import pickle
+
+    return pickle.dumps(
+        {k: v for k, v in index.items() if k != "Xn"}, protocol=4
+    )
+
+
+# n=27: the stored 27 nodes all sit on level 0 and node 27 draws level 1,
+# so that append raises max_level and moves the entry point
+@pytest.mark.parametrize("n,a", [(1, 1), (27, 1), (27, 3), (64, 5), (150, 20)])
+def test_appended_blob_equals_full_build(n, a):
+    """An append resumes the stored graph's insertion loop at node n: the
+    extended blob's bytes equal hnsw_build over all n+a rows, and a blob
+    already holding exactly those rows comes back as the same object."""
+    from cinegraph_spark.operators.hnsw import _subindex_blob
+
+    rng = np.random.default_rng(n * 100 + a)
+    X = rng.normal(size=(n + a, 16))
+    ids = sorted(rng.choice(10**12, size=n + a, replace=False).tolist())
+    old = _slim_blob(hnsw_build(ids[:n], X[:n]))
+    full = hnsw_build(ids, X)
+    want = _slim_blob(full)
+    assert _subindex_blob(ids, X, old, 16, 192) == want
+    assert _subindex_blob(ids, X, want, 16, 192) is want
+    if n == 27:
+        assert hnsw_build(ids[:n], X[:n])["max_level"] < full["max_level"]
+
+
+def test_subindex_build_extends_only_a_strict_append(monkeypatch):
+    """The update's build task resumes the stored graph only when the
+    partition's rows extend it (same ids and bit-equal vectors first,
+    larger ids after); a re-embedded, lower or deleted id runs the full
+    build. Every case emits the full build's bytes."""
+    import pandas as pd
+
+    from cinegraph_spark.operators import hnsw
+
+    rng = np.random.default_rng(3)
+    ids = list(range(10, 410, 10))
+    X = rng.normal(size=(len(ids), 8))
+    resumed = []
+    insert = hnsw._hnsw_insert
+
+    def spy(base, *args):
+        resumed.append(base is not None)
+        return insert(base, *args)
+
+    monkeypatch.setattr(hnsw, "_hnsw_insert", spy)
+    build = hnsw._build_subindex_rows(16, 192, 4, "bigint")
+
+    def run(stored, rows_ids, rows_X):
+        old = _slim_blob(hnsw.hnsw_build(stored[0], stored[1]))
+        pdf = pd.DataFrame(
+            {
+                "vec_id": [0] + rows_ids,
+                "v": [None] + [list(x) for x in rows_X],
+                "part_id": [1] * (len(rows_ids) + 1),
+                "blob": [old] + [None] * len(rows_ids),
+            }
+        )
+        resumed.clear()
+        [row] = list(build(iter([pdf])))
+        ran = list(resumed)
+        assert row["blob"][0] == _slim_blob(hnsw.hnsw_build(rows_ids, rows_X))
+        assert row["n_vectors"][0] == len(rows_ids)
+        return ran[0] if ran else None
+
+    head = (ids[:30], X[:30])
+    assert run(head, ids[:33], X[:33]) is True  # append
+    assert run((ids[:33], X[:33]), ids[:33], X[:33]) is None  # kept as is
+    moved = X[:33].copy()
+    moved[4] += 1.0
+    assert run(head, ids[:33], moved) is False  # re-embedded id
+    low = ids[:30] + [ids[29] - 5]
+    assert run(head, sorted(low), X[:31]) is False  # id below the largest
+    assert run(head, ids[1:30], X[1:30]) is False  # delete
+
+
 def test_graph_invariants(spark, sf_dir):
     """Degree caps (2M at layer 0, M above) and layer-0 connectivity —
     connectivity is what makes high-ef search exhaustive-equivalent."""
@@ -321,6 +400,49 @@ def test_index_update_touches_only_delta_partitions(spark, sf_dir, tmp_path):
     # content is unchanged (same corpus) -> determinism makes the rebuilt
     # blob identical too; the stats prove it was a 1-partition rebuild
     assert after == before
+
+
+def test_index_update_append_and_fallbacks_equal_full_save(
+    spark, sf_dir, tmp_path
+):
+    """Each update below leaves the table bit-identical to a full save of
+    its corpus: an append of ids above every stored id across several
+    partitions (the stored graphs are extended), replaying that append
+    (the blobs come back unchanged), and the deltas that rebuild a
+    sub-index — a re-embedded id, an appended id below its partition's
+    largest, and a delete."""
+    from cinegraph_spark.operators.hnsw import (
+        hnsw_index_save,
+        hnsw_index_update,
+    )
+
+    e = _emb_vid_v(spark, sf_dir)
+    top = e.orderBy(F.desc("vec_id")).limit(12).select("vec_id")
+    path, full = str(tmp_path / "idx"), str(tmp_path / "full")
+    hnsw_index_save(e.join(top, "vec_id", "left_anti"), path, n_partitions=4)
+
+    def check(corpus, delta):
+        stats = hnsw_index_update(corpus, delta, path)
+        hnsw_index_save(corpus, full, n_partitions=4)
+        assert _blob_rows(spark, path) == _blob_rows(spark, full)
+        return stats
+
+    stats = check(e, top)
+    assert len(stats["rebuilt_partitions"]) >= 2
+    appended = _blob_rows(spark, path)
+    check(e, top)
+    assert _blob_rows(spark, path) == appended
+
+    seven = e.filter(F.col("vec_id") == 7).select("vec_id")
+    moved = e.withColumn(
+        "v",
+        F.when(
+            F.col("vec_id") == 7, F.transform("v", lambda x: x * 2.0 + 1.0)
+        ).otherwise(F.col("v")),
+    )
+    check(moved, seven)  # re-embedded id
+    check(e.filter(F.col("vec_id") != 7), seven)  # delete
+    check(e, seven)  # id below its partition's largest
 
 
 def test_index_update_drops_emptied_partition(spark, sf_dir, tmp_path):

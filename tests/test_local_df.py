@@ -34,28 +34,20 @@ def _row_path(spark, rows, ddl):
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ddl)
 
 
-def _jobs_of(spark, group, action):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-        return list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 @pytest.mark.parametrize("rows,ddl", CASES, ids=[c[1] for c in CASES])
-def test_local_df_matches_row_path_without_a_job(spark, rows, ddl):
+def test_local_df_matches_row_path_without_a_job(
+    spark, spark_work, rows, ddl
+):
     got = local_df(spark, rows, ddl)
     ref = _row_path(spark, rows, ddl)
     assert got.schema == ref.schema  # names, types and nullability
     assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
     out: list = []
-    assert _jobs_of(spark, f"local_df {ddl}", lambda: out.extend(got.collect())) == []
+    jobs, _, _ = spark_work(lambda: out.extend(got.collect()))
+    assert jobs == 0
     assert out == ref.collect()
     # the probe sees jobs when there are some: the row path runs one
-    assert _jobs_of(spark, f"row path {ddl}", ref.collect) != []
+    assert spark_work(ref.collect)[0] > 0
 
 
 def test_local_df_accepts_a_struct_type_and_dict_rows(spark):

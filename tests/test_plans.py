@@ -125,7 +125,7 @@ def test_ivf_probe_broadcasts_candidates(q):
     assert c["sort_merge_join"] == 0
 
 
-def test_ann_plan_builds_without_driver_jobs(spark, sf_dir):
+def test_ann_plan_builds_without_driver_jobs(spark, spark_work, sf_dir):
     """Building the ANN operator plans (LSH + IVF) over an already-loaded
     corpus must launch zero Spark jobs before the final action — the
     sign-LSH signature is a map-only column expression, not a collected
@@ -142,19 +142,16 @@ def test_ann_plan_builds_without_driver_jobs(spark, sf_dir):
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    sc = spark.sparkContext
-    sc.setJobGroup("ann-plan-build", "plan construction must be job-free")
-    try:
+
+    def build():
         for df in (
             lsh_cosine_topk(e.select("vec_id", "v"), query_id=0, nbits=4, k=10),
             ivf_cosine_topk(e.filter(F.col("vec_id") != 0), q, nprobe=2, k=10),
         ):
             _ = df.schema  # force full analysis — still no job
-        jobs = sc.statusTracker().getJobIdsForGroup("ann-plan-build")
-        assert list(jobs) == [], f"plan construction launched jobs {jobs}"
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+
+    jobs, _, _ = spark_work(build)
+    assert jobs == 0, f"plan construction launched {jobs} jobs"
 
 
 def test_partitioned_write_enables_partition_pruning(spark, sf_dir, tmp_path):
@@ -528,12 +525,17 @@ def test_maintenance_pruned_read_is_partition_filter(spark, sf_dir, tmp_path):
     assert "ReadSchema: struct<vec_id:bigint,v:array<double>>" in plan
 
 
-def test_hash_tier_update_has_no_present_set_job(spark, sf_dir, tmp_path):
+def test_hash_tier_update_has_no_present_set_job(
+    spark, spark_work, sf_dir, tmp_path
+):
     """A one-key layout-mode update of either hash-partitioned serving
     tier learns which partitions it still populates from an Observation
     on the publish write. A separate ``distinct().collect()`` over the
     rebuilt rows costs two more jobs per call, and inferring the HNSW
-    blob table's schema one more, so the updates stay at 6 jobs each."""
+    blob table's schema one more, so the updates stay at 6 jobs each.
+    The HNSW update runs Python for the one touched sub-index only: one
+    build task, where repartitioning to ``n_partitions`` starts a task
+    for every partition, touched or not (4 here)."""
     from pyspark.sql import functions as F
 
     from cinegraph_spark.operators.hnsw import (
@@ -561,22 +563,16 @@ def test_hash_tier_update_has_no_present_set_job(spark, sf_dir, tmp_path):
     pq_codes_save(e, pq_train(e, m=8, k=16), pq, n_partitions=4)
     pq_corpus_layout(e, pq_corpus, pq)
 
-    sc = spark.sparkContext
-    for group, update, most in (
-        ("hnsw-update", lambda: hnsw_index_update(hnsw_corpus, one, hnsw), 6),
-        ("pq-update", lambda: pq_codes_update(pq_corpus, one, pq), 6),
-    ):
-        sc.setJobGroup(group, group)
-        try:
-            update()
-            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        assert len(jobs) <= most, f"{group} launched {len(jobs)} jobs"
+    jobs, _, python_tasks = spark_work(
+        lambda: hnsw_index_update(hnsw_corpus, one, hnsw)
+    )
+    assert jobs <= 6, f"hnsw-update launched {jobs} jobs"
+    assert python_tasks == 1, f"hnsw-update ran {python_tasks} Python tasks"
+    jobs, _, _ = spark_work(lambda: pq_codes_update(pq_corpus, one, pq))
+    assert jobs <= 6, f"pq-update launched {jobs} jobs"
 
 
-def test_pq_index_read_job_ceiling(spark, sf_dir, tmp_path):
+def test_pq_index_read_job_ceiling(spark, spark_work, sf_dir, tmp_path):
     """A warm pq_index_topk read, plan build plus collect, runs at most 4
     jobs, and 5 with an admissible filter (one more broadcast). The books
     table is read under its declared schema, and one broadcast query row,
@@ -603,8 +599,7 @@ def test_pq_index_read_job_ceiling(spark, sf_dir, tmp_path):
     path = str(tmp_path / "pq")
     pq_codes_save(corpus, pq_train(e, m=8, k=16), path, n_partitions=4)
 
-    sc = spark.sparkContext
-    for group, read, most in (
+    for name, read, most in (
         ("pq-read", lambda: pq_index_topk(corpus, q, path, rerank=40), 4),
         (
             "pq-read-filtered",
@@ -613,31 +608,18 @@ def test_pq_index_read_job_ceiling(spark, sf_dir, tmp_path):
         ),
     ):
         read().collect()  # warm
-        sc.setJobGroup(group, group)
-        try:
-            rows = read().collect()
-            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        rows = []
+        jobs, _, _ = spark_work(lambda: rows.extend(read().collect()))
         assert len(rows) == 10
-        assert len(jobs) <= most, f"{group} launched {len(jobs)} jobs"
+        assert jobs <= most, f"{name} launched {jobs} jobs"
 
 
-def test_hnsw_index_read_job_ceiling(spark, sf_dir, tmp_path):
-    """A warm hnsw_index_knn read of a driver-built query batch, plan
-    build plus collect, runs at most 2 jobs (the search and its re-rank),
-    and hnsw_index_filtered_knn at most 5 (one more for the identity head
-    read, two for the broadcast admissible lists). The blob table is read
-    under its declared schema: inferring it costs one more job per
-    read."""
+def _hnsw_served(spark, sf_dir, tmp_path):
+    """A 4-partition HNSW serving table over the fixture embeddings, a
+    driver-built 2-query batch, and the label-2 admissible ids."""
     from pyspark.sql import functions as F
 
-    from cinegraph_spark.operators.hnsw import (
-        hnsw_index_filtered_knn,
-        hnsw_index_knn,
-        hnsw_index_save,
-    )
+    from cinegraph_spark.operators.hnsw import hnsw_index_save
     from cinegraph_spark.queries.util import T
     from cinegraph_spark.session import local_df
 
@@ -655,26 +637,84 @@ def test_hnsw_index_read_job_ceiling(spark, sf_dir, tmp_path):
     adm = e.filter(F.col("label") == 2).select("vec_id")
     path = str(tmp_path / "hnsw")
     hnsw_index_save(corpus, path, n_partitions=4)
+    return corpus, path, q, adm
 
-    sc = spark.sparkContext
-    for group, read, most in (
-        ("hnsw-read", lambda: hnsw_index_knn(spark, path, q, k=3), 2),
+
+def test_hnsw_index_read_job_ceiling(spark, spark_work, sf_dir, tmp_path):
+    """A warm hnsw_index_knn read of a driver-built query batch, plan
+    build plus collect, runs ONE job of one Python task: a blob table
+    smaller than one input split is searched by one task, whose single
+    output partition the re-rank window reads without a shuffle. The
+    filtered read runs at most 4 jobs (the identity head read and two
+    for the broadcast admissible lists, then the search). The blob
+    table is read under its declared schema: inferring it costs one
+    more job per read."""
+    from cinegraph_spark.operators.hnsw import (
+        hnsw_index_filtered_knn,
+        hnsw_index_knn,
+    )
+
+    _, path, q, adm = _hnsw_served(spark, sf_dir, tmp_path)
+    for name, read, most_jobs, most_python in (
+        ("hnsw-read", lambda: hnsw_index_knn(spark, path, q, k=3), 1, 1),
         (
             "hnsw-read-filtered",
             lambda: hnsw_index_filtered_knn(spark, path, q, adm, k=3),
-            5,
+            4,
+            1,
         ),
     ):
         read().collect()  # warm
-        sc.setJobGroup(group, group)
-        try:
-            rows = read().collect()
-            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        rows = []
+        jobs, _, python_tasks = spark_work(
+            lambda: rows.extend(read().collect())
+        )
         assert len(rows) == 6
-        assert len(jobs) <= most, f"{group} launched {len(jobs)} jobs"
+        assert jobs <= most_jobs, f"{name} launched {jobs} jobs"
+        assert python_tasks <= most_python, (
+            f"{name} ran {python_tasks} Python tasks"
+        )
+
+
+def test_hnsw_served_read_fans_out_past_one_split(
+    spark, spark_work, sf_dir, tmp_path
+):
+    """The served search packs sub-indexes into split-sized tasks, it
+    does not collapse every table into one: under a split size a third
+    of the blob table, the search runs in more than one Python task and
+    returns the same rows."""
+    from cinegraph_spark.operators.hnsw import _hnsw_table, hnsw_index_knn
+    from cinegraph_spark.session import scoped_confs
+
+    _, path, q, _ = _hnsw_served(spark, sf_dir, tmp_path)
+    want = sorted(map(tuple, hnsw_index_knn(spark, path, q, k=3).collect()))
+    _, idx = _hnsw_table(spark, path)
+    size = idx._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    rows = []
+    with scoped_confs(
+        spark, **{"spark.sql.files.maxPartitionBytes": str(int(size) // 3)}
+    ):
+        _, _, python_tasks = spark_work(
+            lambda: rows.extend(hnsw_index_knn(spark, path, q, k=3).collect())
+        )
+    assert python_tasks > 1
+    assert sorted(map(tuple, rows)) == want
+
+
+def test_hnsw_reshard_probe_is_one_job(spark, spark_work, sf_dir, tmp_path):
+    """A no-trigger hnsw_index_reshard reads the ≤ n_partitions rows'
+    identity and n_vectors in ONE column-pruned collect: a head read
+    plus a shuffled max(n_vectors) aggregate is 3 jobs, paid on every
+    micro-batch of a stream sink with auto-reshard."""
+    from cinegraph_spark.operators.hnsw import hnsw_index_reshard
+
+    corpus, path, _, _ = _hnsw_served(spark, sf_dir, tmp_path)
+    out = {}
+    jobs, _, _ = spark_work(
+        lambda: out.update(hnsw_index_reshard(corpus, path))
+    )
+    assert not out["resharded"] and out["max_subindex_rows"] > 0
+    assert jobs == 1, f"no-trigger reshard probe launched {jobs} jobs"
 
 
 def test_weighted_wor_is_map_only_take_ordered(q):

@@ -373,3 +373,49 @@ def test_writer_detects_lost_swap_race_as_success():
                 _FakeRaceFs(dest_e, src_e),
                 "src", "dest", "/tmp/t__swap__x", "/tmp/t", "/tmp/t__old__x",
             )
+
+
+def test_open_unversioned_state_raises_no_java_exception(
+    spark, tmp_path, monkeypatch
+):
+    """Opening an unversioned state answers "not versioned" without a
+    Java exception: a py4j-carried FileNotFoundException costs ~100x
+    the ``fs.exists`` probe, and most states a serving pass opens are
+    unversioned. The spy counts pyspark's conversions of captured Java
+    exceptions; a failing probe still raises (it is not swallowed)."""
+    import pyspark.errors.exceptions.captured as captured
+
+    from cinegraph_spark.operators.maintenance import hash_layout_save
+    from cinegraph_spark.operators.serving_io import (
+        _gens_fs,
+        _list_gen_dirs,
+        open_state,
+    )
+    from cinegraph_spark.session import local_df
+
+    path = str(tmp_path / "layout")
+    rows = [(i, float(i)) for i in range(8)]
+    hash_layout_save(local_df(spark, rows, "k long, x double"), path, "k", 2)
+
+    converted = []
+    convert = captured.convert_exception
+
+    def spy(jexc):
+        converted.append(jexc.getClass().getName())
+        return convert(jexc)
+
+    monkeypatch.setattr(captured, "convert_exception", spy)
+    assert open_state(spark, path) == path
+    assert converted == []
+
+    fs, jpath = _gens_fs(spark, path)
+
+    class Refusing:
+        def exists(self, p):
+            return True
+
+        def listStatus(self, p):
+            return fs.listStatus(jpath(str(p) + "-missing"))
+
+    with pytest.raises(Exception, match="FileNotFound|does not exist"):
+        _list_gen_dirs(Refusing(), jpath, path)
