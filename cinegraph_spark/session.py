@@ -80,6 +80,17 @@ ENGINE_CONFS: dict[str, str] = {
 }
 
 
+#: Entries in the JVM-wide LRU cache of classes compiled from generated
+#: code (``spark.sql.codegen.cache.maxEntries``, Spark default 100). A static
+#: conf: it is read once when the JVM starts, so ``get_spark`` sets it on
+#: the builder and it cannot live in ENGINE_CONFS. The largest working
+#: set measured is about 306 classes (serving set-up plus one pass of
+#: every request kind); one batch pass of eight queries needs 212. At
+#: 100 a repeated query recompiles its classes every time; 1000 keeps
+#: them all, at about 10 MB for a full cache.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def local_df(spark: SparkSession, rows, schema) -> "DataFrame":
     """A DataFrame over METADATA-SCALE local rows (ledgers, codebook
     tables, quotas, manifests, query and delta rows, empty result frames)
@@ -192,6 +203,10 @@ def tune(spark: SparkSession) -> SparkSession:
 
     The driver harness hands us its own SparkSession; this applies every
     conf that is still settable post-startup (all of ENGINE_CONFS are).
+    Static confs cannot change on a live session, so a session the host
+    created keeps the host's own size for the generated-code cache
+    (``CODEGEN_CACHE_ENTRIES`` applies only to sessions ``get_spark``
+    starts).
     """
     for k, v in ENGINE_CONFS.items():
         try:
@@ -256,4 +271,7 @@ def get_spark(
     )
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     builder = builder.config("spark.ui.enabled", "false")
+    builder = builder.config(
+        "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+    )
     return builder.getOrCreate()

@@ -149,3 +149,19 @@ def spark_work(spark):
         return len(jobs), tasks, python_tasks
 
     return run
+
+
+@pytest.fixture(scope="session")
+def codegen_compiles(spark):
+    """``codegen_compiles(action)`` runs ``action()`` and returns how many
+    classes the JVM's code generator compiled meanwhile: the count delta
+    of ``CodegenMetrics.METRIC_COMPILATION_TIME``, one sample per
+    compile. A class found in the generated-code cache adds none."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run(action):
+        before = metric.METRIC_COMPILATION_TIME().getCount()
+        action()
+        return metric.METRIC_COMPILATION_TIME().getCount() - before
+
+    return run
