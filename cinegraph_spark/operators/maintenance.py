@@ -1275,15 +1275,18 @@ def dv_stream_delete(
     idempotent and even fully OUT-OF-ORDER replay converges to the same
     sidecar bytes (no version column needed — deletes accumulate
     monotonically until a compact or a resurrecting upsert clears them).
-    Runs under the standard drain scoping (UTC clock, bounded shuffle)
-    via :func:`serving_io.drain_available_now`."""
-    from cinegraph_spark.operators.serving_io import drain_available_now
+    Runs under `streaming/windows.py::drain`."""
+    from cinegraph_spark.streaming.windows import drain
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
         layout_dv_delete(spark, path, batch_df)
 
-    drain_available_now(
-        spark, arrivals, _sink, checkpoint_dir, "dv_stream_delete"
+    drain(
+        spark,
+        arrivals.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append"),
+        "dv_stream_delete",
     )
 
 

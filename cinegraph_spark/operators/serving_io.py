@@ -1187,39 +1187,6 @@ def vacuum_generations(
     }
 
 
-def drain_available_now(
-    spark, arrivals, sink, checkpoint_dir: str, what: str
-) -> None:
-    """Shared ``availableNow`` drain loop for the streaming maintenance
-    drains (:func:`serving_stream_update`,
-    `operators/maintenance.py::dv_stream_delete`): run the
-    ``foreachBatch`` sink under the repo's standard drain scoping (UTC
-    session clock so no analysis-time expression bakes a hostile zone;
-    bounded shuffle so a plain driver session's 200 partitions don't
-    fragment the micro-batch jobs), and raise after
-    `streaming/windows.py::default_drain_timeout_s` rather than returning
-    with the stream still writing. Extracted r15 — three tiers carried
-    verbatim copies of this loop, and the drain contract must not drift
-    per tier."""
-    from cinegraph_spark.session import bounded_shuffle, scoped_confs
-    from cinegraph_spark.streaming.windows import default_drain_timeout_s
-
-    timeout_s = default_drain_timeout_s()
-    with scoped_confs(
-        spark, **{"spark.sql.session.timeZone": "UTC"}
-    ), bounded_shuffle(spark, 8):
-        q = (
-            arrivals.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"{what} did not finish in {timeout_s}s")
-
-
 def serving_stream_update(
     arrivals: DataFrame,
     sink,
@@ -1245,11 +1212,16 @@ def serving_stream_update(
     differently-numbered batches. No driver-local makedirs happens
     here: ``land_dir`` may live on HDFS or an object store, and the
     first batch's layout seed creates it through the path's own Hadoop
-    FileSystem. Runs under :func:`drain_available_now`."""
+    FileSystem. Runs under `streaming/windows.py::drain`."""
+    from cinegraph_spark.streaming.windows import drain
+
     if checkpoint_dir is None:
         checkpoint_dir = land_dir.rstrip("/") + "_checkpoint"
-    drain_available_now(
-        arrivals.sparkSession, arrivals, sink, checkpoint_dir,
+    drain(
+        arrivals.sparkSession,
+        arrivals.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append"),
         f"maintenance drain into {land_dir}",
     )
 

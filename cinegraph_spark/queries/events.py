@@ -964,8 +964,9 @@ def stream_mv_incremental_refresh(spark, sf_dir):
     from pyspark.sql.utils import AnalysisException
 
     from cinegraph_spark.operators.incremental import merge_agg_state
-    from cinegraph_spark.queries.util import bounded_shuffle, dstr, scoped_confs
+    from cinegraph_spark.queries.util import dstr
     from cinegraph_spark.session import local_df, scratch_dir
+    from cinegraph_spark.streaming.windows import drain
 
     scratch = scratch_dir("cg_stream_mv_")
     stage = scratch + "/in"
@@ -995,17 +996,7 @@ def stream_mv_incremental_refresh(spark, sf_dir):
         .parquet(stage)
     )
     for _delivery in range(2):  # second pass = full upstream re-delivery
-        with scoped_confs(
-            spark, **{"spark.sql.session.timeZone": "UTC"}
-        ), bounded_shuffle(spark, 8):
-            q = (
-                stream.writeStream.foreachBatch(apply)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(120):
-                q.stop()
-                raise TimeoutError("stream MV refresh drain timed out")
+        drain(spark, stream.writeStream.foreachBatch(apply), "stream MV refresh")
     try:
         agg = spark.read.parquet(state + "/agg")
     except AnalysisException:
@@ -1069,51 +1060,27 @@ def stream_session_dynamic_gap(spark, sf_dir):
     this wrong), and session_end is the max member end.
 
     Drain shape: availableNow in COMPLETE output mode through
-    ``foreachBatch``, each batch overwriting its own directory, and the
-    final state is the LAST batch's emission — complete mode re-emits
-    the whole result per batch, so reading the union (the append-mode
-    pattern) would duplicate sessions under a multi-batch source. At
-    production scale continuous session streams run in update/append
-    mode with watermark eviction instead; complete is the right shape
-    for a bounded re-sessionization job."""
-    import os
-
-    from cinegraph_spark.queries.util import bounded_shuffle, ntz, r4, scoped_confs, tstr
-    from cinegraph_spark.session import local_df, scratch_dir
+    `streaming/windows.py::run_availablenow_to_parquet`, whose
+    complete-mode read-back is the LAST batch's emission — complete mode
+    re-emits the whole result per batch, so reading the union (the
+    append-mode pattern) would duplicate sessions under a multi-batch
+    source. At production scale continuous session streams run in
+    update/append mode with watermark eviction instead; complete is the
+    right shape for a bounded re-sessionization job."""
+    from cinegraph_spark.queries.util import ntz, r4, tstr
+    from cinegraph_spark.session import scratch_dir
     from cinegraph_spark.streaming.windows import (
         read_events_stream,
+        run_availablenow_to_parquet,
         session_windows_dynamic_gap,
     )
 
-    out_dir = scratch_dir("cg_dyn_session_")
-    sessions = session_windows_dynamic_gap(read_events_stream(spark, sf_dir))
-
-    def land(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch-{batch_id:08d}"
-        )
-
-    with scoped_confs(
-        spark, **{"spark.sql.session.timeZone": "UTC"}
-    ), bounded_shuffle(spark, 8):
-        q = (
-            sessions.writeStream.foreachBatch(land)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("dynamic-gap session drain timed out")
-    batches = sorted(
-        d for d in os.listdir(out_dir) if d.startswith("batch-")
+    final = run_availablenow_to_parquet(
+        spark,
+        session_windows_dynamic_gap(read_events_stream(spark, sf_dir)),
+        scratch_dir("cg_dyn_session_"),
+        output_mode="complete",
     )
-    if not batches:  # zero staged files -> no batch fired
-        return local_df(
-            spark, [], "user_id long, session_start string, "
-            "session_end string, n_events long, total_value double"
-        )
-    final = spark.read.parquet(f"{out_dir}/{batches[-1]}")
     return final.select(
         "user_id",
         tstr(ntz(F.col("session_start"))).alias("session_start"),
@@ -1160,12 +1127,9 @@ def stream_mv_cdc_retract(spark, sf_dir):
     drain. TIMESTAMP_NTZ end to end; integer ten-thousandths units keep
     the merged state bit-identical to the recompute."""
     from cinegraph_spark.operators.incremental import merge_agg_state
-    from cinegraph_spark.queries.util import (
-        bounded_shuffle,
-        dstr,
-        scoped_confs,
-    )
+    from cinegraph_spark.queries.util import dstr, scoped_confs
     from cinegraph_spark.session import scratch_dir
+    from cinegraph_spark.streaming.windows import drain
 
     scratch = scratch_dir("cg_stream_cdc_")
     stage = scratch + "/in"
@@ -1207,17 +1171,7 @@ def stream_mv_cdc_retract(spark, sf_dir):
         .parquet(stage)
     )
     for _delivery in range(2):  # second pass = full upstream re-delivery
-        with scoped_confs(
-            spark, **{"spark.sql.session.timeZone": "UTC"}
-        ), bounded_shuffle(spark, 8):
-            q = (
-                stream.writeStream.foreachBatch(apply)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(120):
-                q.stop()
-                raise TimeoutError("stream CDC MV drain timed out")
+        drain(spark, stream.writeStream.foreachBatch(apply), "stream CDC MV")
     return spark.read.parquet(state + "/agg").select(
         "event_type",
         "day",

@@ -9,9 +9,9 @@ generalized to unbounded streams.
 
 Scale notes: state lives in the state store keyed by the group key — one
 entry per key, size bounded by the operator's own cap (top-k keeps k
-values, the profile keeps a fixed struct). Shuffle is one hash exchange on
-the key, identical to a streaming aggregation; RocksDB state store is the
-knob when key cardinality is large.
+values, the retention tracker the weeks it has seen). Shuffle is one hash
+exchange on the key, identical to a streaming aggregation; RocksDB state
+store is the knob when key cardinality is large.
 """
 
 from __future__ import annotations
@@ -213,70 +213,3 @@ def stateful_retention_offsets(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def stateful_user_profile(events: DataFrame) -> DataFrame:
-    """Running per-user activity profile: event count, value sum, first/last
-    event time, and the longest inter-event gap seen so far (in seconds).
-
-    The max-gap column is the genuinely stateful part — it needs the
-    previous batch's last timestamp, which no built-in streaming agg
-    exposes. This is the streaming twin of gaps-and-islands sessionization
-    with a *metric* instead of a window assignment.
-    """
-
-    def update_profile(key, pdf_iter, state):
-        if state.exists:
-            n, total, first_ts, last_ts, max_gap = state.get
-        else:
-            n, total, first_ts, last_ts, max_gap = 0, 0.0, None, None, 0.0
-        # ONE global sort over the whole micro-batch's rows for this key:
-        # pdf_iter yields multiple Arrow chunks for a large or multi-file
-        # group (maxRecordsPerBatch caps each chunk) in NO guaranteed time
-        # order — sorting each chunk independently would corrupt first/
-        # last/max_gap whenever a group spans chunks (e.g. an availableNow
-        # batch delivering part files out of time order).
-        chunks = [c for c in pdf_iter if len(c)]
-        frames = (
-            [pd.concat(chunks, ignore_index=True).sort_values("ts")]
-            if chunks
-            else []
-        )
-        for pdf in frames:
-            for ts, val in zip(pdf["ts"], pdf["value"]):
-                if last_ts is not None:
-                    gap = (ts - last_ts).total_seconds()
-                    if gap > max_gap:
-                        max_gap = gap
-                if first_ts is None:
-                    first_ts = ts
-                last_ts = ts
-                n += 1
-                total += 0.0 if pd.isna(val) else float(val)
-        state.update((n, total, first_ts, last_ts, max_gap))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "first_ts": [first_ts],
-                "last_ts": [last_ts],
-                "max_gap_s": [max_gap],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update_profile,
-        # TIMESTAMP (not ntz): applyInPandasWithState's state codec rejects
-        # timestamp_ntz; determinism comes from run_availablenow_to_memory
-        # scoping the drain to UTC instead
-        outputStructType=(
-            "user_id long, n_events long, total_value double, "
-            "first_ts timestamp, last_ts timestamp, max_gap_s double"
-        ),
-        stateStructType=(
-            "n long, total double, first_ts timestamp, last_ts timestamp, "
-            "max_gap double"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -7,9 +7,14 @@ token-domain sliding window (M2) is the batch cousin of these time windows.
 
 Each builder takes a *streaming* DataFrame (``df.isStreaming``) with an
 ``events``-shaped schema and returns the transformed streaming DataFrame;
-callers pick source and sink. ``run_availablenow_to_memory`` is the test
-harness: process all currently-available input, then stop — which makes
+callers pick source and sink. :func:`drain` is the package's one
+``availableNow`` drain: every stream here — the registered ``stream_*``
+queries, the serving-tier maintenance sinks, the DV erasure feed — runs
+all currently-available input through it and then stops, which makes
 streaming output comparable to the batch twin on the same files.
+``run_availablenow_to_parquet`` (executors write the emissions) and the
+test harness ``run_availablenow_to_memory`` are its two sinks with a
+read-back.
 
 Scale notes: state-store growth is bounded by the watermark horizon; keys
 are (window × type) / (user session) — both modest. At 100 TB/day the
@@ -28,15 +33,77 @@ from cinegraph_spark.schemas import EVENTS
 
 
 def default_drain_timeout_s() -> int:
-    """Timeout of every availableNow drain — the streaming queries here
-    and the serving maintenance drains
-    (`operators/serving_io.py::drain_available_now`): 120s fits every
-    fixture the registered queries run on (sf<=0.1);
-    CINEGRAPH_DRAIN_TIMEOUT_S raises it for bigger corpora (the r17 sf1 trend run needed ~300s for the
-    million-event stream-stream joins — a data-volume fact, not a plan
-    regression; the timeout exists to catch HANGS, so it must scale with
-    the input the caller feeds in)."""
+    """Timeout of every availableNow drain (:func:`drain`): 120s fits
+    every fixture the registered queries run on (sf<=0.1);
+    CINEGRAPH_DRAIN_TIMEOUT_S raises it for bigger corpora (the r17 sf1
+    trend run needed ~300s for the million-event stream-stream joins — a
+    data-volume fact, not a plan regression; the timeout exists to catch
+    HANGS, so it must scale with the input the caller feeds in). 0 times
+    a drain out as soon as it starts."""
     return int(os.environ.get("CINEGRAPH_DRAIN_TIMEOUT_S", "120"))
+
+
+def drain(
+    spark: SparkSession,
+    writer,
+    what: str,
+    shuffle_partitions: int | None = None,
+    final_no_data_batch: bool = True,
+) -> None:
+    """The one ``availableNow`` drain: start ``writer`` (a configured
+    ``DataStreamWriter`` — sink, output mode, optional checkpoint), run
+    all currently-available input through it, and return once the query
+    has stopped.
+
+    The stream executes entirely inside this call, under the session
+    zone scoped to UTC (so Arrow/pandas timestamp hops in stateful
+    operators see deterministic wall clocks whatever the caller's zone)
+    and ``spark.sql.shuffle.partitions`` capped at ``shuffle_partitions``
+    — stateful streaming disables AQE, so the state-store partition count
+    is exactly this number and each partition pays checkpoint-commit
+    overhead per micro-batch (measured: a 200-partition stream-stream
+    join drain took 47 s, seconds at 8). It defaults to
+    ``$CINEGRAPH_DRAIN_SHUFFLE`` (else 8) so a deployment can size state
+    parallelism to its key cardinality without touching query code. Per-
+    KEY skew is not fixed by more partitions: a streaming symmetric-hash
+    join scans every buffered match-side row of a key per input row of
+    that key, serially within the key's one partition (measured sf1: one
+    Zipf-hot user = 1.1B of 1.4B pair-scans).
+
+    ``final_no_data_batch=False`` skips the trailing no-data micro-batch
+    Spark otherwise runs to advance the watermark and flush
+    eviction-driven emissions (one extra full checkpoint commit —
+    measured ~1s of a ~3s local drain). ONLY safe for plans whose output
+    never depends on watermark eviction: inner stream-stream joins and
+    update-mode stateful operators emit on arrival/match, so they lose
+    nothing. Append-mode windowed aggregations, outer-join NULL
+    finalization, and session windows emit BY eviction — for those the
+    default must stay True or the drain silently drops the final
+    emissions.
+
+    A drain still running after :func:`default_drain_timeout_s` is
+    stopped and raises ``TimeoutError`` naming ``what``, instead of
+    returning while the stream still writes; the stop happens inside the
+    scoped-conf block, so the confs are never restored mid-stream."""
+    from cinegraph_spark.session import bounded_shuffle, scoped_confs
+
+    if shuffle_partitions is None:
+        shuffle_partitions = int(os.environ.get("CINEGRAPH_DRAIN_SHUFFLE", "8"))
+    timeout_s = default_drain_timeout_s()
+    with scoped_confs(
+        spark,
+        **{
+            "spark.sql.session.timeZone": "UTC",
+            "spark.sql.streaming.noDataMicroBatches.enabled": str(
+                bool(final_no_data_batch)
+            ).lower(),
+        },
+    ), bounded_shuffle(spark, shuffle_partitions):
+        q = writer.trigger(availableNow=True).start()
+        # awaitTermination refuses a zero timeout; 0 means "already late"
+        if timeout_s <= 0 or not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(f"{what} did not finish in {timeout_s}s")
 
 
 def _events_ts_unit_divisor(sf_dir: str) -> int:
@@ -98,8 +165,8 @@ def read_events_stream(
 
     ``ts`` stays TIMESTAMP (instant) here — Spark's watermark machinery
     rejects TIMESTAMP_NTZ event time. Session-tz independence is handled at
-    the edges instead: :func:`run_availablenow_to_memory` pins UTC for the
-    scope of the drain, and the registered stream queries convert outgoing
+    the edges instead: :func:`drain` pins UTC for the scope of the
+    drain, and the registered stream queries convert outgoing
     timestamps to NTZ (``queries/util.py::ntz``). The nanosAsLong read flag
     stays set for the session's lifetime — unlike the batch reader it
     cannot be scoped, because the streaming source re-reads parquet per
@@ -173,25 +240,6 @@ def sliding_counts(
     )
 
 
-def session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Native streaming session windows (``session_window`` with a dynamic
-    gap is the stateful operator the batch gaps-and-islands query mirrors)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 def streaming_dedup(
     events: DataFrame, keys: list[str] | None = None, watermark: str = "30 minutes"
 ) -> DataFrame:
@@ -207,39 +255,19 @@ def run_availablenow_to_memory(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "complete",
-    timeout_s: int | None = None,
 ) -> DataFrame:
-    """Test harness ONLY: drain all available input through the streaming
-    plan into an in-memory table; returns the result as a batch DataFrame.
-    Drained rows materialize in DRIVER memory — registered queries and
-    anything benched must use ``run_availablenow_to_parquet``, whose
-    executors write the emissions to files instead.
-
-    The drain runs with the session tz scoped to UTC (restored after): the
-    stream executes entirely inside this call, so Arrow/pandas timestamp
-    hops in stateful operators see deterministic UTC wall clocks whatever
-    the caller's session zone is. Shuffle partitions are scoped down too —
-    stateful streaming disables AQE, so a plain 200-partition session would
-    otherwise spin up 200 state-store partitions for a test-sized drain
-    (measured: the stream-stream join drain went 47 s → seconds)."""
-    from cinegraph_spark.session import bounded_shuffle, scoped_confs
-
-    with scoped_confs(spark, **{"spark.sql.session.timeZone": "UTC"}), bounded_shuffle(spark, 8):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(
-            default_drain_timeout_s() if timeout_s is None else timeout_s
-        ):
-            q.stop()
-            raise TimeoutError(
-                f"memory drain {query_name!r} did not finish in "
-                f"{default_drain_timeout_s() if timeout_s is None else timeout_s}s"
-            )
+    """Test harness ONLY: :func:`drain` all available input through the
+    streaming plan into an in-memory table; returns the result as a batch
+    DataFrame. Drained rows materialize in DRIVER memory — registered
+    queries and anything benched must use ``run_availablenow_to_parquet``,
+    whose executors write the emissions to files instead."""
+    drain(
+        spark,
+        stream_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode),
+        f"memory drain {query_name!r}",
+    )
     return spark.table(query_name)
 
 
@@ -248,12 +276,11 @@ def run_availablenow_to_parquet(
     stream_df: DataFrame,
     path: str,
     output_mode: str = "update",
-    timeout_s: int | None = None,
     transform=None,
     shuffle_partitions: int | None = None,
     final_no_data_batch: bool = True,
 ) -> DataFrame:
-    """Production drain: process all available input and write every
+    """Production drain: :func:`drain` all available input and write every
     micro-batch's emissions straight to a parquet directory via
     ``foreachBatch`` — executors write the files; NOTHING materializes on
     the driver, unlike the memory-sink twin whose drained rows all live in
@@ -263,10 +290,12 @@ def run_availablenow_to_parquet(
     here emit in update mode; the per-batch batch-DataFrame write is the
     standard Structured Streaming pattern for exactly that gap.
 
-    Same UTC/shuffle scoping as the memory drain (the stream executes
-    entirely inside this call). Returns a batch DataFrame over the written
-    files, read with the stream's own schema so an empty drain yields an
-    empty frame instead of a schema-inference error.
+    Returns a batch DataFrame over the written files, read with the
+    stream's own schema so an empty drain yields an empty frame instead
+    of a schema-inference error. Append and update mode read back every
+    batch's emissions; complete mode re-emits the whole result in every
+    batch, so it reads back the LAST batch only (the union would repeat
+    each row once per batch under a multi-file source).
 
     Idempotence + failure contract (hardened round 9): ``foreachBatch``
     is at-least-once, so each micro-batch writes to a *batch_id-keyed
@@ -274,11 +303,7 @@ def run_availablenow_to_parquet(
     foreachBatch pattern; a replayed batch (driver restart from
     checkpoint) overwrites its own directory instead of double-appending.
     The read-back uses ``recursiveFileLookup`` so the subdirectories are
-    plain file containers, not inferred partition columns. And a drain
-    that outruns ``timeout_s`` raises ``TimeoutError`` instead of
-    silently returning a partial directory while the stream still writes
-    (the stop + raise happen inside the scoped-conf block, so UTC/shuffle
-    confs are never restored mid-stream).
+    plain file containers, not inferred partition columns.
 
     ``transform`` (optional): a batch-DataFrame → batch-DataFrame callable
     applied to each micro-batch INSIDE ``foreachBatch`` before the write —
@@ -290,40 +315,11 @@ def run_availablenow_to_parquet(
     nondeterministic under repartitioned input. The read-back schema is
     derived by analyzing the transform against an empty frame.
 
-    ``shuffle_partitions`` sizes the drain's state store (and every other
-    shuffle inside the stream) for LOCAL test data — stateful streaming
-    disables AQE, so the state-store partition count is exactly this
-    number and each partition pays checkpoint-commit overhead per
-    micro-batch. On a real cluster size it to the stream's key
-    cardinality instead; it is a drain-shape knob, not a semantics knob.
-    Defaults to ``$CINEGRAPH_DRAIN_SHUFFLE`` (else 8) so a deployment can
-    size state parallelism without touching query code (r19: the cap is a
-    local-test constant — ``bounded_shuffle`` would otherwise clamp a
-    cluster session's partitioning down to 8). Note per-KEY skew is not
-    fixed by more partitions: a streaming symmetric-hash join scans every
-    buffered match-side row of a key per input row of that key, serially
-    within the key's one partition (measured sf1: one Zipf-hot user =
-    1.1B of 1.4B pair-scans → the drain is that key's single-thread time
-    regardless of this knob).
+    ``shuffle_partitions`` and ``final_no_data_batch`` are
+    :func:`drain`'s drain-shape knobs (state-store sizing; skipping the
+    trailing no-data batch on eviction-free plans)."""
+    from cinegraph_spark.session import local_df
 
-    ``final_no_data_batch=False`` skips the trailing no-data micro-batch
-    Spark otherwise runs to advance the watermark and flush
-    eviction-driven emissions (one extra full checkpoint commit —
-    measured ~1s of a ~3s local drain). ONLY safe for plans whose output
-    never depends on watermark eviction: inner stream-stream joins and
-    update-mode stateful operators emit on arrival/match, so they lose
-    nothing. Append-mode windowed aggregations, outer-join NULL
-    finalization, and session windows emit BY eviction — for those the
-    default must stay True or the drain silently drops the final
-    emissions."""
-    import os
-
-    from cinegraph_spark.session import bounded_shuffle, local_df, scoped_confs
-
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("CINEGRAPH_DRAIN_SHUFFLE", "8")
-        )
     if transform is None:
         schema = stream_df.schema
     else:
@@ -337,34 +333,19 @@ def run_availablenow_to_parquet(
             os.path.join(path, f"batch-{batch_id:08d}")
         )
 
-    with scoped_confs(
+    drain(
         spark,
-        **{
-            "spark.sql.session.timeZone": "UTC",
-            "spark.sql.streaming.noDataMicroBatches.enabled": str(
-                bool(final_no_data_batch)
-            ).lower(),
-        },
-    ), bounded_shuffle(spark, shuffle_partitions):
-        q = (
-            stream_df.writeStream.foreachBatch(_write_batch)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(
-            default_drain_timeout_s() if timeout_s is None else timeout_s
-        ):
-            q.stop()
-            raise TimeoutError(
-                f"parquet drain at {path} did not finish in "
-                f"{default_drain_timeout_s() if timeout_s is None else timeout_s}s"
-            )
-    return (
-        spark.read.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(path)
+        stream_df.writeStream.foreachBatch(_write_batch).outputMode(output_mode),
+        f"parquet drain at {path}",
+        shuffle_partitions,
+        final_no_data_batch,
     )
+    reader = spark.read.schema(schema).option("recursiveFileLookup", "true")
+    if output_mode == "complete":
+        batches = sorted(d for d in os.listdir(path) if d.startswith("batch-"))
+        if batches:
+            return reader.parquet(os.path.join(path, batches[-1]))
+    return reader.parquet(path)
 
 
 def session_windows_dynamic_gap(

@@ -11,7 +11,6 @@ from cinegraph_spark.queries.util import T
 from cinegraph_spark.streaming.windows import (
     read_events_stream,
     run_availablenow_to_memory,
-    session_windows,
     sliding_counts,
     streaming_dedup,
     tumbling_counts,
@@ -65,31 +64,6 @@ def test_sliding_stream_matches_batch(spark, sf_dir, events_stream):
     g = {(r.window_start, r.event_type): r.n_events for r in got.collect()}
     b = {(r.window_start, r.event_type): r.n_events for r in batch.collect()}
     assert g == b
-
-
-def test_session_stream_matches_batch_islands(spark, sf_dir, events_stream):
-    """session_window(streaming) must agree with the gaps-and-islands batch
-    computation (the oracle-checked query) on session count per user and
-    total events."""
-    got = run_availablenow_to_memory(
-        spark, session_windows(events_stream), "t_session"
-    )
-    from cinegraph_spark.queries import load_all
-
-    batch = load_all()["events_session_windows_30min"].spark(spark, sf_dir)
-    g = (
-        got.groupBy("user_id")
-        .agg(F.count("*").alias("n_sessions"), F.sum("n_events").alias("n_ev"))
-        .collect()
-    )
-    b = (
-        batch.groupBy("user_id")
-        .agg(F.count("*").alias("n_sessions"), F.sum("n_events").alias("n_ev"))
-        .collect()
-    )
-    assert {(r.user_id): (r.n_sessions, r.n_ev) for r in g} == {
-        (r.user_id): (r.n_sessions, r.n_ev) for r in b
-    }
 
 
 def test_streaming_dedup_drops_nothing_on_unique_ids(spark, sf_dir, events_stream):
@@ -201,48 +175,6 @@ def test_stateful_topk_matches_batch(spark, sf_dir, events_stream):
     assert g == b
 
 
-def test_stateful_user_profile_gap_metric(spark, sf_dir, events_stream):
-    """The stateful profile's max inter-event gap must equal the batch
-    lag-diff maximum per user (and counts/sums must agree)."""
-    from cinegraph_spark.streaming.stateful import stateful_user_profile
-
-    got = run_availablenow_to_memory(
-        spark,
-        stateful_user_profile(events_stream),
-        "t_stateful_profile",
-        output_mode="update",
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts")
-    batch = (
-        _batch_events(spark, sf_dir)
-        .withColumn("_prev", F.lag("ts").over(w))
-        # ts is TIMESTAMP_NTZ now — wall-clock diff, no double cast
-        .withColumn(
-            "gap",
-            F.expr("timestampdiff(MICROSECOND, _prev, ts)").cast("double") / 1e6,
-        )
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.coalesce("value", F.lit(0.0))).alias("total_value"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-            F.coalesce(F.max("gap"), F.lit(0.0)).alias("max_gap_s"),
-        )
-    )
-    g = {
-        r.user_id: (r.n_events, round(r.total_value, 4), r.first_ts, r.last_ts, round(r.max_gap_s, 3))
-        for r in got.collect()
-    }
-    b = {
-        r.user_id: (r.n_events, round(r.total_value, 4), r.first_ts, r.last_ts, round(r.max_gap_s, 3))
-        for r in batch.collect()
-    }
-    assert g == b
-
-
 def test_stream_stream_join_matches_batch(spark, sf_dir):
     """Stream-stream attribution join (watermark-bounded state) must equal
     the same predicate evaluated on static DataFrames."""
@@ -316,7 +248,12 @@ def test_dynamic_gap_sessions_stream_matches_batch(spark, sf_dir):
         for r in batch.collect()
     }
     assert g == b and len(g) > 0
-    wide = session_windows(read_events_stream(spark, sf_dir), gap="45 minutes")
+    wide = (
+        read_events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "45 minutes"), "user_id")
+        .count()
+    )
     n_wide = run_availablenow_to_memory(spark, wide, "t_wide_session").count()
     assert len(g) >= n_wide
 
@@ -473,6 +410,96 @@ def test_parquet_drain_empty_stream_yields_empty_frame(spark, tmp_path):
     }
 
 
+def test_parquet_drain_complete_mode_reads_last_batch(spark, sf_dir, tmp_path):
+    """Complete mode re-emits the whole result in every micro-batch, so
+    the read-back is the LAST batch only: a 2-file source drained one
+    file per batch must equal its batch twin, not count every row twice
+    over."""
+    import os
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from cinegraph_spark.streaming.windows import run_availablenow_to_parquet
+
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    outdir = tmp_path / "events.parquet"
+    outdir.mkdir()
+    n = tbl.num_rows // 2 + 1
+    for i in range(2):
+        pq.write_table(tbl.slice(i * n, n), f"{outdir}/part-{i}.parquet")
+
+    stream = read_events_stream(spark, str(tmp_path), max_files_per_trigger=1)
+    sink = tmp_path / "drain"
+    got = run_availablenow_to_parquet(
+        spark,
+        stream.groupBy("event_type").agg(F.count("*").alias("n_events")),
+        str(sink),
+        output_mode="complete",
+    )
+    assert len(os.listdir(sink)) >= 2  # the drain really ran two batches
+    assert dict(map(tuple, got.collect())) == Counter(
+        tbl["event_type"].to_pylist()
+    )
+
+
+def test_drain_timeout_env_reaches_every_drain(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """$CINEGRAPH_DRAIN_TIMEOUT_S is the one drain timeout: at 0 a
+    registered stream query and a serving maintenance drain each time
+    out, and neither leaves its query running."""
+    from cinegraph_spark.operators.serving_io import serving_stream_update
+    from cinegraph_spark.queries.events import stream_mv_incremental_refresh
+
+    monkeypatch.setenv("CINEGRAPH_DRAIN_TIMEOUT_S", "0")
+    with pytest.raises(TimeoutError, match="stream MV refresh"):
+        stream_mv_incremental_refresh(spark, sf_dir)
+    assert not spark.streams.active
+    with pytest.raises(TimeoutError, match="maintenance drain"):
+        serving_stream_update(
+            read_events_stream(spark, sf_dir),
+            lambda batch_df, batch_id: None,
+            str(tmp_path / "land"),
+        )
+    assert not spark.streams.active
+
+
+def test_one_availablenow_drain_in_package():
+    """`streaming/windows.py::drain` is the only place in the package that
+    starts and waits on an availableNow query, so the drain contract (UTC
+    scope, shuffle cap, one timeout) cannot drift per caller."""
+    import ast
+    import pathlib
+
+    import cinegraph_spark
+
+    root = pathlib.Path(cinegraph_spark.__file__).parent
+    hits = {"availableNow=True": [], "awaitTermination(": []}
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        funcs = [
+            f
+            for f in ast.walk(ast.parse(src))
+            if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for lineno, line in enumerate(src.splitlines(), 1):
+            for needle, found in hits.items():
+                if needle not in line:
+                    continue
+                inner = min(
+                    (f for f in funcs if f.lineno <= lineno <= f.end_lineno),
+                    key=lambda f: f.end_lineno - f.lineno,
+                    default=None,
+                )
+                found.extend(
+                    [(path.relative_to(root).as_posix(), inner and inner.name)]
+                    * line.count(needle)
+                )
+    for needle, found in hits.items():
+        assert found == [("streaming/windows.py", "drain")], (needle, found)
+
+
 def test_parquet_drain_multibatch_appends_once_per_batch(spark, tmp_path):
     """foreachBatch append across MULTIPLE micro-batches: a 4-part source
     with maxFilesPerTrigger=1 must land every input row in the parquet
@@ -588,51 +615,6 @@ def test_parquet_drain_crash_recovery_exactly_once(spark, tmp_path):
     )
     assert got == want
     assert not os.path.exists(f"{partial}/part-00000-partial.parquet")
-
-
-def test_profile_chunk_disorder_within_batch(spark, tmp_path):
-    """A large (or multi-file) group reaches the state function as
-    MULTIPLE Arrow chunks in no guaranteed time order; the profile must
-    sort the whole micro-batch once — the regression this pins is
-    per-chunk sorting, which corrupts first/last/max_gap whenever a
-    group spans chunks (maxRecordsPerBatch caps each chunk)."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cinegraph_spark.streaming.stateful import stateful_user_profile
-
-    ts = [100, 40, 90, 10, 70, 20, 60, 30]  # seconds, scrambled
-    tbl = pa.table(
-        {
-            "user_id": pa.array([7] * 8, pa.int64()),
-            "ts": pa.array([t * 1_000_000 for t in ts], pa.timestamp("us")),
-            "value": pa.array([float(i) for i in range(8)], pa.float64()),
-        }
-    )
-    outdir = tmp_path / "events.parquet"
-    outdir.mkdir()
-    pq.write_table(tbl, f"{outdir}/part-0.parquet")
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        stream = read_events_stream(spark, str(tmp_path))
-        got = run_availablenow_to_memory(
-            spark,
-            stateful_user_profile(stream),
-            f"t_prof_dis_{uuid.uuid4().hex[:6]}",
-            output_mode="update",
-        ).collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert len(got) == 1
-    r = got[0]
-    assert r["n_events"] == 8
-    # true time order 10..100: span 90 s; sorted gaps max out at 20 s —
-    # per-chunk sorting would yield a shorter span and a bogus max gap
-    assert (r["last_ts"] - r["first_ts"]).total_seconds() == 90.0
-    assert r["max_gap_s"] == 20.0
 
 
 def test_stateful_topk_all_null_values_group(spark, tmp_path):
