@@ -155,13 +155,14 @@ def cleaning_fn(name: str):
     return fn
 
 
-def clean_subtitles(col: Column, steps: tuple[str, ...] = CLEAN_STEP_ORDER) -> Column:
-    """The full deterministic cleaning chain as one Column expression.
+def clean_subtitles(col: Column) -> Column:
+    """The full deterministic cleaning chain (``CLEAN_STEP_ORDER``) as one
+    Column expression.
 
     Stays inside whole-stage codegen (pure regexp_replace/lower) — at 100 TB
     this is a map-only stage with zero shuffles and zero Python.
     """
-    for s in steps:
+    for s in CLEAN_STEP_ORDER:
         col = cleaning_fn(s)(col)
     return col
 
@@ -203,8 +204,8 @@ def cleaning_sql(name: str, expr: str) -> str:
     return expr
 
 
-def clean_subtitles_sql(expr: str, steps: tuple[str, ...] = CLEAN_STEP_ORDER) -> str:
+def clean_subtitles_sql(expr: str) -> str:
     """DuckDB SQL expression for the full deterministic chain."""
-    for s in steps:
+    for s in CLEAN_STEP_ORDER:
         expr = cleaning_sql(s, expr)
     return expr

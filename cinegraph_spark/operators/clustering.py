@@ -243,11 +243,11 @@ def emotional_shift(
     parent_centroid: np.ndarray | None,
     feature_names: list[str],
     n_emotions: int = 6,
-    delta_threshold: float = DELTA_THRESHOLD,
 ) -> str:
     """Shift label (``graph_creator.py:118-159``): top-2 positive deltas >
-    threshold → 'Higher {emotion} in act{N}'; bottom-1 negative < -threshold
-    → 'Lower ...'; std block excluded; fixed fallback strings."""
+    ``DELTA_THRESHOLD`` → 'Higher {emotion} in act{N}'; bottom-1 negative
+    < -threshold → 'Lower ...'; std block excluded; fixed fallback
+    strings."""
     if parent_centroid is None:
         return "Baseline Story Shape"
     deltas = np.asarray(child_centroid) - np.asarray(parent_centroid)
@@ -255,10 +255,10 @@ def emotional_shift(
     shifts = []
     order = np.argsort(deltas)
     for idx in order[-2:]:
-        if deltas[idx] > delta_threshold:
+        if deltas[idx] > DELTA_THRESHOLD:
             shifts.append("Higher " + feature_names[idx].replace("_", " in "))
     for idx in order[:1]:
-        if deltas[idx] < -delta_threshold:
+        if deltas[idx] < -DELTA_THRESHOLD:
             shifts.append("Lower " + feature_names[idx].replace("_", " in "))
     return ", ".join(shifts) if shifts else "Balanced/Nuanced Pacing"
 
@@ -301,10 +301,9 @@ NAMER_RETRIES = 5
 
 def retry_namer(
     llm: Callable[[str, list[dict], int], list[str]],
-    retries: int = NAMER_RETRIES,
 ) -> Callable[[str, list[dict]], list[str]]:
     """M7 — wrap a pluggable LLM callable in the reference's retry/validate
-    protocol (``clustering/utils.py:76-130``): up to ``retries`` calls of
+    protocol (``clustering/utils.py:76-130``): up to ``NAMER_RETRIES`` calls of
     ``llm(parent_name, groups, attempt)``; each response is validated
     (count, ≤ 4 words each, all unique — :func:`validate_names`); invalid
     responses AND raised exceptions consume a retry; when the budget is
@@ -320,7 +319,7 @@ def retry_namer(
 
     def namer(parent_name: str, groups: list[dict]) -> list[str]:
         n = len(groups)
-        for attempt in range(retries):
+        for attempt in range(NAMER_RETRIES):
             try:
                 names = [str(x) for x in llm(parent_name, groups, attempt)]
             except Exception:

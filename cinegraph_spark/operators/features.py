@@ -27,20 +27,21 @@ from pyspark.sql import functions as F
 from cinegraph_spark.schemas import EMOTIONS, NUM_ACTS
 
 
-def act_assign(window_id: Column, n_windows: Column, k: int = NUM_ACTS) -> Column:
-    """0-based act index for a window, matching np.array_split chunking."""
-    q = F.floor(n_windows / k)
-    r = n_windows % k
+def act_assign(window_id: Column, n_windows: Column) -> Column:
+    """0-based act index (of ``NUM_ACTS``) for a window, matching
+    np.array_split chunking."""
+    q = F.floor(n_windows / NUM_ACTS)
+    r = n_windows % NUM_ACTS
     cut = r * (q + 1)
     return F.when(window_id < cut, F.floor(window_id / (q + 1))).otherwise(
         r + F.floor((window_id - cut) / q)
     )
 
 
-def act_assign_sql(w: str, n: str, k: int = NUM_ACTS) -> str:
+def act_assign_sql(w: str, n: str) -> str:
     """DuckDB expression mirroring :func:`act_assign` (oracle parity)."""
-    q = f"({n} // {k})"
-    r = f"({n} % {k})"
+    q = f"({n} // {NUM_ACTS})"
+    r = f"({n} % {NUM_ACTS})"
     cut = f"({r} * ({q} + 1))"
     return (
         f"(CASE WHEN {w} < {cut} THEN {w} // ({q} + 1) "
@@ -51,12 +52,11 @@ def act_assign_sql(w: str, n: str, k: int = NUM_ACTS) -> str:
 def movie_features(
     windows: DataFrame,
     key_col: str = "movie_id",
-    min_windows: int = NUM_ACTS,
     round_to: int | None = None,
 ) -> DataFrame:
     """Per-window emotion frame → 24-dim feature row per movie.
 
-    Drops movies with fewer than ``min_windows`` windows (P2,
+    Drops movies with fewer than ``NUM_ACTS`` windows (P2,
     ``graph_creator.py:88-89``). Output columns: ``key_col``,
     ``{emotion}_act{1..3}`` (act means), ``{emotion}_std`` (sample std).
     """
@@ -64,7 +64,7 @@ def movie_features(
         F.count("*").alias("_n_windows"),
         *[F.stddev_samp(e).alias(f"{e}_std") for e in EMOTIONS],
     )
-    eligible = counts.filter(F.col("_n_windows") >= min_windows)
+    eligible = counts.filter(F.col("_n_windows") >= NUM_ACTS)
 
     with_act = windows.join(
         eligible.select(key_col, "_n_windows"), key_col

@@ -16,6 +16,12 @@ components IS the dedup-cluster assignment).
 Scale notes per algorithm in the docstrings. All of them keep state as
 (vertex, value) DataFrames partitioned by vertex id; messages flow along a
 symmetrized edge list that is computed once and cached.
+
+Edge lists carry ``src`` and ``dst`` columns (``sssp_bounded`` adds ``w``);
+only the connected-components operators take the column names. An
+*oriented* edge list is distinct with ``src < dst`` — the form every
+package caller builds (``copurchase_edges``, the near-dup pair plans), and
+the form ``degrees``, ``triangle_count`` and ``label_propagation`` require.
 """
 
 from __future__ import annotations
@@ -25,31 +31,30 @@ from pyspark.sql import functions as F
 
 from cinegraph_spark.session import bounded_shuffle, local_df
 
+#: PageRank damping factor (GraphX's default).
+DAMPING = 0.85
 
-def symmetrize(
-    edges: DataFrame, src: str = "src", dst: str = "dst", oriented: bool = False
-) -> DataFrame:
+
+def symmetrize(edges: DataFrame, oriented: bool = False) -> DataFrame:
     """Undirected view of an edge list: both directions, self-loops dropped,
     duplicates removed (one shuffle).
 
-    ``oriented=True`` declares the input already distinct with src < dst
-    (e.g., ``copurchase_edges``) — then fwd ∪ rev can't collide and the
-    dedup shuffle is skipped entirely (the union is map-only)."""
-    fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
+    ``oriented=True`` declares the input oriented (distinct, src < dst) —
+    then fwd ∪ rev can't collide and the dedup shuffle is skipped
+    entirely (the union is map-only)."""
+    fwd = edges.select("src", "dst")
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     both = fwd.unionByName(rev)
     if oriented:
         return both
     return both.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def degrees(
-    edges: DataFrame, src: str = "src", dst: str = "dst", oriented: bool = False
-) -> DataFrame:
-    """Undirected degree per vertex: (id, degree). With ``oriented=True``
-    the only shuffle is the final count aggregation."""
+def degrees(edges: DataFrame) -> DataFrame:
+    """Undirected degree per vertex of an oriented edge list: (id,
+    degree). The only shuffle is the final count aggregation."""
     return (
-        symmetrize(edges, src, dst, oriented=oriented)
+        symmetrize(edges, oriented=True)
         .groupBy(F.col("src").alias("id"))
         .agg(F.count("*").alias("degree"))
     )
@@ -60,8 +65,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    oriented: bool = False,
-    on_max_iter: str = "raise",
 ) -> DataFrame:
     """Min-label propagation connected components → (id, component).
 
@@ -78,16 +81,15 @@ def connected_components(
     ``localCheckpoint`` after each superstep truncates lineage so the plan
     stays O(1) per round instead of O(rounds).
 
-    ``on_max_iter`` controls what happens when the label fixpoint is NOT
-    reached within ``max_iter`` supersteps (graph diameter > max_iter):
-    ``"raise"`` (default) raises ``RuntimeError`` — partially-propagated
-    labels would silently split one true component into several, which
-    for the leakage-safe-split callers means near-duplicate documents
-    leaking across the train/heldout boundary; ``"truncate"`` returns the
-    partial labels for callers that explicitly want a bounded relaxation.
+    Any edge list works: messages flow both ways without a dedup shuffle,
+    and a duplicate or self-loop edge only repeats a message the min
+    already absorbs. When the label fixpoint is NOT reached within
+    ``max_iter`` supersteps (graph diameter > max_iter) it raises
+    ``RuntimeError`` — partially-propagated labels would silently split
+    one true component into several, which for the leakage-safe-split
+    callers means near-duplicate documents leaking across the
+    train/heldout boundary.
     """
-    if on_max_iter not in ("raise", "truncate"):
-        raise ValueError(f"on_max_iter must be 'raise' or 'truncate', got {on_max_iter!r}")
     # every superstep materializes eagerly (localCheckpoint) inside the
     # bounded-shuffle scope: a plain 200-partition session would otherwise
     # pay 200-task overhead per round on graphs this size
@@ -96,16 +98,15 @@ def connected_components(
         # rev) and the vertex union twice more, so an expensive upstream
         # (the near-dup pair plans every caller feeds in) would otherwise
         # re-execute 4x before the first superstep
-        edges = edges.select(src, dst).localCheckpoint(eager=True)
-        e = symmetrize(edges, src, dst, oriented=oriented)
-        e = e.localCheckpoint(eager=True)
-        # vertex set from the PRE-symmetrize endpoints: symmetrize drops
-        # self-loops, so deriving vertices from `e` would silently omit a
-        # vertex whose only edge is (v, v) — diverging from
-        # connected_components_star, which keeps it (component = itself)
+        edges = edges.select(
+            F.col(src).alias("src"), F.col(dst).alias("dst")
+        ).localCheckpoint(eager=True)
+        e = symmetrize(edges, oriented=True).localCheckpoint(eager=True)
+        # vertex set from the staged endpoints: a vertex whose only edge
+        # is (v, v) is its own component, as in connected_components_star
         labels = (
-            edges.select(F.col(src).alias("id"))
-            .unionByName(edges.select(F.col(dst).alias("id")))
+            edges.select(F.col("src").alias("id"))
+            .unionByName(edges.select(F.col("dst").alias("id")))
             .distinct()
             .withColumn("component", F.col("id"))
             .localCheckpoint(eager=True)
@@ -136,13 +137,12 @@ def connected_components(
             if n_changed == 0:
                 converged = True
                 break
-    if not converged and on_max_iter == "raise":
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
             "supersteps (graph diameter exceeds the round budget); partial "
             "labels would split true components. Raise max_iter, or use "
-            "connected_components_star (O(log^2) rounds), or pass "
-            "on_max_iter='truncate' to accept partial propagation."
+            "connected_components_star (O(log^2) rounds)."
         )
     return labels
 
@@ -172,7 +172,10 @@ def connected_components_star(
     convergence is detected with a constant-size (count, hash-sum)
     aggregate instead of a set comparison. After the fixpoint the edge set
     IS the star forest: every vertex points directly at its component
-    minimum. Component ids therefore match min-label's exactly.
+    minimum. Component ids therefore match min-label's exactly. No
+    fixpoint within ``max_rounds`` raises ``RuntimeError``, like
+    :func:`connected_components`: the unfinished edge set would split a
+    true component.
     """
     with bounded_shuffle(edges.sparkSession):
         # stage the raw edge list ONCE (vertex union + canonicalization
@@ -205,7 +208,8 @@ def connected_components_star(
 
 def _star_rounds(e: DataFrame, max_rounds: int) -> DataFrame:
     """Alternate large-star/small-star on a canonical edge set until the
-    (count, hash-sum) signature stabilizes; returns the star forest."""
+    (count, hash-sum) signature stabilizes; returns the star forest, or
+    raises when ``max_rounds`` rounds do not reach it."""
 
     def signature(df: DataFrame) -> tuple:
         row = df.agg(
@@ -250,35 +254,29 @@ def _star_rounds(e: DataFrame, max_rounds: int) -> DataFrame:
         )
         new_sig = signature(e)
         if new_sig == sig:
-            break
+            return e
         sig = new_sig
-    return e
+    raise RuntimeError(
+        f"connected_components_star did not converge within "
+        f"max_rounds={max_rounds} rounds; the unfinished edge set would "
+        "split true components. Raise max_rounds."
+    )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    iterations: int = 10,
-    dedupe: bool = True,
-) -> DataFrame:
-    """Standard damped PageRank over a directed edge list → (id, rank),
-    ranks summing to the vertex count (GraphX's convention).
+def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
+    """Standard damped PageRank (``DAMPING``) over a distinct directed
+    edge list → (id, rank), ranks summing to the vertex count (GraphX's
+    convention).
 
     Each iteration: rank/out_degree contributions flow along edges, one
     shuffle on dst, plus the teleport term. Dangling vertices keep their
     teleport share (their rank is not redistributed — matches GraphX's
     ``staticPageRank``). Out-degrees are computed once and re-joined each
     superstep; at scale, pre-partition edges and ranks on the same key so
-    the per-iteration join is co-located. ``dedupe=False`` skips the edge
-    dedup shuffle for inputs already known distinct.
+    the per-iteration join is co-located.
     """
     with bounded_shuffle(edges.sparkSession):
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if dedupe:
-            e = e.distinct()
-        e = e.localCheckpoint(eager=True)
+        e = edges.select("src", "dst").localCheckpoint(eager=True)
         verts = (
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
@@ -310,8 +308,8 @@ def pagerank(
                 .select(
                     "id",
                     (
-                        F.lit(1.0 - damping)
-                        + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
+                        F.lit(1.0 - DAMPING)
+                        + F.lit(DAMPING) * F.coalesce("in_sum", F.lit(0.0))
                     ).alias("rank"),
                 )
                 .localCheckpoint(eager=True)
@@ -319,24 +317,17 @@ def pagerank(
     return ranks
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst", oriented: bool = False
-) -> DataFrame:
-    """Per-vertex triangle counts → (id, triangles).
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Per-vertex triangle counts of an oriented edge list → (id,
+    triangles).
 
-    Orient every undirected edge low→high id, join oriented edges on the
-    shared low vertex to enumerate wedges, then close each wedge against
-    the oriented edge list — each triangle is produced exactly once
-    (a < b < c). Two shuffles; wedge fan-out is bounded by orienting edges
-    (each vertex only fans out to higher-id neighbors, the standard
-    degree-splitting trick). ``oriented=True`` skips re-orienting an input
-    already distinct with src < dst.
+    Join the low→high edges on the shared low vertex to enumerate wedges,
+    then close each wedge against the same edge list — each triangle is
+    produced exactly once (a < b < c). Two shuffles; wedge fan-out is
+    bounded by the orientation (each vertex only fans out to higher-id
+    neighbors, the standard degree-splitting trick).
     """
-    if oriented:
-        und = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    else:
-        und = symmetrize(edges, src, dst).filter(F.col("src") < F.col("dst"))
-    und = und.localCheckpoint(eager=True)
+    und = edges.select("src", "dst").localCheckpoint(eager=True)
     ab = und.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = und.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     ac = und.select(F.col("src").alias("a"), F.col("dst").alias("c"))
@@ -351,13 +342,7 @@ def triangle_count(
     return per_vertex
 
 
-def bfs_levels(
-    edges: DataFrame,
-    start_id,
-    src: str = "src",
-    dst: str = "dst",
-    max_depth: int = 20,
-) -> DataFrame:
+def bfs_levels(edges: DataFrame, start_id, max_depth: int = 20) -> DataFrame:
     """BFS from ``start_id`` over an undirected view → (id, level).
 
     Frontier expansion: join frontier to edges, anti-join against visited,
@@ -365,7 +350,7 @@ def bfs_levels(
     graph) — the Pregel 'active vertex set' idea expressed as DataFrames.
     """
     with bounded_shuffle(edges.sparkSession):
-        e = symmetrize(edges, src, dst).localCheckpoint(eager=True)
+        e = symmetrize(edges).localCheckpoint(eager=True)
         # seed id type follows the edge schema — a hardcoded `id long`
         # would reject string-keyed graphs (and force implicit casts in
         # the frontier join under ANSI) despite the module's generality
@@ -373,7 +358,7 @@ def bfs_levels(
 
         seed_schema = StructType(
             [
-                StructField("id", edges.schema[src].dataType),
+                StructField("id", edges.schema["src"].dataType),
                 StructField("level", IntegerType()),
             ]
         )
@@ -400,14 +385,7 @@ def bfs_levels(
     return visited
 
 
-def sssp_bounded(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-    w: str = "w",
-) -> DataFrame:
+def sssp_bounded(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
     """Weighted single-source(s) shortest path, bounded to paths of at
     most ``max_hops`` edges — Bellman-Ford expressed as frontier
     supersteps → ``(id, dist)``. ``edges`` is DIRECTED ``(src, dst, w)``
@@ -433,7 +411,7 @@ def sssp_bounded(
     pre-partitioned by ``src`` co-locate every superstep's join; state is
     one row per reached node; rounds are bounded by ``max_hops``."""
     with bounded_shuffle(edges.sparkSession):
-        e = edges.select(src, dst, w).localCheckpoint(eager=True)
+        e = edges.select("src", "dst", "w").localCheckpoint(eager=True)
         dist = (
             sources.select("id")
             .distinct()
@@ -443,10 +421,10 @@ def sssp_bounded(
         frontier = dist
         for _ in range(int(max_hops)):
             cand = (
-                e.join(frontier, e[src] == frontier["id"])
+                e.join(frontier, e["src"] == frontier["id"])
                 .select(
-                    F.col(dst).alias("id"),
-                    (F.col("dist") + F.col(w)).cast("long").alias("dist"),
+                    F.col("dst").alias("id"),
+                    (F.col("dist") + F.col("w")).cast("long").alias("dist"),
                 )
                 .groupBy("id")
                 .agg(F.min("dist").alias("cand"))
@@ -479,14 +457,9 @@ def sssp_bounded(
     return dist
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 5,
-    oriented: bool = False,
-) -> DataFrame:
-    """Synchronous label propagation → (id, label) after a FIXED number of
+def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
+    """Synchronous label propagation over an oriented edge list → (id,
+    label) after a FIXED number of
     supersteps: every vertex starts as its own label, and each round adopts
     the most frequent label among its neighbors (ties → smallest label).
     Communities emerge as label plateaus; the fixed iteration count makes
@@ -502,9 +475,7 @@ def label_propagation(
     left join (impossible on a symmetrized graph, kept for generality).
     """
     with bounded_shuffle(edges.sparkSession):
-        und = symmetrize(edges, src, dst, oriented=oriented).localCheckpoint(
-            eager=True
-        )
+        und = symmetrize(edges, oriented=True).localCheckpoint(eager=True)
         labels = (
             und.select(F.col("src").alias("id"))
             .distinct()

@@ -48,17 +48,17 @@ def node_representatives(
     tree: dict,
     key_col: str,
     feature_cols: list[str],
-    top: int = REPRESENTATIVES,
 ) -> None:
-    """C6 distributed: attach ``_representatives`` (the ``top`` member keys
-    closest to the node centroid, ``graph_creator.py:343-354``) to every
-    annotated tree node, without collecting the corpus.
+    """C6 distributed: attach ``_representatives`` (the ``REPRESENTATIVES``
+    member keys closest to the node centroid, ``graph_creator.py:343-354``)
+    to every annotated tree node, without collecting the corpus.
 
     Plan shape: a tiny (node, cluster, centroid) mapping table — Σ over
     nodes of their member-cluster count, ≤ nodes × k rows — broadcast-joined
     onto the assignments (each row fans out to its ≤depth ancestor nodes),
     distance computed as a JVM array expression against the in-row centroid,
-    then the C6 window top-k idiom per node. Only node_count × top (id, key)
+    then the C6 window top-k idiom per node. Only node_count ×
+    ``REPRESENTATIVES`` (id, key)
     pairs ever reach the driver.
     """
     annotated = [n for n in _iter_nodes(tree) if n.get("_centroid") is not None]
@@ -87,7 +87,7 @@ def node_representatives(
         .join(F.broadcast(mapping), "cluster")
         .select("_tag", key_col, dist.alias("_dist"))
         .withColumn("_rnk", F.row_number().over(w))
-        .filter(F.col("_rnk") <= top)
+        .filter(F.col("_rnk") <= REPRESENTATIVES)
         .orderBy("_tag", "_rnk")
         .select("_tag", key_col)
         .collect()

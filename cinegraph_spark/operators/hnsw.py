@@ -224,17 +224,25 @@ def _select_heuristic(cands, capn, Xn):
     return [nodes[i] for i in out_pos]
 
 
+#: Level-draw RNG seed of every HNSW build (every stored blob was built
+#: with it, so an append can resume the stored graph).
+HNSW_SEED = 42
+#: Search beam width of every served and broadcast k-NN read, and the
+#: decimals their emitted cosine is rounded to (the oracles' rounding).
+SEARCH_EF = 192
+ROUND_TO = 6
+
+
 def hnsw_build(
     ids: list[int],
     X: np.ndarray,
     M: int = 16,
     ef_construction: int = 192,
-    seed: int = 42,
 ) -> dict:
     """Deterministic multi-layer HNSW over (ids, X). ``ids`` must be sorted
     ascending (the insertion order is part of the determinism contract).
     Layer-0 degree cap is 2M (the standard M_max0), upper layers M."""
-    return _hnsw_insert(None, ids, X, M, ef_construction, seed)
+    return _hnsw_insert(None, ids, X, M, ef_construction)
 
 
 def _hnsw_insert(
@@ -243,11 +251,10 @@ def _hnsw_insert(
     X: np.ndarray,
     M: int,
     ef_construction: int,
-    seed: int,
 ) -> dict:
     """The one HNSW insertion loop. ``base`` None starts from the empty
     graph (:func:`hnsw_build`); otherwise ``base`` is an index (slim or
-    not) this loop built with the same ``M``/``ef_construction``/``seed``
+    not) this loop built with the same ``M``/``ef_construction``
     over the first ``n = len(base["ids"])`` entries of ``ids``/``X``, and
     the loop resumes at node n: the level RNG is advanced past the n
     draws the stored nodes consumed and ``base``'s graph is extended in
@@ -258,7 +265,7 @@ def _hnsw_insert(
     assert list(ids) == sorted(ids), "insertion order must be ascending ids"
     X = np.asarray(X, dtype=np.float64)
     Xn = _normalize(X)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(HNSW_SEED)
     ml = 1.0 / math.log(M)
     if base is None:
         layers: list[dict[int, list[int]]] = []
@@ -345,7 +352,7 @@ def _sorted_rows(pdf):
     return ids, np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
 
 
-def _subindex_from_batches(batches, M: int, ef_construction: int):
+def _subindex_from_batches(batches):
     """Concat one partition's Arrow batches into a single frame and build
     its deterministic sub-index (:func:`hnsw_build`). Returns ``None``
     for an empty partition."""
@@ -355,7 +362,7 @@ def _subindex_from_batches(batches, M: int, ef_construction: int):
     if not parts:
         return None
     ids, X = _sorted_rows(pd.concat(parts, ignore_index=True))
-    return hnsw_build(ids, X, M=M, ef_construction=ef_construction)
+    return hnsw_build(ids, X)
 
 
 def _subindex_blob(ids, X, old: bytes | None, M: int, ef_construction: int):
@@ -385,13 +392,12 @@ def _subindex_blob(ids, X, old: bytes | None, M: int, ef_construction: int):
                 return old
             if ids[n] > ids[n - 1]:
                 base = prev
-    # seed 42: hnsw_build's default, which every stored blob was built at
-    index = _hnsw_insert(base, ids, X, M, ef_construction, 42)
+    index = _hnsw_insert(base, ids, X, M, ef_construction)
     del index["Xn"]
     return pickle.dumps(index, protocol=4)
 
 
-def _score_query(index, pos, qid, qv, k, ef, round_to, top_n):
+def _score_query(index, pos, qid, qv, k, top_n):
     """The determinism-critical emit step, shared by all three query
     forms: beam-search ``k+1`` candidates (self-match excluded after), re-
     score each against the ORIGINAL vectors with the sequential fold (see
@@ -399,22 +405,16 @@ def _score_query(index, pos, qid, qv, k, ef, round_to, top_n):
     ``top_n`` as [(rounded_cos, nid)] ordered by (cos DESC, nid ASC)."""
     qv = np.asarray(qv, dtype=np.float64)
     X = index["X"]
-    cands = [nid for nid, _ in hnsw_search(index, qv, k + 1, ef) if nid != qid]
+    cands = [
+        nid for nid, _ in hnsw_search(index, qv, k + 1, SEARCH_EF) if nid != qid
+    ]
     return sorted(
-        ((round(_seq_cos(qv, X[pos[n]]), round_to), n) for n in cands),
+        ((round(_seq_cos(qv, X[pos[n]]), ROUND_TO), n) for n in cands),
         key=lambda t: (-t[0], t[1]),
     )[:top_n]
 
 
-def hnsw_cosine_knn(
-    e: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    ef: int = 192,
-    M: int = 16,
-    ef_construction: int = 192,
-    round_to: int = 6,
-) -> DataFrame:
+def hnsw_cosine_knn(e: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
     """Batched ANN k-NN: build the graph over ``e`` (vec_id, v — SMALL by
     contract, see module docstring), broadcast it, and search each row of
     ``queries`` (vec_id, v) map-side. Self-matches are excluded. Output
@@ -427,7 +427,7 @@ def hnsw_cosine_knn(
         return local_df(e.sparkSession, [], _RESULT_SCHEMA)
     ids = [int(r["vec_id"]) for r in rows]
     X = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
-    index = hnsw_build(ids, X, M=M, ef_construction=ef_construction)
+    index = hnsw_build(ids, X)
     pos = {vid: i for i, vid in enumerate(ids)}
     spark = e.sparkSession
     from cinegraph_spark.session import ensure_shipped
@@ -445,9 +445,7 @@ def hnsw_cosine_knn(
         for pdf in batches:
             out = {"qid": [], "nid": [], "cos_sim": [], "rnk": []}
             for qid, qv in zip(pdf["qid"], pdf["qv"]):
-                scored = _score_query(
-                    idx, posmap, qid, list(qv), k, ef, round_to, k
-                )
+                scored = _score_query(idx, posmap, qid, list(qv), k, k)
                 for r_, (cs, nid) in enumerate(scored, 1):
                     out["qid"].append(int(qid))
                     out["nid"].append(int(nid))
@@ -481,10 +479,6 @@ def hnsw_partitioned_knn(
     queries: DataFrame,
     k: int = 3,
     n_partitions: int | None = None,
-    ef: int = 192,
-    M: int = 16,
-    ef_construction: int = 192,
-    round_to: int = 6,
     target_rows_per_subindex: int = TARGET_ROWS_PER_SUBINDEX,
 ) -> DataFrame:
     """Scatter-gather HNSW — the FULL-CORPUS scale path (the broadcast
@@ -528,15 +522,13 @@ def hnsw_partitioned_knn(
     def local_search(batches):
         import pandas as pd
 
-        index = _subindex_from_batches(batches, M, ef_construction)
+        index = _subindex_from_batches(batches)
         if index is None:
             return
         pos = {vid: i for i, vid in enumerate(index["ids"])}
         out = {"qid": [], "nid": [], "cos_sim": []}
         for qid, qv in bq.value:
-            for cs, nid in _score_query(
-                index, pos, qid, qv, k, ef, round_to, k + 1
-            ):
+            for cs, nid in _score_query(index, pos, qid, qv, k, k + 1):
                 out["qid"].append(qid)
                 out["nid"].append(nid)
                 out["cos_sim"].append(cs)
@@ -800,7 +792,6 @@ def hnsw_index_update(
     path: str,
     M: int | None = None,
     ef_construction: int | None = None,
-    target_rows_per_subindex: int = TARGET_ROWS_PER_SUBINDEX,
 ) -> dict:
     """INCREMENTAL maintenance of a :func:`hnsw_index_save` serving table:
     rebuild only the sub-indexes whose partition membership changed.
@@ -823,14 +814,13 @@ def hnsw_index_update(
     partition emptied by deletes simply drops out of the table; an EMPTY
     serving table (vacuous index, e.g. built over a zero-row corpus) has
     no recoverable identity, so the update degrades to a fresh full
-    :func:`hnsw_index_save` of ``e``.
+    :func:`hnsw_index_save` of ``e`` at the default partition target.
 
-    ``target_rows_per_subindex`` applies ONLY to the empty-table degrade
-    branch (it sizes the fresh full save); on the normal path
-    ``n_partitions`` is immutable table identity, so per-partition row
-    counts grow with accumulated adds until :func:`hnsw_index_reshard`
-    right-sizes the table (it triggers off the stored ``n_vectors``
-    metadata and rebuilds bit-identically to a fresh save).
+    On the normal path ``n_partitions`` is immutable table identity, so
+    per-partition row counts grow with accumulated adds until
+    :func:`hnsw_index_reshard` right-sizes the table (it triggers off the
+    stored ``n_vectors`` metadata and rebuilds bit-identically to a fresh
+    save).
 
     Scale shape — compute, scan, AND write all ∝ change (r13; the r12
     verdict's weak finding covered the scan, and the blob table hides
@@ -899,12 +889,7 @@ def hnsw_index_update(
             if corpus_path is not None
             else e
         )
-        hnsw_index_save(
-            e_df,
-            path,
-            target_rows_per_subindex=target_rows_per_subindex,
-            **kwargs,
-        )
+        hnsw_index_save(e_df, path, **kwargs)
         return {
             "n_partitions": None,
             "rebuilt_partitions": [],
@@ -1233,8 +1218,6 @@ def hnsw_index_knn(
     path: str,
     queries: DataFrame,
     k: int = 3,
-    ef: int = 192,
-    round_to: int = 6,
     generation: int | None = None,
 ) -> DataFrame:
     """QUERY-MANY half: search a persisted :func:`hnsw_index_save` table.
@@ -1267,9 +1250,7 @@ def hnsw_index_knn(
         if "Xn" not in index:  # slim blob: rebuild, bit-identical
             index["Xn"] = _normalize(index["X"])
         pos = {vid: i for i, vid in enumerate(index["ids"])}
-        return lambda qid, qv: _score_query(
-            index, pos, qid, qv, k, ef, round_to, k + 1
-        )
+        return lambda qid, qv: _score_query(index, pos, qid, qv, k, k + 1)
 
     return _served_knn(spark, queries, k, idx, idx.select("blob"), open_blob)
 
@@ -1280,7 +1261,6 @@ def hnsw_index_filtered_knn(
     queries: DataFrame,
     admissible: DataFrame,
     k: int = 3,
-    round_to: int = 6,
     generation: int | None = None,
 ) -> DataFrame:
     """FILTERED search against a persisted :func:`hnsw_index_save` table —
@@ -1363,7 +1343,7 @@ def hnsw_index_filtered_knn(
             return sorted(
                 (
                     (
-                        round(_seq_cos(qv, X[rows_idx[j]]), round_to),
+                        round(_seq_cos(qv, X[rows_idx[j]]), ROUND_TO),
                         ids_adm[j],
                     )
                     for j in range(len(rows_idx))

@@ -465,7 +465,6 @@ def evolve_agg_state(
     keys: list[str],
     from_batch_id: int,
     new_sums: dict[str, str] | None = None,
-    new_hist_maps: list[str] | None = None,
     backfill: DataFrame | None = None,
     keep_generations: int | None = None,
 ) -> dict:
@@ -473,11 +472,10 @@ def evolve_agg_state(
     verdict task 7): widen the persisted aggregate with new measure
     columns WITHOUT the full rebuild that adding a measure otherwise
     requires. ``new_sums`` maps column → DDL type (the retractable
-    sum class), ``new_hist_maps`` lists new ``map<bigint,bigint>``
-    histogram columns (also retractable). Existing groups start at the
-    measure's additive identity (0 / empty map) unless ``backfill`` — a
-    frame of ``keys`` + any subset of the new columns, e.g. a one-off
-    recompute over historical facts — provides values.
+    sum class). Existing groups start at the measure's additive
+    identity (0) unless ``backfill`` — a frame of ``keys`` + any subset
+    of the new columns, e.g. a one-off recompute over historical facts —
+    provides values.
 
     ``from_batch_id`` is the EPOCH: the first batch id whose delta
     carries the new measures' real partials. It is recorded in the
@@ -496,9 +494,8 @@ def evolve_agg_state(
     Readers interpret an evolved column as "this measure, accumulated
     from the epoch onward (plus any backfill)". Retractions of
     pre-epoch facts must ship ZERO for evolved measures — their
-    contribution was never added; the histogram negative-bin guard
-    catches violations for hist columns, sum columns are the caller's
-    contract (negative sums are legitimate values). Single-writer
+    contribution was never added; that is the caller's contract
+    (negative sums are legitimate values). Single-writer
     contract as everywhere in this module.
 
     ``keep_generations``: for a view refreshed with generations, the
@@ -513,12 +510,8 @@ def evolve_agg_state(
     )
 
     new_sums = dict(new_sums or {})
-    new_hist_maps = list(new_hist_maps or [])
-    if not new_sums and not new_hist_maps:
-        raise ValueError(
-            "evolve_agg_state: nothing to add (new_sums and "
-            "new_hist_maps are both empty)"
-        )
+    if not new_sums:
+        raise ValueError("evolve_agg_state: nothing to add (new_sums is empty)")
     try:
         state_dir = open_state(spark, path)
     except IOError:
@@ -570,21 +563,13 @@ def evolve_agg_state(
             "reached (or rebuild the view with a backfilled recompute)"
         )
     old = spark.read.parquet(agg_dir)
-    clash = sorted(
-        (set(new_sums) | set(new_hist_maps)) & set(old.columns)
-    )
+    clash = sorted(set(new_sums) & set(old.columns))
     if clash:
         raise ValueError(
             f"evolve_agg_state: column(s) {clash} already exist in the "
             f"view at {path}; evolution only ADDS measures"
         )
     defaults = {c: F.lit(0).cast(ddl) for c, ddl in new_sums.items()}
-    defaults.update(
-        {
-            c: F.expr("cast(map() as map<bigint,bigint>)")
-            for c in new_hist_maps
-        }
-    )
     widened = old
     if backfill is not None:
         back_cols = [c for c in backfill.columns if c not in keys]
@@ -636,11 +621,7 @@ def evolve_agg_state(
             widened = widened.withColumn(c, d)
     widened = widened.localCheckpoint(eager=True)
     n_groups = widened.count()
-    evo_rows = [
-        (c, "sum", int(from_batch_id)) for c in sorted(new_sums)
-    ] + [
-        (c, "hist_map", int(from_batch_id)) for c in sorted(new_hist_maps)
-    ]
+    evo_rows = [(c, "sum", int(from_batch_id)) for c in sorted(new_sums)]
     if _dir_exists(spark, evo_dir):
         prior = [
             (r["column"], r["measure_class"], int(r["from_batch_id"]))

@@ -267,9 +267,7 @@ def _read_json(spark: SparkSession, path: str) -> dict:
     return json.loads(txt)
 
 
-def layout_meta(
-    spark: SparkSession, path: str, generation: int | None = None
-) -> dict:
+def layout_meta(spark: SparkSession, path: str) -> dict:
     """Read a layout's ``_LAYOUT.json`` identity manifest. Raises a named
     error when the directory is not a clustered layout — callers treat
     that as 'lay the corpus out first', never as 'scan it anyway'.
@@ -277,9 +275,8 @@ def layout_meta(
     The state is opened with `serving_io.open_state`, so a layout
     parked under ``__old__``/``__swap__`` siblings by a crashed swap is
     restored before the manifest probe instead of reading as
-    'not a clustered layout'. ``generation`` pins a versioned layout to
-    a retained generation."""
-    return _layout_meta_at(spark, open_state(spark, path, generation))
+    'not a clustered layout'."""
+    return _layout_meta_at(spark, open_state(spark, path))
 
 
 def _layout_meta_at(spark: SparkSession, path: str) -> dict:
@@ -581,10 +578,7 @@ def _layout_read_at(
     return _dv_apply(spark, df, path, meta)
 
 
-def layout_pruned_read(
-    spark: SparkSession, path: str, parts: list,
-    generation: int | None = None,
-) -> DataFrame:
+def layout_pruned_read(spark: SparkSession, path: str, parts: list) -> DataFrame:
     """Read ONLY the named partition values of a clustered layout. The
     filter lands on the raw partition directory column (before any cast),
     so Catalyst resolves it at planning time as ``PartitionFilters`` —
@@ -594,7 +588,7 @@ def layout_pruned_read(
     maintenance scan-proportional to the change."""
     from pyspark.sql import functions as F
 
-    path = open_state(spark, path, generation)
+    path = open_state(spark, path)
     meta = _layout_meta_at(spark, path)
     raw = _layout_raw(spark, path, meta)
     parts = list(parts)

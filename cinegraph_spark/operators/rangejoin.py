@@ -32,7 +32,7 @@ joins at all (SURVEY §2.10) — this operator exists for the engine's own
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,12 +42,10 @@ def banded_range_join(
     left_on: str,
     right_on: str,
     band: float,
-    extra_on: Column | None = None,
 ) -> DataFrame:
     """Join ``left`` and ``right`` on ``abs(left[left_on] - right[right_on])
-    <= band`` via band-width bucketing (module docstring). ``extra_on``
-    adds any further join predicate (applied post-join, e.g. a key
-    inequality for self-joins). Rows with a NULL band key never match —
+    <= band`` via band-width bucketing (module docstring). Rows with a
+    NULL band key never match —
     same as the theta form. Column sets must be disjoint; the result
     carries both sides' columns."""
     if band <= 0:
@@ -89,8 +87,6 @@ def banded_range_join(
     cond = (F.col(right_on) >= F.col(left_on) - F.lit(band)) & (
         F.col(right_on) <= F.col(left_on) + F.lit(band)
     )
-    if extra_on is not None:
-        cond = cond & extra_on
     return (
         lb.join(rb, "_band_bucket")
         .filter(cond)

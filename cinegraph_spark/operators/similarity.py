@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from cinegraph_spark.functions import vector as V
 
 
-def label_centroids(e: DataFrame, label: str = "label", v: str = "v") -> DataFrame:
+def label_centroids(e: DataFrame) -> DataFrame:
     """Per-label mean vector → (label, cv: array<double>).
 
     posexplode → avg per (label, dim) → re-assemble ordered by dim. The
@@ -42,9 +42,9 @@ def label_centroids(e: DataFrame, label: str = "label", v: str = "v") -> DataFra
     corpus size, so the partial aggregation does all the heavy lifting
     map-side at any scale.
     """
-    flat = e.select(label, F.posexplode(v).alias("dim", "x"))
-    cent = flat.groupBy(label, "dim").agg(F.avg("x").alias("c"))
-    return cent.groupBy(label).agg(
+    flat = e.select("label", F.posexplode("v").alias("dim", "x"))
+    cent = flat.groupBy("label", "dim").agg(F.avg("x").alias("c"))
+    return cent.groupBy("label").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
         ).alias("cv")
@@ -56,8 +56,6 @@ def ivf_cosine_topk(
     q: DataFrame,
     nprobe: int = 2,
     k: int = 10,
-    label: str = "label",
-    v: str = "v",
 ) -> DataFrame:
     """IVF ANN: probe the ``nprobe`` cells whose centroid is most cosine-
     similar to the query, then exact cosine top-k within them.
@@ -71,12 +69,10 @@ def ivf_cosine_topk(
     cell, the candidate read is partition pruning so cost scales with
     nprobe/ncells of the data, the IVF contract.
     """
-    return _probe_then_exact_topk(
-        e, q, label_centroids(e, label, v), nprobe, k, label, v
-    )
+    return _probe_then_exact_topk(e, q, label_centroids(e), nprobe, k)
 
 
-def _probe_ranking(cents, q, nprobe, label):
+def _probe_ranking(cents, q, nprobe):
     """The probe: rank stored/derived centroids by cosine against the
     broadcast query. ROUNDED to 9 decimals before ranking (repo
     convention: float aggregates round on both sides) so a last-ulp
@@ -87,15 +83,15 @@ def _probe_ranking(cents, q, nprobe, label):
     return (
         cents.crossJoin(F.broadcast(q))
         .select(
-            label,
+            "label",
             F.round(V.cosine(F.col("cv"), F.col("qv")), 9).alias("csim"),
         )
-        .orderBy(F.desc("csim"), F.asc(label))
+        .orderBy(F.desc("csim"), F.asc("label"))
         .limit(nprobe)
     )
 
 
-def _exact_topk_within(cand, q, k, label, v):
+def _exact_topk_within(cand, q, k):
     """Exact cosine top-k among an already-restricted candidate frame —
     shared tail of every IVF search form so the emit/tie-break contract
     lives in exactly one place."""
@@ -103,24 +99,22 @@ def _exact_topk_within(cand, q, k, label, v):
         cand.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.col(label),
-            F.round(V.cosine(F.col(v), F.col("qv")), 6).alias("cos_sim"),
+            "label",
+            F.round(V.cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def _probe_then_exact_topk(e, q, cents, nprobe, k, label, v):
+def _probe_then_exact_topk(e, q, cents, nprobe, k):
     """Shared IVF body (r12 review: was duplicated between the
     rebuild-per-query and persisted-table forms): pick the ``nprobe``
     cells whose centroid is most cosine-similar to the broadcast query
     (see :func:`_probe_ranking` for the rounding contract), then exact
     cosine top-k within them."""
-    probed = _probe_ranking(cents, q, nprobe, label).select(label)
-    return _exact_topk_within(
-        e.join(F.broadcast(probed), label), q, k, label, v
-    )
+    probed = _probe_ranking(cents, q, nprobe).select("label")
+    return _exact_topk_within(e.join(F.broadcast(probed), "label"), q, k)
 
 
 def lsh_bucket_col(v, nbits: int):
@@ -161,7 +155,6 @@ def lsh_cosine_topk(
     query_id: int,
     nbits: int = 4,
     k: int = 10,
-    v: str = "v",
 ) -> DataFrame:
     """Sign-LSH ANN: exact cosine top-k among the vectors sharing the query
     vector's ``nbits``-bit bucket.
@@ -175,9 +168,9 @@ def lsh_cosine_topk(
     so building this plan launches no Spark job — the one prior driver
     action (reading the vector dimension) is gone.
     """
-    eb = e.withColumn("bucket", lsh_bucket_col(F.col(v), nbits))
+    eb = e.withColumn("bucket", lsh_bucket_col(F.col("v"), nbits))
     qrow = eb.filter(F.col("vec_id") == query_id).select(
-        F.col(v).alias("qv"), F.col("bucket").alias("qbucket")
+        F.col("v").alias("qv"), F.col("bucket").alias("qbucket")
     )
     return (
         eb.crossJoin(F.broadcast(qrow))
@@ -185,7 +178,7 @@ def lsh_cosine_topk(
         .select(
             "vec_id",
             "bucket",
-            F.round(V.cosine(F.col(v), F.col("qv")), 6).alias("cos_sim"),
+            F.round(V.cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
@@ -196,14 +189,15 @@ def lsh_cosine_topk(
 # IVF-PQ: product quantization (codebook train / encode / ADC top-k)
 # ---------------------------------------------------------------------------
 
+#: Seed and Lloyd iteration count of every PQ codebook fit.
+PQ_TRAIN_SEED = 42
+PQ_TRAIN_ITERS = 15
+
 
 def pq_train(
     e: DataFrame,
     m: int = 8,
     k: int = 16,
-    v: str = "v",
-    seed: int = 42,
-    iters: int = 15,
 ) -> list[list[list[float]]]:
     """Train per-subspace PQ codebooks: split every vector into ``m``
     contiguous sub-vectors and run seeded Lloyd's KMeans(``k``)
@@ -213,14 +207,14 @@ def pq_train(
     Spark shape: one ``applyInPandas`` over exactly ``m`` groups — the m
     independent small fits are the *group* axis, so they train in parallel
     in one shuffle. Rows are sorted by id inside each group and the RNG is
-    derived from (seed, subspace), so training is bit-deterministic for a
-    given corpus. At 100 TB you train on a content-hash sample (PQ codebooks
+    derived from (``PQ_TRAIN_SEED``, subspace), so training is
+    bit-deterministic for a given corpus. At 100 TB you train on a content-hash sample (PQ codebooks
     saturate at ~100k training points); pass that sample as ``e``.
     """
     import numpy as np
     import pandas as pd
 
-    dim = _arr_len(e, v)
+    dim = _arr_len(e)
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m
@@ -232,7 +226,7 @@ def pq_train(
                 F.sequence(F.lit(0), F.lit(m - 1)),
                 lambda j: F.struct(
                     j.alias("j"),
-                    F.slice(F.col(v), j * dsub + 1, dsub).alias("sv"),
+                    F.slice(F.col("v"), j * dsub + 1, dsub).alias("sv"),
                 ),
             )
         ).alias("s"),
@@ -242,7 +236,7 @@ def pq_train(
         j = int(pdf["j"].iloc[0])
         pdf = pdf.sort_values("vec_id")
         X = np.vstack(pdf["sv"].to_numpy())
-        rng = np.random.default_rng(seed * 1009 + j)
+        rng = np.random.default_rng(PQ_TRAIN_SEED * 1009 + j)
         # kmeans++ seeding
         centers = [X[rng.integers(len(X))]]
         for _ in range(1, k):
@@ -253,7 +247,7 @@ def pq_train(
             p = d2 / d2.sum() if d2.sum() > 0 else None
             centers.append(X[rng.choice(len(X), p=p)])
         C = np.asarray(centers, dtype=np.float64)
-        for _ in range(iters):
+        for _ in range(PQ_TRAIN_ITERS):
             a = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
             for c in range(k):
                 if (a == c).any():
@@ -272,10 +266,10 @@ def pq_train(
     return [books[j] for j in range(m)]
 
 
-def _arr_len(e: DataFrame, v: str) -> int:
+def _arr_len(e: DataFrame) -> int:
     """Array length from the first row — used only at *train* time (training
     is eager anyway); the encode/search expressions never launch jobs."""
-    row = e.select(v).first()
+    row = e.select("v").first()
     if row is None or row[0] is None:
         raise ValueError("PQ training requires a non-empty vector corpus")
     return len(row[0])
@@ -284,6 +278,9 @@ def _arr_len(e: DataFrame, v: str) -> int:
 #: The PQ state's ``books`` table (one row per subspace). Declared, never
 #: inferred: the table identity lives in these columns, and inference
 #: would cost a parquet-footer job on every read and maintenance call.
+#: Rows per codes partition when ``pq_codes_save`` picks the count.
+PQ_ROWS_PER_PARTITION = 1_048_576
+
 _PQ_BOOKS_DDL = (
     "j int, codebook array<array<double>>, n_partitions int, "
     "key_ddl string, codes_schema string"
@@ -346,7 +343,6 @@ def pq_topk(
     codebooks: list[list[list[float]]],
     k: int = 10,
     rerank: int = 40,
-    v: str = "v",
 ) -> DataFrame:
     """IVF-PQ search with ADC + exact re-rank: approximate every corpus
     vector's dot product against the query from its PQ codes
@@ -359,12 +355,12 @@ def pq_topk(
     bandwidth win that makes PQ the 100 TB serving layout), and precision
     comes back in the re-rank, which touches only ``rerank`` full vectors.
     """
-    enc = e.withColumn("_codes", pq_encode_col(F.col(v), codebooks))
+    enc = e.withColumn("_codes", pq_encode_col(F.col("v"), codebooks))
     cand = (
         enc.crossJoin(F.broadcast(_pq_query(q, codebooks)))
         .select(
             "vec_id",
-            v,
+            "v",
             "qv",
             _pq_adc(F.col("_lut"), F.col("_codes")).alias("adc_score"),
         )
@@ -374,14 +370,14 @@ def pq_topk(
     return (
         cand.select(
             "vec_id",
-            F.round(V.cosine(F.col(v), F.col("qv")), 6).alias("cos_sim"),
+            F.round(V.cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def ivf_cell_stats(e: DataFrame, label: str = "label", v: str = "v") -> DataFrame:
+def ivf_cell_stats(e: DataFrame) -> DataFrame:
     """Per-cell serving-state rows: (label, n_vectors, centroid) with a
     DETERMINISTIC, plan-independent centroid.
 
@@ -397,14 +393,14 @@ def ivf_cell_stats(e: DataFrame, label: str = "label", v: str = "v") -> DataFram
     :func:`label_centroids`). 18 fractional digits exceed a double's
     precision and 20 integral digits cover any realistic cell sum; under
     ANSI a genuine overflow raises rather than corrupting the state."""
-    flat = e.select(label, F.posexplode(v).alias("dim", "x"))
-    cent = flat.groupBy(label, "dim").agg(
+    flat = e.select("label", F.posexplode("v").alias("dim", "x"))
+    cent = flat.groupBy("label", "dim").agg(
         (F.sum(F.col("x").cast("decimal(38,18)")) / F.count("*"))
         .cast("double")
         .alias("m"),
         F.count("*").alias("n"),
     )
-    return cent.groupBy(label).agg(
+    return cent.groupBy("label").agg(
         F.max("n").alias("n_vectors"),  # n is identical across dims
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "m"))),
@@ -414,8 +410,7 @@ def ivf_cell_stats(e: DataFrame, label: str = "label", v: str = "v") -> DataFram
 
 
 def ivf_centroids_save(
-    e: DataFrame, path: str, label: str = "label", v: str = "v",
-    keep_generations: int | None = None,
+    e: DataFrame, path: str, keep_generations: int | None = None
 ) -> None:
     """BUILD-ONCE half of the IVF serving shape: persist the per-cell
     centroid table (one row per cell: label, n_vectors, centroid) that
@@ -436,21 +431,19 @@ def ivf_centroids_save(
     # refuses NULL keys and equi-joins can't address a NULL cell — the
     # stale centroid could then never be recomputed or dropped. A corpus
     # with unlabeled rows must assign a sentinel cell before serving.
-    n_null = e.filter(F.col(label).isNull()).count()
+    n_null = e.filter(F.col("label").isNull()).count()
     if n_null:
         raise ValueError(
             f"ivf_centroids_save: {n_null} corpus row(s) have a NULL "
-            f"{label}; a NULL cell cannot be addressed by the update "
+            "label; a NULL cell cannot be addressed by the update "
             "path's equi-joins, so its centroid would be unmaintainable "
             "— assign a sentinel cell value instead"
         )
     with publish_dir(e.sparkSession, path, keep_generations) as tmp:
-        ivf_cell_stats(e, label, v).write.parquet(tmp)
+        ivf_cell_stats(e).write.parquet(tmp)
 
 
-def ivf_corpus_layout(
-    e: DataFrame, corpus_path: str, label: str = "label"
-) -> None:
+def ivf_corpus_layout(e: DataFrame, corpus_path: str) -> None:
     """Persist the corpus physically partitioned by its cell column — the
     layout `ivf_cosine_topk`'s docstring promises at 100 TB (probe =
     partition pruning) and the one that makes :func:`ivf_centroids_update`
@@ -461,15 +454,13 @@ def ivf_corpus_layout(
     refuses NULL cells — same rule as ivf_centroids_save)."""
     from cinegraph_spark.operators.maintenance import column_layout_save
 
-    column_layout_save(e, corpus_path, label)
+    column_layout_save(e, corpus_path, "label")
 
 
 def ivf_centroids_update(
     e: DataFrame | str,
     delta: DataFrame,
     path: str,
-    label: str = "label",
-    v: str = "v",
 ) -> dict:
     """INCREMENTAL maintenance of an :func:`ivf_centroids_save` table:
     recompute only the cells the delta touches (same contract as
@@ -507,15 +498,15 @@ def ivf_centroids_update(
     spark = delta.sparkSession if corpus_path is not None else e.sparkSession
     if corpus_path is not None:
         lmeta = layout_meta(spark, corpus_path)
-        if lmeta["kind"] != "column" or lmeta["part_col"] != label:
+        if lmeta["kind"] != "column" or lmeta["part_col"] != "label":
             raise ValueError(
                 f"ivf_centroids_update: layout at {corpus_path} is not "
-                f"partitioned by the cell column {label!r}; rebuild it "
+                "partitioned by the cell column 'label'; rebuild it "
                 "with ivf_corpus_layout"
             )
         cell_ddl = lmeta["part_ddl"]
     else:
-        cell_ddl = e.schema[label].dataType.simpleString()
+        cell_ddl = e.schema["label"].dataType.simpleString()
     from cinegraph_spark.operators.serving_io import open_state
 
     # a versioned root resolves to its CURRENT generation: in-place
@@ -532,25 +523,25 @@ def ivf_centroids_update(
             if corpus_path is not None
             else e
         )
-        ivf_centroids_save(e_df, path, label=label, v=v)
+        ivf_centroids_save(e_df, path)
         return {"rebuilt_cells": [], "full_rebuild": True}
-    if label not in old.columns:
+    if "label" not in old.columns:
         raise ValueError(
             f"ivf_centroids_update: stored table at {path} has no "
-            f"{label!r} column; it was saved under a different cell "
+            "'label' column; it was saved under a different cell "
             "column — rebuild with ivf_centroids_save"
         )
-    stored_ddl = old.schema[label].dataType.simpleString()
+    stored_ddl = old.schema["label"].dataType.simpleString()
     if cell_ddl != stored_ddl:
         # same drift rule as the hash tiers: unionByName would silently
         # coerce the stored label column and the serving table's declared
         # cell type would change under its consumers
         raise ValueError(
             f"ivf_centroids_update: corpus cell type {cell_ddl} differs "
-            f"from the stored table's {label} type {stored_ddl}; cast "
+            f"from the stored table's label type {stored_ddl}; cast "
             "the corpus cell back or rebuild with ivf_centroids_save"
         )
-    cast_cell = F.col(label).try_cast(cell_ddl)
+    cast_cell = F.col("label").try_cast(cell_ddl)
     # one aggregation job covers the NULL-cell refusal AND the touched-
     # cell set (r18 — same job merge as hnsw_index_update: the pre-merge
     # shape paid a filter-count job, an eager localCheckpoint, and a
@@ -562,7 +553,7 @@ def ivf_centroids_update(
     ).first()
     if int(stats["bad"]):
         raise ValueError(
-            f"ivf_centroids_update: {int(stats['bad'])} delta {label} "
+            f"ivf_centroids_update: {int(stats['bad'])} delta label "
             f"value(s) are NULL or do not cast to the corpus cell type "
             f"{cell_ddl}; a NULL cell key would silently "
             "leave the intended cell's centroid stale — fix the delta input"
@@ -574,13 +565,13 @@ def ivf_centroids_update(
         src = layout_pruned_read(spark, corpus_path, changed)
     else:
         src = e.filter(cast_cell.isin(changed))
-    rebuilt = ivf_cell_stats(src, label, v)
+    rebuilt = ivf_cell_stats(src)
     # keep NULL-label rows explicitly: ivf_centroids_save refuses NULL
     # labels today, but `~isin` alone would silently DELETE them from a
     # hand-written or legacy centroid table, where the pre-r18
     # left_anti join preserved them (r18 ADVICE)
     kept = old.filter(
-        ~F.col(label).isin(changed) | F.col(label).isNull()
+        ~F.col("label").isin(changed) | F.col("label").isNull()
     )
     atomic_swap_write(kept.unionByName(rebuilt), path)
     return {"rebuilt_cells": changed, "full_rebuild": False}
@@ -592,8 +583,6 @@ def ivf_index_topk(
     path: str,
     nprobe: int = 2,
     k: int = 10,
-    label: str = "label",
-    v: str = "v",
     cell_filter=None,
     generation: int | None = None,
 ) -> DataFrame:
@@ -645,33 +634,28 @@ def ivf_index_topk(
     corpus_path = e if isinstance(e, str) else None
     spark = q.sparkSession if corpus_path is not None else e.sparkSession
     cents = spark.read.parquet(open_state(spark, path, generation)).select(
-        label, F.col("centroid").alias("cv")
+        "label", F.col("centroid").alias("cv")
     )
     if cell_filter is not None:
         cents = cents.filter(cell_filter)
     if corpus_path is None:
-        return _probe_then_exact_topk(e, q, cents, nprobe, k, label, v)
+        return _probe_then_exact_topk(e, q, cents, nprobe, k)
     lmeta = layout_meta(spark, corpus_path)
-    if lmeta["kind"] != "column" or lmeta["part_col"] != label:
+    if lmeta["kind"] != "column" or lmeta["part_col"] != "label":
         raise ValueError(
             f"ivf_index_topk: layout at {corpus_path} is not "
-            f"partitioned by the cell column {label!r}; rebuild it with "
+            "partitioned by the cell column 'label'; rebuild it with "
             "ivf_corpus_layout"
         )
-    probed = [
-        r[label]
-        for r in _probe_ranking(cents, q, nprobe, label).collect()
-    ]
+    probed = [r["label"] for r in _probe_ranking(cents, q, nprobe).collect()]
     cand = layout_pruned_read(spark, corpus_path, probed)
-    return _exact_topk_within(cand, q, k, label, v)
+    return _exact_topk_within(cand, q, k)
 
 
 def ivf_stream_maintenance_sink(
     base: DataFrame,
     land_dir: str,
     path: str,
-    label: str = "label",
-    v: str = "v",
     validate_cells: bool = False,
 ):
     """``foreachBatch`` sink for STREAMING IVF maintenance — the IVF-tier
@@ -739,7 +723,7 @@ def ivf_stream_maintenance_sink(
         if not recover_landing_layout(
             spark, land_dir, "ivf_stream_maintenance_sink"
         ):
-            ivf_corpus_layout(base, land_dir, label)
+            ivf_corpus_layout(base, land_dir)
 
     def _check_cells(batch_df: DataFrame) -> None:
         # cross-cell re-embed guard (opt-in): one column-pruned scan of
@@ -747,9 +731,9 @@ def ivf_stream_maintenance_sink(
         # runs BEFORE the landing so a violation leaves the layout and
         # the centroid table untouched
         stored = layout_read(spark, land_dir).select(
-            "vec_id", F.col(label).alias("_stored_cell")
+            "vec_id", F.col("label").alias("_stored_cell")
         )
-        probe = batch_df.select("vec_id", F.col(label).alias("_new_cell"))
+        probe = batch_df.select("vec_id", F.col("label").alias("_new_cell"))
         moved = (
             stored.join(F.broadcast(probe), "vec_id")
             .filter(F.col("_stored_cell") != F.col("_new_cell"))
@@ -772,9 +756,7 @@ def ivf_stream_maintenance_sink(
         if validate_cells:
             _check_cells(batch_df)
         column_layout_upsert(spark, land_dir, batch_df, key="vec_id")
-        ivf_centroids_update(
-            land_dir, batch_df.select(label), path, label=label, v=v
-        )
+        ivf_centroids_update(land_dir, batch_df.select("label"), path)
 
     return apply
 
@@ -784,8 +766,6 @@ def pq_codes_save(
     codebooks: list[list[list[float]]],
     path: str,
     n_partitions: int | None = None,
-    target_rows_per_partition: int = 1_048_576,
-    v: str = "v",
     keep_generations: int | None = None,
 ) -> None:
     """BUILD-ONCE half of the PQ serving shape: persist the trained
@@ -795,7 +775,9 @@ def pq_codes_save(
     code array<int>, ~4m bytes/vector instead of 8·dim — the scan-
     bandwidth compression that makes PQ the 100 TB serving layout),
     written ``partitionBy(part_id)`` so maintenance can replace touched
-    partition DIRECTORIES instead of rewriting the corpus. Books and
+    partition DIRECTORIES instead of rewriting the corpus (without
+    ``n_partitions``, one partition per ``PQ_ROWS_PER_PARTITION`` rows).
+    Books and
     codes flip together under one atomic sibling-swap — a crash can never
     leave codes encoded against missing or mismatched codebooks.
 
@@ -826,7 +808,7 @@ def pq_codes_save(
     if n_partitions is None:
         n_rows = int(stats["n"])
         n_partitions = max(
-            1, -(-n_rows // max(1, target_rows_per_partition))
+            1, -(-n_rows // PQ_ROWS_PER_PARTITION)
         )
     key_ddl = e.schema["vec_id"].dataType.simpleString()
     codes_schema = f"vec_id {key_ddl}, code array<int>, part_id int"
@@ -842,7 +824,7 @@ def pq_codes_save(
     )
     codes = e.select(
         "vec_id",
-        pq_encode_col(F.col(v), codebooks).alias("code"),
+        pq_encode_col(F.col("v"), codebooks).alias("code"),
         hash_part_expr(n_partitions, "vec_id").alias("part_id"),
     )
     with publish_dir(spark, path, keep_generations) as tmp:
@@ -917,9 +899,7 @@ def pq_corpus_layout(e: DataFrame, corpus_path: str, path: str) -> None:
     hash_layout_save(e, corpus_path, "vec_id", n_partitions)
 
 
-def pq_codes_update(
-    e: DataFrame | str, delta: DataFrame, path: str, v: str = "v"
-) -> dict:
+def pq_codes_update(e: DataFrame | str, delta: DataFrame, path: str) -> dict:
     """INCREMENTAL maintenance of a :func:`pq_codes_save` state: re-encode
     only the partition directories the delta's keys hash into.
 
@@ -960,7 +940,7 @@ def pq_codes_update(
     def encode(src: DataFrame, _changed: list) -> DataFrame:
         return src.select(
             "vec_id",
-            pq_encode_col(F.col(v), codebooks).alias("code"),
+            pq_encode_col(F.col("v"), codebooks).alias("code"),
             "part_id",
         )
 
@@ -977,7 +957,6 @@ def pq_index_topk(
     path: str,
     k: int = 10,
     rerank: int = 40,
-    v: str = "v",
     admissible: DataFrame | None = None,
     generation: int | None = None,
 ) -> DataFrame:
@@ -1078,16 +1057,14 @@ def pq_index_topk(
     return (
         fetched.select(
             "vec_id",
-            F.round(V.cosine(F.col(v), F.col("qv")), 6).alias("cos_sim"),
+            F.round(V.cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def pq_stream_maintenance_sink(
-    base: DataFrame, land_dir: str, path: str, v: str = "v"
-):
+def pq_stream_maintenance_sink(base: DataFrame, land_dir: str, path: str):
     """``foreachBatch`` sink for STREAMING PQ maintenance — the PQ-tier
     mirror of `operators/hnsw.py::hnsw_stream_maintenance_sink`: merge the
     micro-batch into the hash-partitioned corpus layout at ``land_dir``
@@ -1141,6 +1118,6 @@ def pq_stream_maintenance_sink(
                 path,
             )
         hash_layout_upsert(spark, land_dir, batch_df, version=batch_id)
-        pq_codes_update(land_dir, batch_df.select("vec_id"), path, v=v)
+        pq_codes_update(land_dir, batch_df.select("vec_id"), path)
 
     return apply

@@ -36,18 +36,17 @@ def tokenize_whitespace(text: Column) -> Column:
 def windowize(
     df: DataFrame,
     key_col: str,
-    tokens_col: str = "tokens",
     window_size: int = WINDOW_SIZE,
     stride: int = STRIDE,
     keep_tokens: bool = True,
 ) -> DataFrame:
-    """Explode each row's token array into sliding windows.
+    """Explode each row's ``tokens`` array into sliding windows.
 
     Output columns: ``key_col, window_id, window_start, window_end`` and
     (optionally) ``window_tokens``. Empty token arrays produce no windows,
     matching the reference's ``while start < n`` loop.
     """
-    n = F.size(F.col(tokens_col))
+    n = F.size(F.col("tokens"))
     # ceil(n/stride) start offsets; empty token array -> no windows (the
     # reference's `while start < n` loop body never runs).
     starts = F.when(n > 0, F.sequence(F.lit(0), n - 1, F.lit(stride))).otherwise(
@@ -55,7 +54,7 @@ def windowize(
     )
     exploded = df.select(
         F.col(key_col),
-        F.col(tokens_col),
+        F.col("tokens"),
         n.alias("_n"),
         F.posexplode(starts).alias("window_id", "window_start"),
     )
@@ -69,7 +68,7 @@ def windowize(
         *(
             [
                 F.slice(
-                    F.col(tokens_col), F.col("window_start") + 1, window_size
+                    F.col("tokens"), F.col("window_start") + 1, window_size
                 ).alias("window_tokens")
             ]
             if keep_tokens

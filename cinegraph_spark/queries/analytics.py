@@ -507,6 +507,47 @@ def _mh_b(i: int) -> int:
     return 997 * i + 1
 
 
+def _mh_minima(sh: DataFrame) -> DataFrame:
+    """(doc_id, shingle) → (doc_id, m0..m15): each shingle's 32-bit md5
+    prefix in the mod-prime universe, then the minimum of every affine
+    permutation over the doc's shingles."""
+    h = (
+        F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
+        % _MH_P
+    ).alias("h")
+    return sh.select("doc_id", h).groupBy("doc_id").agg(
+        *[
+            F.min((F.lit(_mh_a(i)) * F.col("h") + F.lit(_mh_b(i))) % _MH_P).alias(
+                f"m{i}"
+            )
+            for i in range(_MH_PERMS)
+        ]
+    )
+
+
+def _mh_side(sig: DataFrame, idc: str, prefix: str) -> DataFrame:
+    """(doc_id, m0..m15) → (idc, {prefix}0..{prefix}15): one side of a
+    signature comparison join."""
+    return sig.select(
+        F.col("doc_id").alias(idc),
+        *[F.col(f"m{i}").alias(f"{prefix}{i}") for i in range(_MH_PERMS)],
+    )
+
+
+def _mh_matches():
+    """How many of the 16 minima agree between the joined ``a`` and ``b``
+    signature sides (:func:`_mh_side`)."""
+    return sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        for i in range(_MH_PERMS)
+    )
+
+
+def _mh_est():
+    """Signature-agreement Jaccard estimate, rounded to 4 places."""
+    return F.round(_mh_matches() / F.lit(float(_MH_PERMS)), 4)
+
+
 def _portable_minhash_sigs(spark, sf_dir):
     """Per-doc portable MinHash signature (m0..m15): 8-token shingles with
     the discovery-mode DF cap (<= 20, mirroring the oracle's ``sh`` CTE),
@@ -516,21 +557,8 @@ def _portable_minhash_sigs(spark, sf_dir):
     postings = sh.groupBy("shingle").agg(
         F.collect_list("doc_id").alias("ids")
     ).filter(F.size("ids") <= 20)
-    capped = postings.select(
-        F.explode("ids").alias("doc_id"), "shingle"
-    )
-    h = (
-        F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
-        % _MH_P
-    ).alias("h")
-    hashed = capped.select("doc_id", h)
-    return hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(_mh_a(i)) * F.col("h") + F.lit(_mh_b(i))) % _MH_P).alias(
-                f"m{i}"
-            )
-            for i in range(_MH_PERMS)
-        ]
+    return _mh_minima(
+        postings.select(F.explode("ids").alias("doc_id"), "shingle")
     )
 
 
@@ -589,27 +617,10 @@ def dedup_minhash_portable_est(spark, sf_dir):
     pairs = ngram_jaccard_pairs_df(spark, sf_dir).select(
         "id_a", "id_b", "jaccard"
     )
-    a = sig.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(_MH_PERMS)],
-    )
-    b = sig.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(_MH_PERMS)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(_MH_PERMS)
-    )
     return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(matches / F.lit(float(_MH_PERMS)), 4).alias("est_jaccard"),
-            "jaccard",
-        )
+        pairs.join(_mh_side(sig, "id_a", "a"), "id_a")
+        .join(_mh_side(sig, "id_b", "b"), "id_b")
+        .select("id_a", "id_b", _mh_est().alias("est_jaccard"), "jaccard")
     )
 
 
@@ -695,51 +706,16 @@ def dedup_minhash_incremental_screen(spark, sf_dir):
     sig = _portable_minhash_sigs(spark, sf_dir).localCheckpoint(eager=False)
     inc = sig.filter(F.col("doc_id") % 3 == 0)
     snap = sig.filter(F.col("doc_id") % 3 != 0)
-
-    def _bands(df, idc):
-        return df.select(
-            F.col("doc_id").alias(idc),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"m{4 * j + r}").cast("string")
-                                for r in range(4)
-                            ],
-                        )
-                        for j in range(4)
-                    ]
-                )
-            ).alias("b", "key"),
-        )
-
     cand = (
-        _bands(inc, "inc_id")
-        .join(_bands(snap, "snap_id"), ["b", "key"])
+        _mh_bands_df(inc, "inc_id")
+        .join(_mh_bands_df(snap, "snap_id"), ["b", "key"])
         .select("inc_id", "snap_id")
         .distinct()
     )
-    a = sig.select(
-        F.col("doc_id").alias("inc_id"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(_MH_PERMS)],
-    )
-    b = sig.select(
-        F.col("doc_id").alias("snap_id"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(_MH_PERMS)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(_MH_PERMS)
-    )
     est = (
-        cand.join(a, "inc_id")
-        .join(b, "snap_id")
-        .select(
-            "inc_id",
-            F.round(matches / F.lit(float(_MH_PERMS)), 4).alias("est"),
-        )
+        cand.join(_mh_side(sig, "inc_id", "a"), "inc_id")
+        .join(_mh_side(sig, "snap_id", "b"), "snap_id")
+        .select("inc_id", _mh_est().alias("est"))
     )
     agg = est.groupBy("inc_id").agg(
         F.count("*").alias("n_candidates"), F.max("est").alias("best_est")
@@ -772,19 +748,7 @@ def _portable_minhash_sigs_from(docs: DataFrame) -> DataFrame:
     toks = docs.select(
         "doc_id", tokenize_whitespace(F.col("text")).alias("tokens")
     )
-    sh = shingles(toks, "doc_id", "tokens", n=8)
-    h = (
-        F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
-        % _MH_P
-    ).alias("h")
-    return sh.select("doc_id", h).groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(_mh_a(i)) * F.col("h") + F.lit(_mh_b(i))) % _MH_P).alias(
-                f"m{i}"
-            )
-            for i in range(_MH_PERMS)
-        ]
-    )
+    return _mh_minima(shingles(toks, "doc_id", "tokens", n=8))
 
 
 def _mh_bands_df(sig: DataFrame, idc: str) -> DataFrame:
@@ -825,21 +789,10 @@ def _neardup_gate(snap_bands: DataFrame, b_sig: DataFrame):
             .select("inc_id", "snap_id")
             .distinct()
         )
-        a_sig = sig.select(
-            F.col("doc_id").alias("inc_id"),
-            *[F.col(f"m{i}").alias(f"a{i}") for i in range(_MH_PERMS)],
-        )
-        matches = sum(
-            F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-            for i in range(_MH_PERMS)
-        )
         est = (
-            cand.join(a_sig, "inc_id")
+            cand.join(_mh_side(sig, "inc_id", "a"), "inc_id")
             .join(b_sig, "snap_id")
-            .select(
-                "inc_id",
-                F.round(matches / F.lit(float(_MH_PERMS)), 4).alias("est"),
-            )
+            .select("inc_id", _mh_est().alias("est"))
         )
         agg = est.groupBy("inc_id").agg(
             F.count("*").alias("n_candidates"), F.max("est").alias("best_est")
@@ -961,10 +914,7 @@ def pipeline_stream_neardup_gate(spark, sf_dir):
         docs.filter(F.col("doc_id") % 3 != 0)
     ).localCheckpoint(eager=True)
     snap_bands = _mh_bands_df(snap_sigs, "snap_id").localCheckpoint(eager=True)
-    b_sig = snap_sigs.select(
-        F.col("doc_id").alias("snap_id"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(_MH_PERMS)],
-    )
+    b_sig = _mh_side(snap_sigs, "snap_id", "b")
 
     gate = _neardup_gate(snap_bands, b_sig)
 
@@ -2157,23 +2107,8 @@ def dedup_incremental_vs_snapshot(spark, sf_dir):
     toks = all_docs.select(
         "doc_id", tokenize_whitespace(F.col("text")).alias("tokens")
     )
-    sh = shingles(toks, "doc_id", "tokens", n=8)
-    h = (
-        F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
-        % _MH_P
-    ).alias("h")
-    sig = (
-        sh.select("doc_id", h)
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    (F.lit(_mh_a(i)) * F.col("h") + F.lit(_mh_b(i))) % _MH_P
-                ).alias(f"m{i}")
-                for i in range(_MH_PERMS)
-            ]
-        )
-        .localCheckpoint(eager=False)  # feeds 2x4 band joins + verification
+    sig = _mh_minima(shingles(toks, "doc_id", "tokens", n=8)).localCheckpoint(
+        eager=False  # feeds 2x4 band joins + verification
     )
     snap_sigs = sig.filter(F.col("doc_id") % 3 == 0)
     inc_sigs = sig.filter(F.col("doc_id") % 3 != 0)
@@ -2185,22 +2120,10 @@ def dedup_incremental_vs_snapshot(spark, sf_dir):
         piece = i_side.join(s_side, cols).select("inc_id", "snap_id")
         cands = piece if cands is None else cands.unionByName(piece)
     cands = cands.distinct()
-    a = inc_sigs.select(
-        F.col("doc_id").alias("inc_id"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(_MH_PERMS)],
-    )
-    bb = snap_sigs.select(
-        F.col("doc_id").alias("snap_id"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(_MH_PERMS)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(_MH_PERMS)
-    )
     near = (
-        cands.join(a, "inc_id")
-        .join(bb, "snap_id")
-        .filter(matches >= _INC_MIN_MATCHES)
+        cands.join(_mh_side(inc_sigs, "inc_id", "a"), "inc_id")
+        .join(_mh_side(snap_sigs, "snap_id", "b"), "snap_id")
+        .filter(_mh_matches() >= _INC_MIN_MATCHES)
         .select(F.col("inc_id").alias("doc_id"))
         .distinct()
     )

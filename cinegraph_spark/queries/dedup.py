@@ -166,7 +166,7 @@ def dedup_neardup_survivors(spark, sf_dir):
     pairs = dedup_ngram_jaccard_pairs(spark, sf_dir).select("id_a", "id_b")
     from cinegraph_spark.operators.graph_algos import connected_components
 
-    cc = connected_components(pairs, "id_a", "id_b", oriented=True)
+    cc = connected_components(pairs, "id_a", "id_b")
     removed = cc.filter(F.col("id") != F.col("component")).select("id")
     n_total = T(spark, sf_dir, "documents").agg(F.count("*").alias("n_total"))
     stats = removed.agg(
@@ -516,7 +516,7 @@ def dedup_embedding_cc_survivors(spark, sf_dir):
         .filter(V.cosine(F.col("va"), F.col("vb")) >= 0.35)
         .select("id_a", "id_b")
     )
-    cc = connected_components(pairs, "id_a", "id_b", oriented=True)
+    cc = connected_components(pairs, "id_a", "id_b")
     members = (
         e.select("vec_id", V.norm(F.col("v")).alias("nrm"))
         .join(cc, F.col("vec_id") == F.col("id"), "left")

@@ -90,7 +90,7 @@ def copurchase_edges(spark, sf_dir):
 )
 def graph_copurchase_degree_topk(spark, sf_dir):
     """Top-20 co-purchase hubs by undirected degree."""
-    deg = degrees(copurchase_edges(spark, sf_dir), oriented=True)
+    deg = degrees(copurchase_edges(spark, sf_dir))
     return (
         deg.select(F.col("id").alias("part_id"), "degree")
         .orderBy(F.desc("degree"), F.asc("part_id"))
@@ -125,7 +125,7 @@ def graph_copurchase_degree_topk(spark, sf_dir):
 def graph_copurchase_triangles(spark, sf_dir):
     """Top-20 parts by triangle participation (each triangle counted once
     per member; edges oriented a<b<c so no triangle is double-counted)."""
-    tri = triangle_count(copurchase_edges(spark, sf_dir), oriented=True)
+    tri = triangle_count(copurchase_edges(spark, sf_dir))
     return (
         tri.select(F.col("id").alias("part_id"), "triangles")
         .orderBy(F.desc("triangles"), F.asc("part_id"))
@@ -174,7 +174,7 @@ def graph_cc_neardup_clusters(spark, sf_dir):
     closure (tiny pair set); the Spark side is the O(log d) min-label
     propagation that also works at 10^9 edges."""
     pairs = ngram_jaccard_pairs_df(spark, sf_dir).select("id_a", "id_b")
-    cc = connected_components(pairs, "id_a", "id_b", oriented=True)
+    cc = connected_components(pairs, "id_a", "id_b")
     return cc.groupBy("component").agg(
         F.count("*").alias("n_docs"),
         F.array_join(
@@ -380,7 +380,7 @@ def graph_pagerank_copurchase(spark, sf_dir):
     double arithmetic in a fixed join order)."""
     e = copurchase_edges(spark, sf_dir)
     und = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    pr = pagerank(und, iterations=10, dedupe=False)
+    pr = pagerank(und, iterations=10)
     return (
         pr.select(F.col("id").alias("part_id"), F.round("rank", 4).alias("rank"))
         .orderBy(F.desc("rank"), F.asc("part_id"))
@@ -485,7 +485,7 @@ def graph_label_propagation_communities(spark, sf_dir):
         .filter(F.col("w") >= 2)
         .select("src", "dst")
     )
-    labels = label_propagation(edges, iterations=5, oriented=True)
+    labels = label_propagation(edges, iterations=5)
     return (
         labels.groupBy(F.col("label").alias("community"))
         .agg(

@@ -89,9 +89,7 @@ def toks_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", tokenize_whitespace(F.col("text")).alias("tokens"))
 
 
-def ngram_jaccard_pairs_df(
-    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
-) -> DataFrame:
+def ngram_jaccard_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 8-token-shingle Jaccard near-dup pairs (threshold 0.6) —
     candidate discovery through shared shingles, with the discovery-mode
     scale contract: shingles in more than DEFAULT_MAX_SHINGLE_DF (20)
@@ -99,13 +97,8 @@ def ngram_jaccard_pairs_df(
     self-join fan-out at max_df² per shingle (on these fixtures max DF is 4,
     so the cap is a no-op on values — it exists so the same query survives
     a skewed 100 TB corpus). The unbounded-scale alternative path goes
-    through LSH candidates (dedup_minhash_lsh_pairs)).
-
-    ``sh`` lets a caller that already staged the shingle table (e.g. a
-    localCheckpoint feeding several consumers) share it instead of
-    re-tokenizing the corpus."""
-    if sh is None:
-        sh = shingles(toks_df(spark, sf_dir), "doc_id", "tokens", n=8)
+    through LSH candidates (dedup_minhash_lsh_pairs))."""
+    sh = shingles(toks_df(spark, sf_dir), "doc_id", "tokens", n=8)
     jp = jaccard_pairs(sh, "doc_id")
     return (
         jp.filter(F.col("jaccard") >= 0.6)

@@ -323,9 +323,9 @@ def sample_leakage_safe_split(spark, sf_dir):
     )
 
     pairs = ngram_jaccard_pairs_df(spark, sf_dir).select("id_a", "id_b")
-    cc = connected_components(
-        pairs, "id_a", "id_b", oriented=True
-    ).withColumnRenamed("id", "doc_id")
+    cc = connected_components(pairs, "id_a", "id_b").withColumnRenamed(
+        "id", "doc_id"
+    )
     d = T(spark, sf_dir, "documents").select("doc_id")
     key = F.coalesce(F.col("component"), F.col("doc_id"))
     return (
@@ -392,7 +392,7 @@ def sample_split_leakage_audit(spark, sf_dir):
     )
 
     pairs = ngram_jaccard_pairs_df(spark, sf_dir).select("id_a", "id_b")
-    cc = connected_components(pairs, "id_a", "id_b", oriented=True)
+    cc = connected_components(pairs, "id_a", "id_b")
 
     def side(col):
         return ((col % 100003) * F.lit(2654435761) % 1000 < 900).cast(

@@ -501,7 +501,7 @@ def vec_ann_hnsw_knn(spark, sf_dir):
 
     e = _emb(spark, sf_dir).select("vec_id", "v")
     queries = e.filter(F.col("vec_id") < 10)
-    return hnsw_cosine_knn(e, queries, k=3, ef=192)
+    return hnsw_cosine_knn(e, queries, k=3)
 
 
 @register(
@@ -1453,7 +1453,7 @@ def vec_ann_hnsw_recall_property(spark, sf_dir):
 
     e = _emb(spark, sf_dir).select("vec_id", "v")
     queries = e.filter(F.col("vec_id") < 500)
-    got = hnsw_cosine_knn(e, queries, k=3, ef=192).select(
+    got = hnsw_cosine_knn(e, queries, k=3).select(
         "qid", "rnk",
         F.col("nid").alias("nid_got"),
         F.col("cos_sim").alias("cos_got"),

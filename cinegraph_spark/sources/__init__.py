@@ -1,9 +1,5 @@
-from cinegraph_spark.sources.tables import load_table, load_tables, register_temp_views
 from cinegraph_spark.sources.text_corpus import read_subtitle_corpus
 
 __all__ = [
-    "load_table",
-    "load_tables",
-    "register_temp_views",
     "read_subtitle_corpus",
 ]

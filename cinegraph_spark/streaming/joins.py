@@ -30,19 +30,22 @@ _HOW_ALIASES = {
 }
 
 
+#: How far before a purchase a click still counts toward it.
+ATTRIBUTION_WINDOW = "INTERVAL 30 MINUTES"
+
+
 def purchases_with_recent_clicks(
     events: DataFrame,
-    attribution_window: str = "INTERVAL 30 MINUTES",
     watermark: str = "2 hours",
     how: str = "inner",
     bucketed: bool | None = None,
 ) -> DataFrame:
     """Attribution join: each purchase matched to the same user's clicks in
-    the preceding ``attribution_window``.
+    the preceding ``ATTRIBUTION_WINDOW``.
 
     Both sides derive from one source here (self-split), but the plan is a
     genuine stream-stream inner join: state holds clicks until
-    ``purchase_ts - attribution_window`` passes their watermark, then
+    ``purchase_ts - ATTRIBUTION_WINDOW`` passes their watermark, then
     evicts. Output: (user_id, purchase_id, purchase_ts, click_id, click_ts).
 
     ``how="left_outer"`` is the unmatched-detection form: a purchase with
@@ -60,7 +63,7 @@ def purchases_with_recent_clicks(
     ``how="full_outer"`` completes the surface: unmatched rows on BOTH
     sides finalize by eviction — a never-attributed click (no purchase
     followed within the window) surfaces with NULL purchase columns once
-    the watermark passes ``click_ts + attribution_window`` (the last
+    the watermark passes ``click_ts + ATTRIBUTION_WINDOW`` (the last
     instant a matching purchase could still arrive), under the same
     eviction timing as the purchase side. The output ``user_id`` is
     coalesced across the two sides, since either may be the NULL one.
@@ -109,7 +112,7 @@ def purchases_with_recent_clicks(
     inner = bucketed and how == "inner"
     # bucket width in µs == the attribution window, as a constant-folded
     # catalyst expression (no interval-string parsing on the driver)
-    w_us = f"unix_micros(timestamp_micros(0) + {attribution_window})"
+    w_us = f"unix_micros(timestamp_micros(0) + {ATTRIBUTION_WINDOW})"
 
     def _ts_us(col: str, df: DataFrame) -> str:
         # µs since epoch as a LONG, for both event-time types the callers
@@ -148,7 +151,7 @@ def purchases_with_recent_clicks(
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (
             F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(attribution_window)
+            >= F.col("purchase_ts") - F.expr(ATTRIBUTION_WINDOW)
         )
     )
     if inner:
@@ -188,12 +191,11 @@ def purchases_with_recent_clicks(
     )
 
 
-def enrich_stream_with_dim(
-    stream: DataFrame, dim: DataFrame, on, event_type: str = "purchase"
-) -> DataFrame:
-    """Stream-static enrichment join — the third join shape of the
-    streaming surface (windowed aggs join batch twins; stream-stream above;
-    this one joins a live stream against a slowly-changing dimension).
+def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame, on) -> DataFrame:
+    """Stream-static enrichment of the purchase events — the third join
+    shape of the streaming surface (windowed aggs join batch twins;
+    stream-stream above; this one joins a live stream against a
+    slowly-changing dimension).
 
     The static side is broadcast: no state store is involved at all (the
     dimension is re-resolved per micro-batch, which is also what gives
@@ -202,6 +204,6 @@ def enrich_stream_with_dim(
     dimension size is the only constraint, exactly as in the batch star
     schema. Returns the enriched streaming DataFrame; callers pick sink.
     """
-    return stream.filter(F.col("event_type") == event_type).join(
+    return stream.filter(F.col("event_type") == "purchase").join(
         F.broadcast(dim), on, "inner"
     )

@@ -199,15 +199,13 @@ def read_events_stream(
     return df.withColumn("ts", F.timestamp_micros(F.expr(f"ts div {divisor}")))
 
 
-def tumbling_counts(
-    events: DataFrame, window: str = "5 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Tumbling-window counts/sums per event type with late-data handling:
-    rows later than the watermark are dropped, closed windows emit finally
-    (append mode capable)."""
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """5-minute tumbling-window counts/sums per event type with late-data
+    handling: rows later than the 30-minute watermark are dropped, closed
+    windows emit finally (append mode capable)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -219,17 +217,15 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding-window aggregation (each event contributes to
-    window/slide overlapping windows)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding-window aggregation: 10-minute windows every 5 minutes, so
+    each event contributes to two overlapping windows (30-minute
+    watermark)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(
+            F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
+        )
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -240,13 +236,11 @@ def sliding_counts(
     )
 
 
-def streaming_dedup(
-    events: DataFrame, keys: list[str] | None = None, watermark: str = "30 minutes"
-) -> DataFrame:
-    """Stateful exactly-once dedup within the watermark horizon
-    (``dropDuplicates`` with event-time bound state)."""
-    return events.withWatermark("ts", watermark).dropDuplicates(
-        (keys or ["event_id"]) + ["ts"]
+def streaming_dedup(events: DataFrame) -> DataFrame:
+    """Stateful exactly-once dedup of ``event_id`` within the 30-minute
+    watermark horizon (``dropDuplicates`` with event-time bound state)."""
+    return events.withWatermark("ts", "30 minutes").dropDuplicates(
+        ["event_id", "ts"]
     )
 
 
@@ -348,18 +342,16 @@ def run_availablenow_to_parquet(
     return reader.parquet(path)
 
 
-def session_windows_dynamic_gap(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def session_windows_dynamic_gap(events: DataFrame) -> DataFrame:
     """Session windows with a per-row gap: purchases hold a session open
     45 minutes, everything else 15 — `session_window` accepts a Column gap,
     so the state machine merges windows under per-event rules no batch
-    gaps-and-islands single-gap query can express."""
+    gaps-and-islands single-gap query can express. 2-hour watermark."""
     gap = F.when(F.col("event_type") == "purchase", "45 minutes").otherwise(
         "15 minutes"
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
         .select(

@@ -45,7 +45,6 @@ MODULES: list[tuple[str, str]] = [
     ("cinegraph_spark.sources.text_corpus", "Text-corpus sources"),
     ("cinegraph_spark.sources.textsink", "Text-file sink (DSv2)"),
     ("cinegraph_spark.sources.listing", "Paginated listing source (DSv2)"),
-    ("cinegraph_spark.sources.tables", "Table loading"),
     ("cinegraph_spark.streaming.windows", "Streaming windows"),
     ("cinegraph_spark.streaming.stateful", "Streaming stateful ops"),
     ("cinegraph_spark.multimodal.binary_ops", "Multimodal binary columns"),

@@ -33,7 +33,7 @@ def corpus_and_query(spark, sf_dir):
     )
     assign, _ = kmeans_assign(feat, "vec_id", [f"f{i}" for i in range(DIM)], k=10)
     ek = e.join(assign, "vec_id").select(
-        "vec_id", F.col("cluster").alias("cell"), "v"
+        "vec_id", F.col("cluster").alias("label"), "v"
     )
     q = ek.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     corpus = ek.filter(F.col("vec_id") != 0).localCheckpoint(eager=True)
@@ -48,7 +48,7 @@ def corpus_and_query(spark, sf_dir):
 
 
 def _recall(corpus, q, exact_ids, nprobe):
-    got = ivf_cosine_topk(corpus, q, nprobe=nprobe, k=10, label="cell")
+    got = ivf_cosine_topk(corpus, q, nprobe=nprobe, k=10)
     return len({r.vec_id for r in got.collect()} & exact_ids) / len(exact_ids)
 
 

@@ -74,22 +74,14 @@ def test_cc_raises_on_nonconvergence(spark):
     silently return partially-propagated labels: truncated labels split
     one true component into several, which for the leakage-safe split
     means near-duplicates straddling the train/heldout boundary (r16
-    ADVICE). on_max_iter='truncate' opts back into partial labels."""
+    ADVICE)."""
     import pytest
 
     # path 0-1-2-...-6: min-label needs ~6 supersteps to reach the tail
     e = edges_df(spark, [(i, i + 1) for i in range(6)])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(e, max_iter=2)
-    # explicit opt-in returns the bounded relaxation instead
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            e, max_iter=2, on_max_iter="truncate"
-        ).collect()
-    }
-    assert got[0] == 0 and got[6] > 0
-    # and a generous budget converges exactly
+    # a generous budget converges exactly
     full = {
         r["id"]: r["component"]
         for r in connected_components(e, max_iter=10).collect()
@@ -141,6 +133,15 @@ def test_cc_star_converges_fast_on_long_path(spark):
     got = {r["id"]: r["component"] for r in connected_components_star(e, max_rounds=15).collect()}
     assert len(got) == n
     assert set(got.values()) == {0}
+
+
+def test_cc_star_raises_on_nonconvergence(spark):
+    """Like min-label, the star operator must RAISE when its round budget
+    runs out: the unfinished edge set is not yet a star forest, so its
+    per-vertex minimum splits the path into several components."""
+    e = edges_df(spark, [(i, i + 1) for i in range(63)])  # 64-vertex path
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        connected_components_star(e, max_rounds=1).collect()
 
 
 def test_cc_star_direction_duplicates_and_self_loops(spark):
@@ -249,7 +250,7 @@ def test_lpa_labels_stay_within_component(spark):
 
 
 def test_lpa_deterministic_fixed_iterations(spark):
-    e = edges_df(spark, [(1, 2), (2, 3), (3, 4), (4, 1), (2, 4)])
+    e = edges_df(spark, [(1, 2), (2, 3), (3, 4), (1, 4), (2, 4)])
     a = sorted(map(tuple, label_propagation(e, iterations=3).collect()))
     b = sorted(map(tuple, label_propagation(e, iterations=3).collect()))
     assert a == b

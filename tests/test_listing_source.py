@@ -98,21 +98,21 @@ def test_bounded_batches_drain_resumes(spark, tmp_path):
         read_listing,
         read_listing_stream,
     )
+    from cinegraph_spark.streaming.windows import drain
 
     ckpt = str(tmp_path / "ckpt")
     sink = str(tmp_path / "sink")
     counts = []
     for _ in range(6):  # 4 pages / 2 per batch -> expect exactly 2 runs
         s = read_listing_stream(spark, pages=4, per_page=6, pages_per_batch=2)
-        q = (
+        drain(
+            spark,
             s.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "listing drain",
         )
-        q.awaitTermination(120)
         n = spark.read.parquet(sink).count()
         counts.append(n)
         if len(counts) > 1 and counts[-1] == counts[-2]:

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from cinegraph_spark.queries.util import T
 from cinegraph_spark.streaming.windows import (
+    drain,
     read_events_stream,
     run_availablenow_to_memory,
     sliding_counts,
@@ -104,14 +105,13 @@ def test_watermark_late_row_dropped(spark, tmp_path):
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    q = (
+    drain(
+        spark,
         agg.writeStream.format("memory")
         .queryName("t_late")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "t_late",
     )
-    q.awaitTermination(120)
     rows = {r.ws.hour: r.n for r in spark.table("t_late").collect()}
     # the 10:00 window closed (watermark passed) containing only event 1;
     # whether event 3's 09:00 window appears depends on arrival order vs
@@ -203,7 +203,8 @@ def test_foreachbatch_idempotent_sink(spark, sf_dir, tmp_path):
 
     def run(ck):
         stream = read_events_stream(spark, sf_dir)
-        q = (
+        drain(
+            spark,
             stream.writeStream.foreachBatch(
                 lambda batch_df, _id: append_new_keys(
                     spark,
@@ -211,12 +212,9 @@ def test_foreachbatch_idempotent_sink(spark, sf_dir, tmp_path):
                     path,
                     "event_id",
                 )
-            )
-            .option("checkpointLocation", str(tmp_path / ck))
-            .trigger(availableNow=True)
-            .start()
+            ).option("checkpointLocation", str(tmp_path / ck)),
+            f"idempotent sink {ck}",
         )
-        q.awaitTermination(120)
 
     run("ck1")
     n_events = _batch_events(spark, sf_dir).count()
@@ -466,17 +464,23 @@ def test_drain_timeout_env_reaches_every_drain(
 
 
 def test_one_availablenow_drain_in_package():
-    """`streaming/windows.py::drain` is the only place in the package that
-    starts and waits on an availableNow query, so the drain contract (UTC
-    scope, shuffle cap, one timeout) cannot drift per caller."""
+    """`streaming/windows.py::drain` is the only place in the package or
+    its tests that starts and waits on an availableNow query, so the drain
+    contract (UTC scope, shuffle cap, one timeout that stops the query
+    and raises) cannot drift per caller."""
     import ast
     import pathlib
 
     import cinegraph_spark
 
-    root = pathlib.Path(cinegraph_spark.__file__).parent
-    hits = {"availableNow=True": [], "awaitTermination(": []}
-    for path in sorted(root.rglob("*.py")):
+    root = pathlib.Path(cinegraph_spark.__file__).parent.parent
+    # needles built by concatenation so this scan does not find itself
+    hits = {"availableNow" + "=True": [], "awaitTermination" + "(": []}
+    paths = [
+        *(root / "cinegraph_spark").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+    ]
+    for path in sorted(paths):
         src = path.read_text()
         funcs = [
             f
@@ -497,7 +501,10 @@ def test_one_availablenow_drain_in_package():
                     * line.count(needle)
                 )
     for needle, found in hits.items():
-        assert found == [("streaming/windows.py", "drain")], (needle, found)
+        assert found == [("cinegraph_spark/streaming/windows.py", "drain")], (
+            needle,
+            found,
+        )
 
 
 def test_parquet_drain_multibatch_appends_once_per_batch(spark, tmp_path):
